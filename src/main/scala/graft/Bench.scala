@@ -431,6 +431,16 @@ object Bench {
     out
   }
 
+  /** `body`'s count, or -1 after printing why it failed (exception class
+    * and message) to stderr. */
+  private def countOrFail(label: String)(body: => Long): Long =
+    try body
+    catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $label FAILED: ${e.getClass.getName}: ${e.getMessage}")
+        -1L
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -461,8 +471,7 @@ object Bench {
     // Cache is cleared between runs so each measurement is a full fresh
     // computation (operator-internal persists must not carry over).
     for (name <- headline) {
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => System.err.println(s"[bench] $name warmup FAILED") }
+      countOrFail(s"$name warmup")(SparkEntry.queries(name)(spark, sfDir).count())
       spark.catalog.clearCache()
     }
     val passes = 3
@@ -471,12 +480,11 @@ object Bench {
     for (_ <- 1 to passes; name <- headline) {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val n = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+      val n = countOrFail(name)(fn(spark, sfDir).count())
       val secs = (System.nanoTime() - t0) / 1e9
       // a failed run must NOT contribute a (fast) time-to-exception sample —
       // that would make a broken query read as a speedup
-      if (n < 0) System.err.println(s"[bench] $name FAILED")
-      else samples(name) = samples(name) :+ secs
+      if (n >= 0) samples(name) = samples(name) :+ secs
       spark.catalog.clearCache()
     }
     val results = headline.map { name =>
@@ -550,8 +558,8 @@ object Bench {
           .empty[String, Vector[Double]].withDefaultValue(Vector.empty)
         for (_ <- 1 to 3; name <- scaleSet) {
           val t0 = System.nanoTime()
-          val n = try SparkEntry.queries(name)(spark, scaledDir).count()
-            catch { case _: Throwable => -1L }
+          val n = countOrFail(s"scale $name")(
+            SparkEntry.queries(name)(spark, scaledDir).count())
           // stop the clock BEFORE releasing caches: the 1x baseline
           // excludes clearCache time, so tN must too or every slope
           // carries the cache-release bias
@@ -599,9 +607,8 @@ object Bench {
       graft.core.TaggedAppend.append(
         urls.filter(col("doc_id") % 2 === 0).select("url"), path, "seed")
       val t0 = System.nanoTime()
-      val n = try graft.operators.Frontier
-        .seenDiffAndRecord(urls.select("url"), "url", path, "wave").count()
-        catch { case _: Throwable => -1L }
+      val n = countOrFail(s"write-leg at $dir")(graft.operators.Frontier
+        .seenDiffAndRecord(urls.select("url"), "url", path, "wave").count())
       val secs = (System.nanoTime() - t0) / 1e9
       fs.delete(new org.apache.hadoop.fs.Path(path), true)
       if (n <= 0) { System.err.println(s"[bench] write-leg FAILED at $dir"); -1.0 }

@@ -57,8 +57,9 @@ final class GraftEmptyResultException(msg: String) extends RuntimeException(msg)
 /** Public facade: metastore-less partitioned-table reading on Spark.
   *
   * The whole reference surface (/root/reference/src/fsql/api.py) re-expressed
-  * Spark-first: discovery + pruning happen driver-side (cheap, metadata-only),
-  * then ONE declarative `spark.read.load(files*)` hands the surviving files to
+  * Spark-first: discovery + pruning happen driver-side (metadata-only; a
+  * parquet read's schema is one footer read, so building it runs no Spark
+  * job), then ONE relation over the surviving files hands them to
   * Catalyst/Tungsten — predicate pushdown, column pruning, vectorized parquet
   * and whole-stage codegen all apply downstream of this seam.
   *
@@ -373,28 +374,28 @@ object Graft {
       schema: Option[StructType] = None,
       columns: Seq[String] = Nil,
       fsConf: Map[String, String] = Map.empty): DataFrame = {
-    val wanted: Set[String] = withFs(spark, url, fsConf) { fs =>
+    val pinned: Seq[Partition] = withFs(spark, url, fsConf) { fs =>
       val root = fs.makeQualified(new Path(url))
       val mf = new Path(snapshotDir(root), f"$snapshotId%06d.manifest")
       require(fs.exists(mf), s"no snapshot $snapshotId at $url")
       val rels = readManifest(fs, mf)
       val abs = rels.map(r => new Path(root, r).toString).toSet
       val present = discover(spark, url, Q.True, parser, fsConf)
-        .map(p => fs.makeQualified(new Path(p.url)).toString).toSet
-      val gone = abs -- present
+        .map(p => fs.makeQualified(new Path(p.url)).toString -> p)
+      val gone = abs -- present.map(_._1)
       require(gone.isEmpty,
         s"snapshot $snapshotId is INVALID: ${gone.size} of its files were " +
           s"rewritten or removed (first: ${gone.headOption.getOrElse("")}) " +
           "— compaction/merge/vacuum invalidate older snapshots; a partial " +
           "read would silently drop rows, refusing")
-      abs
+      present.collect { case (q, p) if abs.contains(q) => p }
     }
-    withFs(spark, url, fsConf) { fs =>
-      readInternal(spark, url, query, parser, format, options ++ fsConf,
-        schema, columns, lazyErrors = false, fsConf = fsConf,
-        pathFilter = p => wanted.contains(
-          fs.makeQualified(new Path(p)).toString)).data
-    }
+    // the validation listing is the full table; scoping it by `query` on
+    // each file's columns selects what a pruned discovery would list,
+    // because partial-evaluation pruning is sound
+    readInternal(spark, url, query, parser, format, options ++ fsConf,
+      schema, columns, lazyErrors = false, fsConf = fsConf,
+      listing = Some(pinned.filter(p => query.evalAll(p.columns)))).data
   }
 
   /** The ingest batches present under `url`: one row per tag with its
@@ -417,8 +418,13 @@ object Graft {
       .toDF("tag", "n_files")
   }
 
+  /** A matched file; `footer` is the parquet footer metadata the lazy-errors
+    * probe already read, so the attach reuses it instead of opening again. */
   private final case class FileEntry(path: String, format: String,
-      columns: Map[String, String], meta: Option[FileMeta])
+      columns: Map[String, String], meta: Option[FileMeta],
+      footer: Option[org.apache.parquet.hadoop.metadata.FileMetaData] = None) {
+    def partition: Partition = Partition(path, columns, meta)
+  }
 
   private def readInternal(
       spark: SparkSession,
@@ -432,13 +438,13 @@ object Graft {
       lazyErrors: Boolean,
       fsConf: Map[String, String] = Map.empty,
       fileFilter: String => Boolean = _ => true,
-      pathFilter: String => Boolean = _ => true): RichResult = {
+      listing: Option[Seq[Partition]] = None): RichResult = {
 
-    val parts = discover(spark, url, query, parser, fsConf)
+    val parts = listing.getOrElse(discover(spark, url, query, parser, fsConf))
       .filter(p => fileFilter(p.url.substring(p.url.lastIndexOf('/') + 1)))
-      .filter(p => pathFilter(p.url))
     if (parts.isEmpty)
       throw new GraftEmptyResultException(s"no files matched under $url for $query")
+    stringPartitionValues(spark)
 
     val entries = parts.map(p => FileEntry(p.url, detectFormat(p.url, format), p.columns, p.meta))
 
@@ -501,7 +507,10 @@ object Graft {
   /** Primary path: build a [[graft.index.GraftFileIndex]] over the
     * discovered files and hand it to Catalyst as a HadoopFsRelation — one
     * scan, native partition pruning on our string partition columns, any
-    * layout. Data schema comes from the user or from the first file. */
+    * layout. Data schema comes from the user or from the first file; for
+    * parquet that is one footer read on the driver
+    * ([[graft.index.ParquetFooter]]), so building the read runs no Spark
+    * job. */
   private def fileIndexAttach(
       spark: SparkSession,
       root: String,
@@ -512,13 +521,16 @@ object Graft {
     val fmt = files.head.format
     val partitionCols = files.flatMap(_.columns.keys).distinct
     val opts = readDefaults(fmt) ++ options
-    // first-file schema by default (cheap — one footer); all-file inference
-    // when the user opts into schema merging
+    // first-file schema by default: a parquet footer read on the driver, no
+    // job; Spark's inference for other formats (they scan data) and for
+    // schema merging (it reads every file)
     val schemaPaths =
       if (opts.get("mergeSchema").contains("true")) files.map(_.path)
       else Seq(files.head.path)
-    val dataSchema0 = schema.getOrElse(
-      loadWith(spark, fmt, schemaPaths, opts, None).schema)
+    val dataSchema0 = schema
+      .orElse(graft.index.ParquetFooter.inferredSchema(
+        spark, fmt, opts, files.head.partition, files.head.footer))
+      .getOrElse(loadWith(spark, fmt, schemaPaths, opts, None).schema)
     // a data column shadowed by a partition column would be ambiguous —
     // partition value wins (reference semantics: path value is appended)
     val dataSchema = StructType(dataSchema0.filterNot(f => partitionCols.contains(f.name)))
@@ -531,8 +543,7 @@ object Graft {
       case other => throw new IllegalArgumentException(s"unsupported format $other")
     }
     val index = new graft.index.GraftFileIndex(
-      spark, new Path(root),
-      files.map(e => Partition(e.path, e.columns, e.meta)), partitionCols)
+      spark, new Path(root), files.map(_.partition), partitionCols)
     val relation = HadoopFsRelation(
       index, index.partitionSchema, dataSchema, None, fileFormat, opts)(spark)
     spark.baseRelationToDataFrame(relation)
@@ -645,14 +656,17 @@ object Graft {
     case _ => Map.empty[String, String]
   }
 
+  /** String partition values stay strings (reference contract): every read
+    * turns off Spark's partition-value type inference for the session. */
+  private def stringPartitionValues(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+
   private def loadWith(
       spark: SparkSession,
       fmt: String,
       paths: Seq[String],
       mergedOptions: Map[String, String],
       schema: Option[StructType]): DataFrame = {
-    // String partition values stay strings (reference contract).
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     var reader = spark.read.format(fmt).options(mergedOptions)
     schema.foreach(s => reader = reader.schema(s))
     reader.load(paths: _*)
@@ -684,8 +698,9 @@ object Graft {
   /** Lazy-errors probe: can each file plausibly be read with the requested
     * format/columns? Runs driver-side on a thread pool; the per-file cost is
     * ONE metadata read, never a Spark job:
-    *  - parquet: direct Hadoop ParquetFileReader footer read (~100× cheaper
-    *    than a per-file DataFrameReader resolution) → real file schema;
+    *  - parquet: a driver-side footer read opened from the listing's file
+    *    status ([[graft.index.ParquetFooter]], no stat call) → real file
+    *    schema; the attach reuses the first good file's footer;
     *  - csv: open the file and parse the HEADER LINE only (full-file
     *    inference would be a full data read per probed file — the scan's
     *    schema needs inference on the FIRST file only, done at attach time);
@@ -700,20 +715,18 @@ object Graft {
       options: Map[String, String],
       schema: Option[StructType],
       columns: Seq[String]): (Seq[FileEntry], Seq[ReadFailure]) = {
-    val hadoopConf = spark.sessionState.newHadoopConf()
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
     val results = entries.par2.map { e =>
       val outcome = Try {
+        val footer =
+          if (e.format != "parquet") None
+          else Some(graft.index.ParquetFooter.read(e.partition, hadoopConf,
+            org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+            .getFileMetaData)
         val fileFieldNames: Seq[String] = e.format match {
           case "parquet" =>
-            import org.apache.parquet.hadoop.ParquetFileReader
-            import org.apache.parquet.hadoop.util.HadoopInputFile
-            val reader = ParquetFileReader.open(
-              HadoopInputFile.fromPath(new Path(e.path), hadoopConf))
-            try {
-              import scala.jdk.CollectionConverters._
-              reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-                .map(_.getName).toSeq
-            } finally reader.close()
+            import scala.jdk.CollectionConverters._
+            footer.toSeq.flatMap(_.getSchema.getFields.asScala.map(_.getName))
           case "xlsx" =>
             val fs = Discovery.fileSystemFor(e.path, hadoopConf)
             val in = fs.open(new Path(e.path))
@@ -748,9 +761,10 @@ object Graft {
         val missing = columns.filterNot(available.contains)
         if (missing.nonEmpty)
           throw new RuntimeException(s"missing requested columns: ${missing.mkString(",")}")
+        e.copy(footer = footer)
       }
       outcome match {
-        case Success(_) => Right(e)
+        case Success(probed) => Right(probed)
         case Failure(ex) =>
           Left(ReadFailure(Partition(e.path, e.columns), Option(ex.getMessage).getOrElse(ex.toString)))
       }
@@ -837,6 +851,7 @@ object Graft {
     }
     import org.json4s._
     import org.json4s.jackson.JsonMethods
+    stringPartitionValues(spark)
     val rows = parts.flatMap { p =>
       val df = load(spark, "json", Seq(p.url), Map.empty, None)
       df.toJSON.collect().toSeq.map { line =>
@@ -1088,42 +1103,38 @@ object Graft {
       query: PartitionQuery = Q.True,
       parser: ColumnParser = AutoParser.auto,
       fsConf: Map[String, String] = Map.empty): DataFrame = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
     val hadoopConf = spark.sessionState.newHadoopConf()
     fsConf.foreach { case (k, v) => hadoopConf.set(k, v) }
     val discovered = discover(spark, url, query, parser, fsConf)
-    val files = discovered.map(_.url).filter(_.endsWith(".parquet")).sorted
+    val files = discovered.filter(_.url.endsWith(".parquet")).sortBy(_.url)
     require(files.nonEmpty,
       s"zoneMap: no .parquet files under $url (matched ${discovered.size} " +
         "files total) — footer statistics exist only for parquet")
     val rows = files.flatMap { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(f), hadoopConf))
-      try {
-        val base = f.substring(f.lastIndexOf('/') + 1)
-        reader.getFooter.getBlocks.asScala.zipWithIndex.flatMap {
-          case (block, rg) =>
-            block.getColumns.asScala.flatMap { cc =>
-              val name = cc.getPath.toDotString
-              if (cols.nonEmpty && !cols.contains(name)) None
-              else {
-                val st = cc.getStatistics
-                def render(v: Any): String = v match {
-                  case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
-                  case other => String.valueOf(other)
-                }
-                val (mn, mx) =
-                  if (st == null || !st.hasNonNullValue) (null, null)
-                  else (render(st.genericGetMin), render(st.genericGetMax))
-                Some(org.apache.spark.sql.Row(base, rg.toLong, name, mn, mx,
-                  if (st == null) null else Long.box(st.getNumNulls),
-                  block.getRowCount))
+      val footer = graft.index.ParquetFooter.read(f, hadoopConf,
+        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+      val base = f.url.substring(f.url.lastIndexOf('/') + 1)
+      footer.getBlocks.asScala.zipWithIndex.flatMap {
+        case (block, rg) =>
+          block.getColumns.asScala.flatMap { cc =>
+            val name = cc.getPath.toDotString
+            if (cols.nonEmpty && !cols.contains(name)) None
+            else {
+              val st = cc.getStatistics
+              def render(v: Any): String = v match {
+                case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
+                case other => String.valueOf(other)
               }
+              val (mn, mx) =
+                if (st == null || !st.hasNonNullValue) (null, null)
+                else (render(st.genericGetMin), render(st.genericGetMax))
+              Some(org.apache.spark.sql.Row(base, rg.toLong, name, mn, mx,
+                if (st == null) null else Long.box(st.getNumNulls),
+                block.getRowCount))
             }
-        }.toSeq
-      } finally reader.close()
+          }
+      }.toSeq
     }
     val schema = StructType(Seq(
       StructField("file", StringType, nullable = false),

@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+
 /** A path plus the partition-column values accumulated while descending a
   * partitioned directory tree.
   *
@@ -27,6 +29,12 @@ final case class Partition(url: String, columns: Map[String, String],
     }
 
   def withMeta(m: Option[FileMeta]): Partition = copy(meta = m)
+
+  /** The Hadoop status discovery's listing already paid for, so consumers
+    * open or scan this file without a stat call; None for a generated
+    * (never-listed) name. */
+  def fileStatus: Option[FileStatus] =
+    meta.map(m => new FileStatus(m.size, false, 1, 0, m.modificationTime, new Path(url)))
 }
 
 /** File metadata captured during discovery's terminal-directory listing, so

@@ -54,14 +54,10 @@ final class GraftFileIndex(
           catch { case _: java.io.FileNotFoundException => Nil }
         }.toMap
       }
-    def statusFor(p: Partition): FileStatus = p.meta match {
-      case Some(m) =>
-        new FileStatus(m.size, false, 1, 0, m.modificationTime, new Path(p.url))
-      case None =>
-        listed.getOrElse(new Path(p.url).toString,
-          throw new java.io.FileNotFoundException(
-            s"generated path does not exist: ${p.url}"))
-    }
+    def statusFor(p: Partition): FileStatus = p.fileStatus.getOrElse(
+      listed.getOrElse(new Path(p.url).toString,
+        throw new java.io.FileNotFoundException(
+          s"generated path does not exist: ${p.url}")))
     partitions.groupBy(_.columns).toSeq
       .sortBy(_._2.head.url)
       .map { case (cols, ps) =>

@@ -86,8 +86,9 @@ object Streams {
     val dirs = parts.map(p => new Path(p.url).getParent.toString).distinct.sorted
     val partitionCols = parts.flatMap(_.columns.keys).distinct
 
-    val dataSchema = schema.getOrElse(
-      spark.read.format(format).options(options).load(parts.head.url).schema)
+    val dataSchema = schema
+      .orElse(graft.index.ParquetFooter.inferredSchema(spark, format, options, parts.head))
+      .getOrElse(spark.read.format(format).options(options).load(parts.head.url).schema)
     val glob =
       if (dirs == Seq(root.stripSuffix("/"))) root + "*"
       else root + "{" + dirs.map(_.stripPrefix(root)).mkString(",") + "}/*"

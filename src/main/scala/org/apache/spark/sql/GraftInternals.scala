@@ -15,6 +15,10 @@ object GraftInternals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Every field, nested ones included, made nullable: what Spark applies
+    * to an inferred file schema before it builds a relation. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** Sentinel sink path reported when an active file sink's target could
     * not be resolved (neither reflection nor the `FileSink[<path>]`
     * rendering worked, e.g. after a Spark-internal refactor). Consumers

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.Try
+
 import org.apache.spark.sql.functions.col
 
 import graft.api.{Graft, GraftEmptyResultException}
@@ -623,5 +625,191 @@ class ReadPathSpec extends SparkSpec {
       "sidecar must cover every file incl. empty ones")
     assert(BloomSidecar.readWithSkip(spark, out, "id", Seq(7L))
       .count() == 1)
+  }
+
+
+  // ------------------------------------------------ job-free read building
+
+  /** Spark jobs started while `body` runs, counted by a listener. A fence
+    * job before and after bounds the count: the listener bus delivers
+    * events in order, so once the closing fence arrives every job `body`
+    * started has been seen, and nothing queued before the opening fence
+    * is counted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.fence"
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val fences = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(f) => fences.put(f)
+          case None => starts.incrementAndGet()
+        }
+    }
+    def fence(name: String): Unit = {
+      sc.setLocalProperty(key, name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) == name)
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("open")
+      starts.set(0)
+      val out = body
+      fence("close")
+      (out, starts.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, old) => old.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** `df` as ONE Spark-written parquet file (it carries Spark's row
+    * metadata) at `dest`. */
+  private def sparkParquetFile(df: org.apache.spark.sql.DataFrame, dest: String): Unit = {
+    val stage = tmpDir("spark-pq")
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    val part = Files.list(Paths.get(stage)).iterator()
+    var src: java.nio.file.Path = null
+    while (part.hasNext) { val p = part.next(); if (p.toString.endsWith(".parquet")) src = p }
+    Files.createDirectories(Paths.get(dest).getParent)
+    Files.copy(src, Paths.get(dest))
+  }
+
+  /** A parquet-mr file (no Spark row metadata) with schema `message`,
+    * holding the rows `fill` adds. */
+  private def parquetMrFile(dest: String, message: String)(
+      fill: (org.apache.parquet.example.data.simple.SimpleGroupFactory,
+        org.apache.parquet.hadoop.ParquetWriter[org.apache.parquet.example.data.Group]) => Unit): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(message)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(dest))
+      .withConf(spark.sessionState.newHadoopConf())
+      .withType(schema)
+      .build()
+    try fill(new SimpleGroupFactory(schema), writer) finally writer.close()
+  }
+
+  /** The read over a tree holding only `file` reports the schema Spark's
+    * own inference gives the file, built from the footer without a job;
+    * where Spark's inference fails, the read fails with the same class. */
+  private def assertSchemaParity(file: String): Unit = {
+    def outcome(f: => org.apache.spark.sql.types.StructType) =
+      Try(f).toEither.left.map(_.getClass.getName)
+    val expected = outcome(spark.read.parquet(file).schema)
+    val (got, jobs) = jobsDuring(outcome(
+      Graft.readPartitionedTable(spark, Paths.get(file).getParent.toString).schema))
+    assert(got == expected, s"$file: graft $got vs Spark $expected")
+    if (expected.isRight) assert(jobs == 0, s"$file: building the read ran $jobs jobs")
+  }
+
+  test("building parquet reads runs no Spark job: the schema comes from one footer") {
+    import spark.implicits._
+    val out = tmpDir("nojob")
+    Graft.writePartitionedTable(
+      Seq((1L, "a", "x"), (2L, "b", "y")).toDF("k", "v", "p"), out, Seq("p"))
+    TaggedAppend.append(Seq((3L, "c", "x")).toDF("k", "v", "p"), out, "t1", Seq("p"))
+    val snap = Graft.snapshot(spark, out)
+    val (frames, jobs) = jobsDuring(Seq(
+      Graft.readPartitionedTable(spark, out),
+      Graft.readPartitionedTable(spark, out, query = Q.eq("p", "x")),
+      Graft.readPartitionedTableRich(spark, out).data,
+      Graft.readTaggedBatch(spark, out, "t1"),
+      Graft.readSnapshot(spark, out, snap)))
+    assert(jobs == 0, s"building the reads ran $jobs Spark jobs")
+    assert(frames.map(_.count()) == Seq(3L, 2L, 3L, 1L, 3L))
+    assert(frames.head.schema.map(f => (f.name, f.dataType.typeName, f.nullable)) ==
+      Seq(("k", "long", true), ("v", "string", true), ("p", "string", true)))
+  }
+
+  test("footer schema equals Spark's inference across parquet encodings and confs") {
+    import org.apache.parquet.io.api.Binary
+    // Spark-written, with Spark's row metadata: non-nullable and nested
+    // struct, array and map columns
+    val spk = s"${tmpDir("parity-spark")}/t/f.parquet"
+    sparkParquetFile(spark.range(3).selectExpr("id",
+      "named_struct('a', id, 'b', cast(id AS string)) AS s",
+      "array(id, id + 1) AS arr", "map(cast(id AS string), id) AS m",
+      "cast(id AS decimal(12, 2)) AS dec", "cast(id AS timestamp) AS ts"), spk)
+    assertSchemaParity(spk)
+
+    // parquet-mr, required fields (must come back nullable), nested groups
+    val req = s"${tmpDir("parity-required")}/t/f.parquet"
+    parquetMrFile(req,
+      """message m {
+        |  required int64 event_id;
+        |  optional binary name (STRING);
+        |  required group s { required int32 a; optional double b; }
+        |  optional group arr (LIST) { repeated group list { required int32 element; } }
+        |  optional group m (MAP) { repeated group key_value {
+        |    required binary key (STRING); optional int64 value; } }
+        |}""".stripMargin) { (f, w) =>
+      val g = f.newGroup().append("event_id", 7L).append("name", "x")
+      g.addGroup("s").append("a", 1)
+      w.write(g)
+    }
+    assertSchemaParity(req)
+    assert(Graft.readPartitionedTable(spark, Paths.get(req).getParent.toString)
+      .schema("event_id").nullable, "a required column reads back nullable, as in Spark")
+
+    // INT96 timestamps
+    val i96 = s"${tmpDir("parity-int96")}/t/f.parquet"
+    parquetMrFile(i96, "message m { required int96 ts; }") { (f, w) =>
+      w.write(f.newGroup().append("ts", Binary.fromConstantByteArray(new Array[Byte](12))))
+    }
+    assertSchemaParity(i96)
+
+    // TIMESTAMP(NANOS) under both legacy nanos settings
+    val nanos = s"${tmpDir("parity-nanos")}/t/f.parquet"
+    parquetMrFile(nanos, "message m { required int64 ts (TIMESTAMP(NANOS,true)); }") {
+      (f, w) => w.write(f.newGroup().append("ts", 1L))
+    }
+    for (v <- Seq("true", "false"))
+      withConf("spark.sql.legacy.parquet.nanosAsLong" -> v)(assertSchemaParity(nanos))
+
+    // un-annotated binary under both binaryAsString settings
+    val bin = s"${tmpDir("parity-binary")}/t/f.parquet"
+    parquetMrFile(bin, "message m { optional binary b; }") { (f, w) =>
+      w.write(f.newGroup().append("b", Binary.fromString("abc")))
+    }
+    for (v <- Seq("true", "false"))
+      withConf("spark.sql.parquet.binaryAsString" -> v)(assertSchemaParity(bin))
+  }
+
+  test("a corrupt first parquet file still fails at the read call, as Spark's inference does") {
+    val dir = tmpDir("corrupt-first")
+    writeFile(s"$dir/p=1/a.parquet", "definitely not a parquet footer")
+    sparkParquetFile(spark.range(3).toDF("c1"), s"$dir/p=2/b.parquet")
+    val expected = intercept[Exception](spark.read.parquet(s"$dir/p=1/a.parquet").schema)
+    val e = intercept[Exception](Graft.readPartitionedTable(spark, dir))
+    assert(e.getClass == expected.getClass, s"${e.getClass} vs ${expected.getClass}")
+  }
+
+  test("a pruned snapshot read lists the table once and returns the pinned rows") {
+    import spark.implicits._
+    val out = tmpDir("snap-pruned")
+    Graft.writePartitionedTable(
+      Seq((1, "a"), (2, "a"), (3, "b"), (4, "c")).toDF("k", "p"), out, Seq("p"))
+    val snap = Graft.snapshot(spark, out)
+    TaggedAppend.append(Seq((5, "a"), (6, "b")).toDF("k", "p"), out, "late", Seq("p"))
+    Discovery.resetListingCounter()
+    Graft.discover(spark, out)
+    val oneListing = Discovery.listingCalls.get()
+    Discovery.resetListingCounter()
+    val pruned = Graft.readSnapshot(spark, out, snap,
+      query = Q.or(Q.eq("p", "a"), Q.eq("p", "c")))
+    assert(Discovery.listingCalls.get() == oneListing,
+      "the read must reuse the snapshot's validation listing")
+    assert(pruned.select("k").as[Int].collect().sorted.toSeq == Seq(1, 2, 4))
+    assert(canon(pruned) ==
+      canon(Graft.readSnapshot(spark, out, snap).filter(col("p") =!= "b")))
   }
 }
