@@ -431,13 +431,19 @@ object Bench {
     out
   }
 
-  /** `body`'s count, or -1 after printing why it failed (exception class
-    * and message) to stderr. */
+  /** Why each failed run failed, by its label: exception class and message
+    * (the last failure of a label wins); written to bench_last.json. */
+  private val failures = new java.util.LinkedHashMap[String, String]
+
+  /** `body`'s count, or -1 after recording why it failed (exception class
+    * and message) and printing it to stderr. */
   private def countOrFail(label: String)(body: => Long): Long =
     try body
     catch {
       case e: Throwable =>
-        System.err.println(s"[bench] $label FAILED: ${e.getClass.getName}: ${e.getMessage}")
+        val reason = s"${e.getClass.getName}: ${e.getMessage}"
+        failures.put(label, reason)
+        System.err.println(s"[bench] $label FAILED: $reason")
         -1L
     }
 
@@ -633,10 +639,13 @@ object Bench {
             f""""slope_med":${srt(srt.size / 2) / (t1 * scaleFactor)}%.2f}}"""
         }
       }
-    // full record (per-query spreads included) beside the stdout line: a
-    // tail-capture of a long headline section must not be the only copy
+    // full record (per-query spreads and failure reasons included) beside
+    // the stdout line: a tail-capture of a long headline section must not
+    // be the only copy
+    val failuresJson = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(failures)
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"passes":$passes,"failed":$failed,"scale":$scaleJson,"write":$writeJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"passes":$passes,"failed":$failed,"failures":$failuresJson,"scale":$scaleJson,"write":$writeJson,"sf":"$sfDir"}"""
     persist("target/bench_last.json", fullLine)
     // stop Spark BEFORE printing the contract line so no executor/log
     // chatter can interleave after it — it must be the last stdout line

@@ -474,7 +474,7 @@ object Graft {
     val df =
       good.map(_.format).distinct match {
         case Seq("xlsx") => xlsxAttach(spark, good, schema)
-        case Seq(_) => fileIndexAttach(spark, root, good, options, schema)
+        case Seq(fmt) => fileIndexAttach(spark, root, good, readDefaults(fmt) ++ options, schema)
         case _ =>
           // mixed formats: one attach per format (each single-format), unioned
           val frames = good.groupBy(_.format).toSeq.sortBy(_._1)
@@ -507,30 +507,29 @@ object Graft {
   /** Primary path: build a [[graft.index.GraftFileIndex]] over the
     * discovered files and hand it to Catalyst as a HadoopFsRelation — one
     * scan, native partition pruning on our string partition columns, any
-    * layout. Data schema comes from the user or from the first file; for
-    * parquet that is one footer read on the driver
+    * layout. `opts` are the reader options exactly as the relation gets
+    * them. Data schema comes from the user, else from Spark's inference
+    * over the first file, or over every file when `inferFromAll` or
+    * `mergeSchema=true`; for parquet that is footer reads on the driver
     * ([[graft.index.ParquetFooter]]), so building the read runs no Spark
     * job. */
   private def fileIndexAttach(
       spark: SparkSession,
       root: String,
       files: Seq[FileEntry],
-      options: Map[String, String],
-      schema: Option[StructType]): DataFrame = {
+      opts: Map[String, String],
+      schema: Option[StructType],
+      inferFromAll: Boolean = false): DataFrame = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     val fmt = files.head.format
     val partitionCols = files.flatMap(_.columns.keys).distinct
-    val opts = readDefaults(fmt) ++ options
-    // first-file schema by default: a parquet footer read on the driver, no
-    // job; Spark's inference for other formats (they scan data) and for
-    // schema merging (it reads every file)
-    val schemaPaths =
-      if (opts.get("mergeSchema").contains("true")) files.map(_.path)
-      else Seq(files.head.path)
+    val inferFrom =
+      if (inferFromAll || opts.get("mergeSchema").contains("true")) files
+      else files.take(1)
     val dataSchema0 = schema
-      .orElse(graft.index.ParquetFooter.inferredSchema(
-        spark, fmt, opts, files.head.partition, files.head.footer))
-      .getOrElse(loadWith(spark, fmt, schemaPaths, opts, None).schema)
+      .orElse(graft.index.ParquetFooter.inferredSchema(spark, fmt, opts,
+        inferFrom.map(_.partition), inferFrom.flatMap(e => e.footer.map(e.path -> _)).toMap))
+      .getOrElse(loadWith(spark, fmt, inferFrom.map(_.path), opts, None).schema)
     // a data column shadowed by a partition column would be ambiguous —
     // partition value wins (reference semantics: path value is appended)
     val dataSchema = StructType(dataSchema0.filterNot(f => partitionCols.contains(f.name)))
@@ -716,7 +715,7 @@ object Graft {
       schema: Option[StructType],
       columns: Seq[String]): (Seq[FileEntry], Seq[ReadFailure]) = {
     val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
-    val results = entries.par2.map { e =>
+    val results = Par.map(entries) { e =>
       val outcome = Try {
         val footer =
           if (e.format != "parquet") None
@@ -806,22 +805,6 @@ object Graft {
     }
     flush()
     out.result()
-  }
-
-  /** Tiny helper: parallel map over a small driver-side collection. */
-  private implicit class ParOps[A](private val xs: Seq[A]) {
-    def par2: ParMapped[A] = new ParMapped(xs)
-  }
-  private final class ParMapped[A](xs: Seq[A]) {
-    def map[B](f: A => B): Seq[B] = {
-      import java.util.concurrent.Executors
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = Executors.newFixedThreadPool(math.min(32, math.max(1, xs.size)))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(xs.map(x => Future(f(x)))), Duration.Inf)
-      finally pool.shutdown()
-    }
   }
 
   /** Deprecated alias for readPartitionedTable (reference: read_s3_table,
@@ -1393,6 +1376,10 @@ object Graft {
     *    `maxConcurrentRewrites` such jobs run at once on the scheduler, so
     *    many small partitions keep the cluster full without one giant
     *    stage's skew coupling them;
+    *  - a rewrite reads the dir's files through the pass's own listing
+    *    (the same file index a read builds: no re-listing, no per-file
+    *    stat), and a parquet dir's merged schema comes from footers read
+    *    on the driver, so the write is the dir's only Spark job;
     *  - only matching partitions are touched: `query` scopes the pass
     *    (e.g. yesterday's dirs) exactly like a scoped read.
     *
@@ -1504,7 +1491,12 @@ object Graft {
         val safety =
           if (format == "parquet" || format == "orc") Map("mergeSchema" -> "true")
           else Map.empty[String, String]
-        spark.read.format(format).options(safety ++ options ++ fsConf).load(oldFiles: _*)
+        // read through the compaction's own listing, schema inferred from
+        // every file of the dir (for parquet: footers read on the driver,
+        // no job) and no partition columns, so the rewritten files keep
+        // exactly their own columns
+        val files = byDir(dir).map(p => FileEntry(p.url, format, Map.empty, p.meta))
+        fileIndexAttach(spark, dir, files, safety ++ options ++ fsConf, None, inferFromAll = true)
           .coalesce(desired)
           .write.format(format).options(options ++ fsConf)
           .mode("overwrite").save(staging.toString)
@@ -1553,9 +1545,12 @@ object Graft {
       // maintenance pass retiring only its own slice of a tag would
       // recreate exactly the partial-addressability hazard this exists
       // to close. Runs AFTER rewrites so it never races their
-      // delete-by-original-name step.
-      def retireTags(): Unit =
-        discover(spark, url, Q.True, parser, fsConf).foreach { p =>
+      // delete-by-original-name step. A whole-table pass already holds
+      // that listing: outside the dirs it rewrote (whose old files are
+      // gone and whose new files carry no tag) nothing has changed.
+      def retireTags(rewritten: Set[String]): Unit =
+        (if (query == Q.True) parts.filterNot(p => rewritten(new Path(p.url).getParent.toString))
+         else discover(spark, url, Q.True, parser, fsConf)).foreach { p =>
           val f = new Path(p.url)
           if (f.getName.startsWith("ingest-") && fs.exists(f)) {
             val dest = new Path(f.getParent, "retired-" + f.getName.stripPrefix("ingest-"))
@@ -1564,7 +1559,7 @@ object Graft {
         }
 
       if (candidates.isEmpty) {
-        retireTags()
+        retireTags(Set.empty)
         CompactionStats(dirStats.size, 0, filesBefore, filesBefore, 0L)
       } else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -1592,7 +1587,7 @@ object Graft {
               "hidden) — rerun after fixing the cause", first)
         }
         val newCounts = outcomes.collect { case Right(n) => n }
-        retireTags()
+        retireTags(candidates.map(_._1).toSet)
 
         CompactionStats(
           partitionsExamined = dirStats.size,

@@ -10,20 +10,22 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{GraftInternals, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.Partition
+import graft.core.{Par, Partition}
 
 /** Driver-side parquet footer reads for discovered files: no Spark job, and
   * no stat call for a file discovery listed.
   *
-  * `spark.read.load(file).schema` runs a one-task Spark job to read a single
-  * footer (Spark's schema inference always goes through its parallel
-  * schema merge). A read that only needs the first file's schema gets the
-  * same schema here from one footer read on the driver: Spark's own footer
-  * reader and footer-to-schema conversion, with the SQL confs its inference
-  * reads, then made nullable as Spark makes every inferred file schema. */
+  * `spark.read.load(files).schema` runs a Spark job to read footers (Spark's
+  * schema inference always goes through its parallel schema merge), and
+  * lists and stats every path it is given. Here the same schema comes from
+  * footer reads on the driver: Spark's own footer reader and
+  * footer-to-schema conversion with the SQL confs its inference reads,
+  * Spark's schema merge in the same file order, then made nullable as
+  * Spark makes every inferred file schema. */
 object ParquetFooter {
 
   /** The footer of one discovered file. A listed file opens from the status
@@ -37,7 +39,8 @@ object ParquetFooter {
     ParquetFooterReader.readFooter(in, filter)
   }
 
-  /** The data schema Spark's inference gives a file with this footer. */
+  /** The data schema Spark's inference gives a file with this footer,
+    * before Spark makes it nullable. */
   private def sparkSchema(spark: SparkSession, path: String, footer: FileMetaData): StructType = {
     val c = spark.sessionState.conf
     // the five confs Spark's inference passes, and nothing else: the
@@ -50,26 +53,39 @@ object ParquetFooter {
       nanosAsLong = c.legacyParquetNanosAsLong,
       respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
     val full = new ParquetMetadata(footer, java.util.Collections.emptyList())
-    GraftInternals.asNullable(
-      ParquetFileFormat.readSchemaFromFooter(new Footer(new Path(path), full), converter))
+    ParquetFileFormat.readSchemaFromFooter(new Footer(new Path(path), full), converter)
   }
 
-  /** The schema a read of `format` infers from its first file `first`, when
-    * one footer decides it: parquet without `mergeSchema=true`. `footer` is
-    * one already read for `first`. None for other formats, for a merged
-    * schema, and when the footer cannot be read or converted: the caller
-    * then runs Spark's inference, which raises Spark's own error for a bad
-    * file. */
+  /** The schema Spark's inference gives a read of `format` over exactly
+    * `files`, when their footers decide it: parquet only. Like Spark, it
+    * takes the first file by path, or under `mergeSchema` (the option, else
+    * the session conf) every file's schema, merged in path order. `known`
+    * holds footers already read, by url. None for other formats, when
+    * Spark would read summary files instead, and when a footer cannot be
+    * read, converted or merged: the caller then runs Spark's inference,
+    * which raises Spark's own error. */
   def inferredSchema(
       spark: SparkSession,
       format: String,
       options: Map[String, String],
-      first: Partition,
-      footer: Option[FileMetaData] = None): Option[StructType] =
-    if (format != "parquet" || options.get("mergeSchema").contains("true")) None
+      files: Seq[Partition],
+      known: Map[String, FileMetaData] = Map.empty): Option[StructType] =
+    if (format != "parquet") None
     else Try {
-      val meta = footer.getOrElse(
-        read(first, spark.sessionState.newHadoopConfWithOptions(options)).getFileMetaData)
-      sparkSchema(spark, first.url, meta)
-    }.toOption
+      val c = spark.sessionState.conf
+      val merge = CaseInsensitiveMap(options).get("mergeSchema")
+        .fold(c.isParquetSchemaMergingEnabled)(_.toBoolean)
+      // respecting summaries, Spark merges only `_metadata` files, which
+      // discovery never lists
+      if (merge && c.isParquetSchemaRespectSummaries) None
+      else {
+        val sorted = files.sortBy(p => new Path(p.url).toString)
+        lazy val conf = spark.sessionState.newHadoopConfWithOptions(options)
+        val schemas = Par.map(if (merge) sorted else sorted.take(1)) { p =>
+          sparkSchema(spark, p.url, known.getOrElse(p.url, read(p, conf).getFileMetaData))
+        }
+        Some(GraftInternals.asNullable(schemas.reduceLeft(
+          GraftInternals.merge(_, _, c.caseSensitiveAnalysis))))
+      }
+    }.toOption.flatten
 }

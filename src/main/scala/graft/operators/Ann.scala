@@ -1174,7 +1174,10 @@ object Ann {
     * REFUSES loudly (the nswBuild doctrine) if a "candidate list"
     * arrives corpus-sized — the default (65536) is shortlist-scale so
     * the refusal fires before one task buffers executor-threatening
-    * vectors, not after. Inputs whose id OR query column is not
+    * vectors, not after. The default used to be 1<<20 (1,048,576):
+    * a call with more than 65536 candidates for one query that passed
+    * under the old default now refuses; pass a larger cap explicitly to
+    * keep it. Inputs whose id OR query column is not
     * integral/string fall back to the barrier formulation (kept
     * verbatim): the kernel's id tiebreak must replicate Catalyst's
     * ordering exactly, and its group key must be injective on the query

@@ -744,7 +744,9 @@ object Frontier {
     * permanent targets for one source (divergent waves) and permanent
     * CYCLES (A→…→A is contradictory evidence that both ends are
     * canonical) refuse loudly; exact-duplicate rows from replays
-    * collapse.
+    * collapse. A permanent move with a null `url` names no source to
+    * re-point, so it is dropped from the result (temporary/loop/exceeded
+    * rows with a null url still pass through).
     *
     * 100 TB shape: pointer doubling — ceil(log2(maxChain)) rounds of
     * one equi-join of the permanent-moves map against ITSELF
@@ -773,8 +775,10 @@ object Frontier {
     // distinct (struct equality, nulls equal) and a set wider than one
     // element IS the conflicting-permanent-targets condition the join
     // formulation raised on. The raise reads the set size, so Catalyst
-    // cannot fold it below the aggregation.
-    var state = moves.filter(isPerm)
+    // cannot fold it below the aggregation. A null url is dropped first:
+    // the url-keyed groupBy would keep it as a group of its own, where the
+    // join formulation's inner equi-join dropped it.
+    var state = moves.filter(isPerm && col("url").isNotNull)
       .groupBy("url")
       .agg(collect_set(struct(col("final_url"), col("hops"))).as("__fs"))
       .select(
@@ -999,11 +1003,13 @@ object Frontier {
     * Hosts key into the rank iteration through a 60-bit hash id
     * (`conv(substr(md5(host), 1, 15), 16, 10)` — replayable in any
     * engine, birthday-safe to ~1e9 hosts) and the id→host attach is
-    * verified COLLISION-FREE before any rank math runs: two hosts
-    * sharing an id would silently merge their rank mass, so the
-    * operator counts ids against hosts and refuses loudly instead
-    * (the host table is edge-bounded, so the check is one cheap
-    * aggregate). Returns `(host, rank_ppb)`.
+    * checked for COLLISIONS: two hosts sharing an id would silently
+    * merge their rank mass, so the operator counts ids against hosts
+    * and refuses loudly instead (the host table is edge-bounded, so the
+    * check is one cheap aggregate). The check rides the result plan on
+    * the `host` column, so the refusal fires at the first action that
+    * reads `host`; an action that never reads it (a `count()`, a
+    * `select("rank_ppb")`) skips it. Returns `(host, rank_ppb)`.
     *
     * 100 TB shape: the link table collapses to host-grain FIRST (one
     * distinct — hosts are millions where links are trillions), and the

@@ -87,7 +87,7 @@ object Streams {
     val partitionCols = parts.flatMap(_.columns.keys).distinct
 
     val dataSchema = schema
-      .orElse(graft.index.ParquetFooter.inferredSchema(spark, format, options, parts.head))
+      .orElse(graft.index.ParquetFooter.inferredSchema(spark, format, options, parts.take(1)))
       .getOrElse(spark.read.format(format).options(options).load(parts.head.url).schema)
     val glob =
       if (dirs == Seq(root.stripSuffix("/"))) root + "*"

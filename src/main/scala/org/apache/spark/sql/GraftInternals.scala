@@ -19,6 +19,12 @@ object GraftInternals {
     * to an inferred file schema before it builds a relation. */
   def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 
+  /** `left` widened by `right` the way Spark's parquet schema merge does:
+    * left's fields first, right's new fields after, nested structs merged
+    * alike; incompatible types raise Spark's merge error. */
+  def merge(left: types.StructType, right: types.StructType,
+      caseSensitive: Boolean): types.StructType = left.merge(right, caseSensitive)
+
   /** Sentinel sink path reported when an active file sink's target could
     * not be resolved (neither reflection nor the `FileSink[<path>]`
     * rendering worked, e.g. after a Spark-internal refactor). Consumers

@@ -53,10 +53,12 @@ class GraphSpec extends SparkSpec {
     // each hop attenuates: the mass arriving at 3 is 85% of what
     // arrived at 2 one iteration earlier
     assert(r2(3L) < r1(2L))
-    // refusals: empty seed set; a seed that is not a graph node. The
-    // fused walk folds the seed validation into the plan (r21), so the
-    // refusal surfaces at the first ACTION, wrapped by Spark — walk the
-    // cause chain for the message (the nswBuild guard convention)
+    // refusals: empty seed set; a seed that is not a graph node.
+    // trustRank validates the seeds eagerly (one collect before the walk
+    // is built), so the refusal is an IllegalArgumentException raised by
+    // the call itself; the helper walks the cause chain for the message
+    // (the nswBuild guard convention), so it holds whether the refusal
+    // comes from the call or from a later action wrapped by Spark
     def refusalMessage(thunk: => org.apache.spark.sql.DataFrame,
         needle: String): Unit = {
       val e = intercept[Exception] { thunk.collect() }

@@ -1718,17 +1718,75 @@ class CompactionHardeningSpec extends SparkSpec {
 
   test("mixed-schema dirs rewrite under the UNION schema, never dropping columns") {
     val out = tmpDir("compact_evolve")
-    // an evolving sink: the second write adds column c
+    // an evolving sink: the second write adds column c, the third d
+    // ahead of c
     Seq((1L, "a")).toDF("id", "p").write.mode("overwrite").partitionBy("p").parquet(out)
     Seq((2L, "a", "new")).toDF("id", "p", "c")
       .write.mode("append").partitionBy("p").parquet(out)
+    Seq((3L, 4.5, "a", "newer")).toDF("id", "d", "p", "c")
+      .write.mode("append").partitionBy("p").parquet(out)
+    // the rewrite keeps the schema Spark's merge gives the original files
+    val merged = spark.read.option("mergeSchema", "true").parquet(s"$out/p=a").schema
     val stats = Graft.compactPartitionedTable(spark, out, targetFileBytes = 1L << 30)
-    assert(stats.partitionsCompacted == 1)
+    assert(stats.partitionsCompacted == 1 && stats.filesBefore == 3 && stats.filesAfter == 1)
+    assert(spark.read.parquet(s"$out/p=a").schema == merged)
     val back = spark.read.parquet(out)
     assert(back.columns.contains("c"), "evolved column must survive compaction")
-    val rows = back.select("id", "c").collect().map(r =>
-      r.getLong(0) -> (if (r.isNullAt(1)) null else r.getString(1))).toMap
-    assert(rows == Map(1L -> null, 2L -> "new"))
+    val rows = back.select("id", "c", "d").collect().map(r =>
+      r.getLong(0) -> (Option(r.getString(1)), Option(r.get(2)))).toMap
+    assert(rows == Map(1L -> (None, None), 2L -> (Some("new"), None),
+      3L -> (Some("newer"), Some(4.5))))
+  }
+
+  /** p=a fragmented into three files plus a tagged append; p=b and p=c
+    * one tagged file each, so the size heuristic skips both. */
+  private def taggedTable(prefix: String): String = {
+    val out = tmpDir(prefix)
+    Graft.writePartitionedTable(
+      (0 until 30).map(i => (i.toLong, "a")).toDF("id", "p").repartition(3), out, Seq("p"))
+    graft.core.TaggedAppend.append(Seq((100L, "a"), (101L, "b")).toDF("id", "p"),
+      out, "t1", Seq("p"))
+    graft.core.TaggedAppend.append(Seq((102L, "c")).toDF("id", "p"), out, "t2", Seq("p"))
+    out
+  }
+
+  private def fileNames(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).sorted.toSeq
+
+  test("a whole-table compaction lists the tree once and runs one job per rewritten dir") {
+    import graft.core.Discovery
+    val out = taggedTable("compact_once")
+    Discovery.resetListingCounter()
+    Graft.discover(spark, out)
+    val oneListing = Discovery.listingCalls.get()
+    Discovery.resetListingCounter()
+    val (stats, jobs) = jobsDuring(
+      Graft.compactPartitionedTable(spark, out, targetFileBytes = 1L << 30))
+    assert(Discovery.listingCalls.get() == oneListing,
+      "compaction and tag retirement must share one listing")
+    assert(stats.partitionsCompacted == 1)
+    assert(jobs == stats.partitionsCompacted, s"$jobs jobs for one rewritten dir")
+    assert(Graft.readPartitionedTable(spark, out).count() == 33)
+  }
+
+  test("dirs the size heuristic skips still have their ingest files retired, whole-table or scoped") {
+    import graft.core.Q
+    for (scope <- Seq(Q.True, Q.or(Q.eq("p", "a"), Q.eq("p", "b")))) {
+      val out = taggedTable("compact_retire")
+      val stats = Graft.compactPartitionedTable(spark, out,
+        targetFileBytes = 1L << 30, query = scope)
+      assert(stats.partitionsCompacted == 1, scope.toString)
+      assert(fileNames(s"$out/p=a").size == 1 &&
+        !fileNames(s"$out/p=a").head.startsWith("ingest-"), scope.toString)
+      for ((dir, tag) <- Seq("p=b" -> "t1", "p=c" -> "t2")) {
+        val names = fileNames(s"$out/$dir")
+        assert(names.size == 1 && names.head.startsWith(s"retired-$tag-"), s"$scope $names")
+      }
+      assert(Graft.listIngestTags(spark, out).count() == 0)
+      assert(Graft.readPartitionedTable(spark, out).select("id").as[Long].collect().sorted
+        .toSeq == (0L until 30L) ++ Seq(100L, 101L, 102L), scope.toString)
+    }
   }
 
   test("csv dirs straddling a column addition are refused, not silently truncated") {

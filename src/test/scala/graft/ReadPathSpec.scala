@@ -630,39 +630,6 @@ class ReadPathSpec extends SparkSpec {
 
   // ------------------------------------------------ job-free read building
 
-  /** Spark jobs started while `body` runs, counted by a listener. A fence
-    * job before and after bounds the count: the listener bus delivers
-    * events in order, so once the closing fence arrives every job `body`
-    * started has been seen, and nothing queued before the opening fence
-    * is counted. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val key = "graft.test.fence"
-    val starts = new java.util.concurrent.atomic.AtomicInteger
-    val fences = new java.util.concurrent.LinkedBlockingQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(f) => fences.put(f)
-          case None => starts.incrementAndGet()
-        }
-    }
-    def fence(name: String): Unit = {
-      sc.setLocalProperty(key, name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
-      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) == name)
-    }
-    sc.addSparkListener(listener)
-    try {
-      fence("open")
-      starts.set(0)
-      val out = body
-      fence("close")
-      (out, starts.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def withConf[T](kvs: (String, String)*)(body: => T): T = {
     val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -811,5 +778,71 @@ class ReadPathSpec extends SparkSpec {
     assert(pruned.select("k").as[Int].collect().sorted.toSeq == Seq(1, 2, 4))
     assert(canon(pruned) ==
       canon(Graft.readSnapshot(spark, out, snap).filter(col("p") =!= "b")))
+  }
+
+  // ------------------------------------------------ merged parquet schemas
+
+  /** One Spark-written parquet file per (name, frame) under `dir`. */
+  private def parquetFiles(dir: String, files: (String, org.apache.spark.sql.DataFrame)*): Seq[String] =
+    files.map { case (name, df) => val f = s"$dir/$name"; sparkParquetFile(df, f); f }
+
+  test("a mergeSchema read's footer-merged schema equals Spark's merge; a conflict fails alike") {
+    import spark.implicits._
+    val merge = Map("mergeSchema" -> "true")
+    def graftSchema(dir: String) = Graft.readPartitionedTable(spark, dir, options = merge).schema
+    def sparkSchema(files: Seq[String]) = spark.read.options(merge).parquet(files: _*).schema
+    // added columns in different orders: the union follows path order,
+    // whatever order the files were written in
+    for ((first, second) <- Seq(("a", "b"), ("b", "a"))) {
+      val dir = tmpDir(s"merge-order-$first")
+      val files = parquetFiles(dir,
+        s"$first.parquet" -> Seq((1, "x")).toDF("c1", "c2"),
+        s"$second.parquet" -> Seq((2.5, 2, 7L)).toDF("c3", "c1", "c4"),
+        "c.parquet" -> Seq(("y", 3)).toDF("c5", "c1"))
+      assert(graftSchema(dir) == sparkSchema(files), dir)
+    }
+    // a nested struct widened by a later file, plus a non-nullable column
+    val nested = tmpDir("merge-nested")
+    val nestedFiles = parquetFiles(nested,
+      "a.parquet" -> spark.range(2).selectExpr("id", "named_struct('x', id) AS s"),
+      "b.parquet" -> spark.range(2).selectExpr(
+        "named_struct('x', id, 'y', cast(id AS string)) AS s", "array(id) AS arr"))
+    val nestedSchema = graftSchema(nested)
+    assert(nestedSchema == sparkSchema(nestedFiles))
+    assert(nestedSchema("s").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+      .fieldNames.toSeq == Seq("x", "y"))
+    // across partition dirs: the data schema matches, the partition column follows
+    val tree = tmpDir("merge-tree")
+    val treeFiles = parquetFiles(tree,
+      "p=1/f.parquet" -> Seq((1, "a")).toDF("c1", "c2"),
+      "p=2/f.parquet" -> Seq((2, 9.5)).toDF("c1", "c3"))
+    assert(graftSchema(tree) == sparkSchema(treeFiles).add("p", "string"))
+    // a type conflict: the read call fails with Spark's exception class
+    val conflict = tmpDir("merge-conflict")
+    val conflictFiles = parquetFiles(conflict,
+      "a.parquet" -> Seq(1).toDF("c1"), "b.parquet" -> Seq("x").toDF("c1"))
+    val expected = intercept[Exception](sparkSchema(conflictFiles))
+    val e = intercept[Exception](graftSchema(conflict))
+    assert(e.getClass == expected.getClass, s"${e.getClass} vs ${expected.getClass}")
+  }
+
+  test("building a mergeSchema parquet read runs no Spark job") {
+    import spark.implicits._
+    val out = tmpDir("merge-nojob")
+    parquetFiles(out,
+      "p=x/a.parquet" -> Seq((1L, "a")).toDF("k", "v"),
+      "p=x/b.parquet" -> Seq((2L, 1.5)).toDF("k", "w"),
+      "p=y/c.parquet" -> Seq(3L).toDF("k"))
+    val merge = Map("mergeSchema" -> "true")
+    val (frames, jobs) = jobsDuring(Seq(
+      Graft.readPartitionedTable(spark, out, options = merge),
+      Graft.readPartitionedTableRich(spark, out, options = merge).data))
+    assert(jobs == 0, s"building the reads ran $jobs Spark jobs")
+    frames.foreach { df =>
+      assert(df.columns.toSeq == Seq("k", "v", "w", "p"))
+      assert(df.select("k", "v", "w", "p").as[(Long, String, Option[Double], String)]
+        .collect().sortBy(_._1).toSeq ==
+        Seq((1L, "a", None, "x"), (2L, null, Some(1.5), "x"), (3L, null, None, "y")))
+    }
   }
 }

@@ -226,4 +226,14 @@ class RedirectSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(ok("n0") == "n6" && ok("n5") == "n6", ok.toString)
   }
+
+  test("compactRedirectMoves drops permanent moves with a null url; other rows pass through") {
+    val moves = movesDf(
+      ("a", "b", 1L, true, "resolved"),
+      (null, "b", 1L, true, "resolved"),
+      (null, "t", 1L, false, "resolved"))
+    val got = Frontier.compactRedirectMoves(moves).collect()
+      .map(r => (Option(r.getString(0)), r.getString(1), r.getBoolean(3))).toSet
+    assert(got == Set((Some("a"), "b", true), (None, "t", false)), got.toString)
+  }
 }

@@ -24,6 +24,39 @@ abstract class SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Spark jobs started while `body` runs, counted by a listener. A fence
+    * job before and after bounds the count: the listener bus delivers
+    * events in order, so once the closing fence arrives every job `body`
+    * started has been seen, and nothing queued before the opening fence
+    * is counted. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.fence"
+    val starts = new java.util.concurrent.atomic.AtomicInteger
+    val fences = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(f) => fences.put(f)
+          case None => starts.incrementAndGet()
+        }
+    }
+    def fence(name: String): Unit = {
+      sc.setLocalProperty(key, name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) == name)
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("open")
+      starts.set(0)
+      val out = body
+      fence("close")
+      (out, starts.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Order-insensitive comparison: sorted rows of string-rendered values. */
   def canon(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
     val cols = df.columns.sorted.toSeq
