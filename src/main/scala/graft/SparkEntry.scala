@@ -708,7 +708,7 @@ object SparkEntry {
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount")
       .orderBy("l_orderkey", "l_linenumber")
 
-  /** Adjudicated (r7, ProfileQ3 at sf0.1): Spark 4.1 plans a SINGLE
+  /** Adjudicated (r7, warm medians at sf0.1): Spark 4.1 plans a SINGLE
     * distinct aggregate via planAggregateWithOneDistinct — a partial
     * aggregate keyed (group, distinct) BEFORE the shuffle, NO Expand (the
     * row-doubling Expand only appears with multiple distinct groups). The

@@ -59,23 +59,13 @@ final class GraftEmptyResultException(msg: String) extends RuntimeException(msg)
   * The whole reference surface (/root/reference/src/fsql/api.py) re-expressed
   * Spark-first: discovery + pruning happen driver-side (metadata-only; a
   * parquet read's schema is one footer read, so building it runs no Spark
-  * job), then ONE relation over the surviving files hands them to
-  * Catalyst/Tungsten — predicate pushdown, column pruning, vectorized parquet
-  * and whole-stage codegen all apply downstream of this seam.
-  *
-  * Partition-column attach strategies (scale-critical):
-  *  - few distinct partitions: per-partition load + literal columns + unionByName
-  *    (plan stays small, literals fold into codegen);
-  *  - many partitions (the 100 TB shape: thousands of dirs, millions of files):
-  *    a single multi-path load joined to a broadcast file→values map on
-  *    `input_file_name()` — constant plan size, no per-partition plan nodes.
-  * Partition columns are always StringType (reference contract, SURVEY §1.2).
+  * job), then ONE relation per file format over the surviving files hands
+  * them to Catalyst/Tungsten — predicate pushdown, column pruning,
+  * vectorized parquet and whole-stage codegen all apply downstream of this
+  * seam. Partition columns are always StringType (reference contract,
+  * SURVEY §1.2).
   */
 object Graft {
-
-  /** Above this many distinct partitions, switch from per-partition unions to
-    * the broadcast path-map attach. */
-  var unionAttachThreshold: Int = 64
 
   // ---------------------------------------------------------------- discovery
 
@@ -91,18 +81,11 @@ object Graft {
       url: String,
       query: PartitionQuery = Q.True,
       parser: ColumnParser = AutoParser.auto,
-      fsConf: Map[String, String] = Map.empty): Seq[Partition] = {
-    maybeApplyEnvConfig(spark, url)
-    val conf = spark.sessionState.newHadoopConf()
-    fsConf.foreach { case (k, v) => conf.set(k, v) }
-    val fs =
-      if (fsConf.isEmpty) Discovery.fileSystemFor(url, conf)
-      else Discovery.newFileSystemFor(url, conf)
-    try {
+      fsConf: Map[String, String] = Map.empty): Seq[Partition] =
+    withFs(spark, url, fsConf) { fs =>
       val qualified = fs.makeQualified(new Path(url)).toString
       Discovery.discoverPartitions(query, parser, Partition.root(qualified), fs)
-    } finally if (fsConf.nonEmpty) fs.close()
-  }
+    }
 
   /** "Fancy ls" (reference IdentityReader, deser.py:273-303): the matched
     * files + partition values as a small driver-built DataFrame. */
@@ -177,17 +160,11 @@ object Graft {
     * file is simply an error (same reasoning as S19, SURVEY §8.1). */
   def openPartitionedFile[T](spark: SparkSession, path: String,
       fsConf: Map[String, String] = Map.empty)(
-      callback: java.io.InputStream => T): T = {
-    val conf = spark.sessionState.newHadoopConf()
-    fsConf.foreach { case (k, v) => conf.set(k, v) }
-    val fs =
-      if (fsConf.isEmpty) Discovery.fileSystemFor(path, conf)
-      else Discovery.newFileSystemFor(path, conf)
-    try {
+      callback: java.io.InputStream => T): T =
+    withFs(spark, path, fsConf) { fs =>
       val in = fs.open(new Path(path))
       try callback(in) finally in.close()
-    } finally if (fsConf.nonEmpty) fs.close()
-  }
+    }
 
   /** Iterator variant: open every file matched by (query, parser) in
     * deterministic discovery order, yielding (partition, callbackResult). */
@@ -454,33 +431,25 @@ object Graft {
 
     if (good.isEmpty) return RichResult(spark.emptyDataFrame, failures)
 
-    // Attach strategy, in preference order:
-    //  1. single format (the normal case): our GraftFileIndex behind a
-    //     HadoopFsRelation — ONE vectorized scan for ANY layout (hive,
-    //     value-only, filename columns), partition columns are first-class
-    //     Catalyst partition values (post-hoc filters prune files), plan
-    //     size is constant regardless of partition count;
-    //  2. mixed formats, few partitions: per-partition load + literals;
-    //  3. mixed formats, many partitions: broadcast path-map join.
-    val root = fileSystemQualifiedRoot(spark, url, fsConf)
-    def attachOne(fmt: String, fs: Seq[FileEntry]): DataFrame =
-      if (fmt == "xlsx") xlsxAttach(spark, fs, schema)
-      else {
-        val groups = fs.groupBy(e => (e.format, e.columns)).toSeq
-          .sortBy(_._2.head.path) // deterministic group order
-        if (groups.size <= unionAttachThreshold) unionAttach(spark, groups, options, schema)
-        else broadcastAttach(spark, fs, options, schema)
+    // Each format's files get their own GraftFileIndex behind a
+    // HadoopFsRelation (xlsx, which Spark has no file format for, gets its
+    // own per-file parse), and these relations are unioned by name. A
+    // single-format tree, the normal case, is one relation: ONE vectorized
+    // scan for ANY layout (hive, value-only, filename columns), partition
+    // columns are first-class Catalyst partition values (post-hoc filters
+    // prune files in every format's scan), and plan size and build cost
+    // are constant in the partition count.
+    val root = withFs(spark, url, fsConf) { fs =>
+      val q = fs.makeQualified(new Path(url)).toString
+      if (q.endsWith("/")) q else q + "/"
+    }
+    val df = good.groupBy(_.format).toSeq.sortBy(_._1)
+      .map {
+        case ("xlsx", files) => xlsxAttach(spark, files, schema)
+        case (fmt, files) =>
+          fileIndexAttach(spark, root, files, readDefaults(fmt) ++ options, schema)
       }
-    val df =
-      good.map(_.format).distinct match {
-        case Seq("xlsx") => xlsxAttach(spark, good, schema)
-        case Seq(fmt) => fileIndexAttach(spark, root, good, readDefaults(fmt) ++ options, schema)
-        case _ =>
-          // mixed formats: one attach per format (each single-format), unioned
-          val frames = good.groupBy(_.format).toSeq.sortBy(_._1)
-            .map { case (fmt, fs) => attachOne(fmt, fs) }
-          frames.reduce(_.unionByName(_, allowMissingColumns = true))
-      }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
 
     val projected =
       if (columns.isEmpty) df
@@ -491,28 +460,15 @@ object Graft {
     RichResult(projected, failures)
   }
 
-  private def fileSystemQualifiedRoot(spark: SparkSession, url: String,
-      fsConf: Map[String, String] = Map.empty): String = {
-    val conf = spark.sessionState.newHadoopConf()
-    fsConf.foreach { case (k, v) => conf.set(k, v) }
-    val fs =
-      if (fsConf.isEmpty) Discovery.fileSystemFor(url, conf)
-      else Discovery.newFileSystemFor(url, conf)
-    try {
-      val q = fs.makeQualified(new Path(url)).toString
-      if (q.endsWith("/")) q else q + "/"
-    } finally if (fsConf.nonEmpty) fs.close()
-  }
-
-  /** Primary path: build a [[graft.index.GraftFileIndex]] over the
-    * discovered files and hand it to Catalyst as a HadoopFsRelation — one
-    * scan, native partition pruning on our string partition columns, any
-    * layout. `opts` are the reader options exactly as the relation gets
-    * them. Data schema comes from the user, else from Spark's inference
-    * over the first file, or over every file when `inferFromAll` or
-    * `mergeSchema=true`; for parquet that is footer reads on the driver
-    * ([[graft.index.ParquetFooter]]), so building the read runs no Spark
-    * job. */
+  /** Build a [[graft.index.GraftFileIndex]] over one format's discovered
+    * files and hand it to Catalyst as a HadoopFsRelation — one scan, native
+    * partition pruning on our string partition columns (first-seen
+    * discovery order), any layout. `opts` are the reader options exactly
+    * as the relation gets them. Data schema comes from the user, else from
+    * Spark's inference over the first file, or over every file when
+    * `inferFromAll` or `mergeSchema=true`; for parquet that is footer
+    * reads on the driver ([[graft.index.ParquetFooter]]), so building the
+    * read runs no Spark job. */
   private def fileIndexAttach(
       spark: SparkSession,
       root: String,
@@ -593,57 +549,6 @@ object Graft {
           .map(f => col(n).cast(f.dataType).as(n)).getOrElse(col(n)))
         df.select(typed ++ partCols.map(col): _*)
     }
-  }
-
-  /** Few-partitions path: per-group load with literal partition columns. */
-  private def unionAttach(
-      spark: SparkSession,
-      groups: Seq[((String, Map[String, String]), Seq[FileEntry])],
-      options: Map[String, String],
-      schema: Option[StructType]): DataFrame = {
-    val frames = groups.map { case ((fmt, partValues), files) =>
-      val base = load(spark, fmt, files.map(_.path), options, schema)
-      partValues.toSeq.sortBy(_._1).foldLeft(base) { case (d, (k, v)) =>
-        d.withColumn(k, lit(v))
-      }
-    }
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** Many-partitions path: single scan + broadcast file→values map joined on
-    * input_file_name(). Constant-size plan regardless of partition count. */
-  private def broadcastAttach(
-      spark: SparkSession,
-      files: Seq[FileEntry],
-      options: Map[String, String],
-      schema: Option[StructType]): DataFrame = {
-    val formats = files.map(_.format).distinct
-    require(formats.size == 1,
-      s"broadcast attach requires a single format, got $formats")
-    val colNames = files.flatMap(_.columns.keys).distinct
-
-    val mapSchema = StructType(
-      StructField("__graft_file", StringType, nullable = false) +:
-        colNames.map(StructField(_, StringType, nullable = true)))
-    val rows = files.map { e =>
-      org.apache.spark.sql.Row.fromSeq(
-        normalizePath(e.path) +: colNames.map(c => e.columns.getOrElse(c, null)))
-    }
-    val mapDf = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), mapSchema)
-
-    val data = load(spark, formats.head, files.map(_.path), options, schema)
-      // input_file_name yields a URI ("file:///..."); reduce both sides to
-      // /authority/path form so the equi-join keys agree across schemes.
-      .withColumn("__graft_file",
-        regexp_replace(input_file_name(), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-    data.join(broadcast(mapDf), Seq("__graft_file"), "inner").drop("__graft_file")
-  }
-
-  /** Driver-side normalization matching the runtime regexp in broadcastAttach. */
-  private def normalizePath(url: String): String = {
-    val uri = new Path(url).toUri
-    val auth = Option(uri.getAuthority).filter(_.nonEmpty).map("/" + _).getOrElse("")
-    auth + uri.getRawPath
   }
 
   /** FAILFAST preserves the reference's eager error contract (a malformed
@@ -1562,21 +1467,14 @@ object Graft {
         retireTags(Set.empty)
         CompactionStats(dirStats.size, 0, filesBefore, filesBefore, 0L)
       } else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(maxConcurrentRewrites, candidates.size))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
         // await EVERY rewrite (as Try) before surfacing any failure: a
         // fail-fast rethrow would return control while detached threads
         // keep renaming/deleting under the caller's feet, and would swallow
         // every failure but the first
-        val outcomes =
-          try scala.concurrent.Await.result(
-            scala.concurrent.Future.traverse(candidates) { case (dir, _, _, desired) =>
-              scala.concurrent.Future(Try(rewrite(dir, desired))
-                .fold(e => Left(dir -> e), Right(_)))
-            }, scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
+        val outcomes = Par.map(candidates, maxConcurrentRewrites) {
+          case (dir, _, _, desired) =>
+            Try(rewrite(dir, desired)).fold(e => Left(dir -> e), Right(_))
+        }
         val failures = outcomes.collect { case Left(f) => f }
         if (failures.nonEmpty) {
           val (dir, first) = failures.head

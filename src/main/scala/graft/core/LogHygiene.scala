@@ -10,9 +10,9 @@ package graft.core
   * line in the captured output tails (tens of thousands of repeats),
   * burying real signals. Spark 4's optimizer removes foldable window
   * partition keys, so the `partitionBy(lit(0))` spelling does NOT
-  * silence it (measured — see graft.tools.ProbeWin: the literal-keyed
-  * plan optimizes to the identical SinglePartition exchange and still
-  * warns); demoting the one logger is the remaining honest fix. The
+  * silence it (measured on Spark 4.1: the literal-keyed plan optimizes
+  * to the identical SinglePartition exchange, returns the same rows and
+  * still warns); demoting the one logger is the remaining honest fix. The
   * single-partition EXCHANGE itself still shows in every committed
   * plan dump, so the cost stays visible where it is audited. */
 object LogHygiene {

@@ -748,6 +748,17 @@ object Frontier {
     * re-point, so it is dropped from the result (temporary/loop/exceeded
     * rows with a null url still pass through).
     *
+    * Memory bound of the conflict refusal: the url-keyed aggregation
+    * collects a url's DISTINCT permanent `(final_url, hops)` targets into
+    * one `collect_set` buffer, and the refusal reads that set's size. So
+    * a url with k distinct targets buffers all k in one task's
+    * aggregation buffer before the refusal fires. Replay duplicates
+    * collapse first and do not count toward k, and a consistent moves
+    * table has k = 1 for every url. An adversarially divergent input (one
+    * url with millions of distinct targets) can exhaust that task's
+    * memory instead of refusing cleanly; check such input upstream
+    * (`groupBy(url)` with `countDistinct`) before compacting it.
+    *
     * 100 TB shape: pointer doubling — ceil(log2(maxChain)) rounds of
     * one equi-join of the permanent-moves map against ITSELF
     * (moves-sized, never corpus-sized), with the per-round persist +

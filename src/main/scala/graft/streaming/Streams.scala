@@ -103,7 +103,10 @@ object Streams {
         spark.readStream.format(format).schema(streamSchema)
           .options(options).load(glob)
 
-    // normalized path: scheme stripped, as in the batch broadcast attach
+    // input_file_name() is a URI ("file:///..."): the scheme and its
+    // slashes become one "/", giving the /authority/path form rootNorm
+    // below is built in, so a file's path under the root starts at a
+    // fixed offset whatever scheme the source uses
     val file = regexp_replace(input_file_name(), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
     val rootNorm = {
       val uri = new Path(root).toUri

@@ -74,7 +74,7 @@ class PlanSpec extends SparkSpec {
   test("q3 single-distinct: no Expand, bounded exchanges (planner two-phases it)") {
     // Spark 4.1's planAggregateWithOneDistinct partial-aggregates by
     // (segment, orderkey) before the shuffle — the same plan the r6
-    // hand-written rollup produced (ProfileQ3 evidence); what must never
+    // hand-written rollup produced (measured at sf0.1); what must never
     // reappear is a row-doubling Expand or an extra data exchange
     val plan = finalPlan(SparkEntry.queries("q3_join_agg")(spark, dir))
     assert(count(plan, "Expand") == 0, "single-distinct must not plan an Expand")

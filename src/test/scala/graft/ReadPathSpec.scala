@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.Try
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{coalesce, col}
 
 import graft.api.{Graft, GraftEmptyResultException}
 import graft.core._
@@ -280,24 +280,92 @@ class ReadPathSpec extends SparkSpec {
     assert(df.columns.toSet == Set("c2", "p"))
   }
 
-  test("mixed-format tree: union attach and broadcast attach agree") {
-    // single-format trees ride GraftFileIndex; a mixed csv+json tree takes
-    // the union path (or broadcast path over the threshold) — both must
-    // produce identical frames
-    val dir = tmpDir("mixed")
-    for (i <- 0 until 4) writeFile(s"$dir/p=c$i/f.csv", s"c1\n$i\n")
-    for (i <- 0 until 4) writeFile(s"$dir/p=j$i/f.json", s"""{"c1":${i + 10}}""" + "\n")
-    val old = Graft.unionAttachThreshold
-    try {
-      val viaUnion = Graft.readPartitionedTable(spark, dir)
-      assert(viaUnion.count() == 8)
-      assert(viaUnion.select("p").distinct().count() == 8)
-      Graft.unionAttachThreshold = 2
-      // 4 partition groups per format > threshold 2 => broadcast attach,
-      // applied per format then unioned — must equal the union-attach result
-      val viaBroadcast = Graft.readPartitionedTable(spark, dir)
-      assert(canon(viaBroadcast) == canon(viaUnion))
-    } finally Graft.unionAttachThreshold = old
+  /** A csv+json tree with `n` partitions per format: `p=c<i>` holds one
+    * csv row (c1 = i, c2 = "c<i>"), `p=j<i>` one json row (c1 = i + 1000,
+    * c3 = "j<i>"). */
+  private def mixedTree(prefix: String, n: Int): String = {
+    val dir = tmpDir(prefix)
+    for (i <- 0 until n) {
+      writeFile(s"$dir/p=c$i/f.csv", s"c1,c2\n$i,c$i\n")
+      writeFile(s"$dir/p=j$i/f.json", s"""{"c1":${i + 1000},"c3":"j$i"}""" + "\n")
+    }
+    dir
+  }
+
+  /** Files the final plan's scans read after partition pruning. AQE is
+    * off while planning so every scan is a leaf of the executed plan. */
+  private def filesScanned(df: org.apache.spark.sql.DataFrame): Int = {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try df.queryExecution.executedPlan.collectLeaves()
+      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
+          .map(_.files.size).sum }.sum
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("mixed-format tree: one file index per format, same rows at any partition count") {
+    val small = Graft.readPartitionedTable(spark, mixedTree("mixed", 4))
+    assert(small.count() == 8)
+    assert(small.select("p").distinct().count() == 8)
+    assert(small.columns.toSet == Set("c1", "c2", "c3", "p"))
+    // 70 partitions per format (above any per-partition plan's reach): the
+    // same relation shape, and its first 4 partitions per format equal the
+    // small tree's read
+    val big = Graft.readPartitionedTable(spark, mixedTree("mixed_big", 70))
+    assert(big.count() == 140)
+    val ps = (0 until 4).flatMap(i => Seq(s"c$i", s"j$i"))
+    assert(canon(big.filter(col("p").isin(ps: _*))) == canon(small))
+  }
+
+  test("mixed-format tree: each format's rows equal that format's own read") {
+    val dir = mixedTree("mixed_parity", 4)
+    val mixed = Graft.readPartitionedTable(spark, dir)
+    for ((fmt, absent) <- Seq("c" -> "c3", "j" -> "c2")) {
+      val ps = (0 until 4).map(i => s"$fmt$i")
+      val single = Graft.readPartitionedTable(spark, dir, Q.in("p", ps))
+      val slice = mixed.filter(col("p").isin(ps: _*))
+      assert(slice.filter(col(absent).isNotNull).count() == 0)
+      assert(canon(slice.select(single.columns.toSeq.map(col): _*)) == canon(single),
+        s"$fmt partitions differ from the single-format read")
+    }
+  }
+
+  test("mixed-format tree: post-hoc partition filters prune every format's files") {
+    val df = Graft.readPartitionedTable(spark, mixedTree("mixed_prune", 70))
+      .filter(col("p").isin("c3", "j5"))
+    assert(df.select("p", "c1").collect().map(r => (r.getString(0), r.get(1).toString))
+      .toSet == Set(("c3", "3"), ("j5", "1005")))
+    val scanned = filesScanned(df)
+    assert(scanned == 2, s"expected 2 of 140 files after pruning, got $scanned")
+  }
+
+  test("mixed-format tree: building the read runs as many jobs at 4 as at 40 partitions") {
+    val small = mixedTree("mixed_jobs4", 4)
+    val big = mixedTree("mixed_jobs40", 40)
+    val (_, smallJobs) = jobsDuring(Graft.readPartitionedTable(spark, small))
+    val (_, bigJobs) = jobsDuring(Graft.readPartitionedTable(spark, big))
+    assert(smallJobs == bigJobs,
+      s"build jobs grow with partitions: $smallJobs at 4, $bigJobs at 40")
+  }
+
+  test("mixed-format tree with xlsx: every row carries its partition values") {
+    import graft.sources.Xlsx
+    val dir = mixedTree("mixed_xlsx", 2)
+    for (i <- 0 until 2) {
+      Files.createDirectories(Paths.get(s"$dir/p=x$i"))
+      val out = new java.io.FileOutputStream(s"$dir/p=x$i/f.xlsx")
+      try Xlsx.write(out, Seq("c1", "c4"), Seq(Seq(i + 2000, s"x$i")))
+      finally out.close()
+    }
+    val df = Graft.readPartitionedTable(spark, dir)
+    assert(df.columns.toSet == Set("c1", "c2", "c3", "c4", "p"))
+    val rows = df.select(col("p"), col("c1").cast("string"),
+        coalesce(col("c2"), col("c3"), col("c4")))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(rows == (0 until 2).flatMap(i => Seq(
+      (s"c$i", s"$i", s"c$i"), (s"j$i", s"${i + 1000}", s"j$i"),
+      (s"x$i", s"${i + 2000}", s"x$i"))).toSet)
   }
 
   test("post-hoc partition filters prune files through GraftFileIndex") {
