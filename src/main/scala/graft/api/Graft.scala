@@ -443,11 +443,28 @@ object Graft {
       val q = fs.makeQualified(new Path(url)).toString
       if (q.endsWith("/")) q else q + "/"
     }
-    val df = good.groupBy(_.format).toSeq.sortBy(_._1)
+    val frames = good.groupBy(_.format).toSeq.sortBy(_._1)
       .map {
         case ("xlsx", files) => xlsxAttach(spark, files, schema)
         case (fmt, files) =>
           fileIndexAttach(spark, root, files, readDefaults(fmt) ++ options, schema)
+      }
+    // One format's inference can type a column as string where another's
+    // types it otherwise; the union would widen it to the non-string type
+    // and the first string that does not cast fails the first action. Such
+    // a column reads as string in every format, the closest match to the
+    // reference's object column (numeric widening stays the union's).
+    val asString = frames.flatMap(_.schema.fields).groupBy(_.name).collect {
+      case (name, fields) if fields.exists(_.dataType == StringType) &&
+          fields.exists(_.dataType != StringType) => name
+    }.toSet
+    val df = frames
+      .map { f =>
+        if (!f.columns.exists(asString)) f
+        else f.select(f.columns.toSeq.map { c =>
+          val ref = f.col("`" + c.replace("`", "``") + "`")
+          if (asString(c)) ref.cast(StringType).as(c) else ref
+        }: _*)
       }
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
@@ -637,15 +654,9 @@ object Graft {
             val (hdr, _) = try graft.sources.Xlsx.read(in) finally in.close()
             hdr
           case "csv" =>
-            val sep = options.getOrElse("sep", options.getOrElse("delimiter", ","))
-            val fs = Discovery.fileSystemFor(e.path, hadoopConf)
-            val in = fs.open(new Path(e.path))
-            val header =
-              try new java.io.BufferedReader(
-                new java.io.InputStreamReader(in, "UTF-8")).readLine()
-              finally in.close()
-            if (header == null) throw new RuntimeException("empty csv file")
-            val cells = splitCsvHeader(header, sep)
+            val header = firstLine(Discovery.fileSystemFor(e.path, hadoopConf),
+              new Path(e.path)).getOrElse(throw new RuntimeException("empty csv file"))
+            val cells = splitCsvHeader(header, csvSep(options), csvQuote(options))
             if ((readDefaults("csv") ++ options).getOrElse("header", "true") == "true")
               cells
             else schema.map(_.fieldNames.toSeq)
@@ -676,12 +687,34 @@ object Graft {
     (results.collect { case Right(e) => e }, results.collect { case Left(f) => f })
   }
 
-  /** Minimal RFC-4180 header-line split for the probe: honors quoted cells
+  /** The first line of a text file, decompressed through Hadoop's codec
+    * factory when its suffix names a codec (.csv.gz, .csv.bz2, …) — read
+    * raw, a compressed file's "first line" is container bytes. None for
+    * an empty file. */
+  private def firstLine(fs: org.apache.hadoop.fs.FileSystem, path: Path): Option[String] = {
+    val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(
+      fs.getConf).getCodec(path)
+    val raw: java.io.InputStream = fs.open(path)
+    val stream = if (codec == null) raw else codec.createInputStream(raw)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      stream, java.nio.charset.StandardCharsets.UTF_8))
+    try Option(in.readLine()) finally in.close()
+  }
+
+  /** The csv separator and quote character the reader options name, with
+    * Spark's defaults; an empty `quote` turns quoting off, as in Spark. */
+  private def csvSep(options: Map[String, String]): String =
+    options.getOrElse("sep", options.getOrElse("delimiter", ","))
+  private def csvQuote(options: Map[String, String]): Char =
+    options.get("quote").fold('"')(_.headOption.getOrElse('\u0000'))
+
+  /** Minimal RFC-4180 header-line split, shared by the lazy-errors probe
+    * and the compaction's csv field-count guard: honors quoted cells
     * (separator inside quotes, doubled-quote escape) so a header like
     * `"last,first",age` parses as two columns — a naive split-on-separator
     * would mis-report the requested-column check. Unquoted cells are
     * trimmed (matching the previous probe behavior). */
-  private[graft] def splitCsvHeader(line: String, sep: String): Seq[String] = {
+  private[graft] def splitCsvHeader(line: String, sep: String, quote: Char): Seq[String] = {
     val sepStr = if (sep.nonEmpty) sep else ","
     val out = Seq.newBuilder[String]
     val cur = new StringBuilder
@@ -695,17 +728,18 @@ object Graft {
     while (i < line.length) {
       val c = line.charAt(i)
       if (quoted) {
-        if (c == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { cur.append('"'); i += 1 }
+        if (c == quote) {
+          if (i + 1 < line.length && line.charAt(i + 1) == quote) { cur.append(quote); i += 1 }
           else quoted = false
         } else cur.append(c)
         i += 1
       }
-      // separator wins over quote-open so a separator beginning with '"'
-      // still splits; full-string match so a multi-char sep like "||" splits
-      // once per occurrence instead of on every constituent character
+      // separator wins over quote-open so a separator beginning with the
+      // quote character still splits; full-string match so a multi-char
+      // sep like "||" splits once per occurrence instead of on every
+      // constituent character
       else if (line.startsWith(sepStr, i)) { flush(); i += sepStr.length }
-      else if (c == '"' && cur.isEmpty) { quoted = true; wasQuoted = true; i += 1 }
+      else if (c == quote && cur.isEmpty) { quoted = true; wasQuoted = true; i += 1 }
       else { cur.append(c); i += 1 }
     }
     flush()
@@ -1362,29 +1396,9 @@ object Graft {
       // physical line is not a record. json needs no guard: its inference
       // scans the data and unions keys, so a straddling dir rewrites under
       // the union schema (spec-pinned).
-      def csvFirstLineFields(file: String): Int = {
-        val sep = options.getOrElse("sep", options.getOrElse("delimiter", ",")).head
-        val quote = options.getOrElse("quote", "\"").headOption.getOrElse('"')
-        // route through the Hadoop codec factory: compressed parts
-        // (.csv.gz, .csv.bz2, …) must be decompressed before line-reading,
-        // or the "first line" is compression-container bytes and the guard
-        // passes/refuses on garbage
-        val path = new Path(file)
-        val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(
-          fs.getConf).getCodec(path)
-        val raw: java.io.InputStream = fs.open(path)
-        val stream = if (codec == null) raw else codec.createInputStream(raw)
-        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-          stream, java.nio.charset.StandardCharsets.UTF_8))
-        val line = try Option(in.readLine()).getOrElse("") finally in.close()
-        var fields = 1
-        var inQuotes = false
-        line.foreach { ch =>
-          if (ch == quote) inQuotes = !inQuotes
-          else if (ch == sep && !inQuotes) fields += 1
-        }
-        fields
-      }
+      def csvFirstLineFieldCount(file: String): Int =
+        splitCsvHeader(firstLine(fs, new Path(file)).getOrElse(""),
+          csvSep(options), csvQuote(options)).size
 
       def rewrite(dir: String, desired: Int): Int = {
         val oldFiles = byDir(dir).map(_.url)
@@ -1428,7 +1442,7 @@ object Graft {
           !options.exists { case (k, v) =>
             k.equalsIgnoreCase("multiLine") && v.equalsIgnoreCase("true") }) {
         candidates.foreach { case (dir, _, _, _) =>
-          val counts = byDir(dir).map(p => p.url -> csvFirstLineFields(p.url))
+          val counts = byDir(dir).map(p => p.url -> csvFirstLineFieldCount(p.url))
           require(counts.map(_._2).distinct.size <= 1,
             s"csv files in $dir disagree on field count " +
               s"(${counts.map { case (f, n) => s"${new Path(f).getName}=$n" }

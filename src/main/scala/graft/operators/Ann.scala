@@ -1343,8 +1343,8 @@ object Ann {
 
   /** The pre-r20 join-chain MMR — kept as the fallback for id types whose
     * Catalyst ordering the grouped kernel does not replicate. Semantics
-    * identical to [[mmrRerank]]; cost k rounds of joins with per-round
-    * persist + count + RDD barrier. */
+    * identical to [[mmrRerank]]; cost k rounds of joins, each cut by
+    * [[Generations.cut]]. */
   private def mmrRerankBarrier(
       candidates: DataFrame,
       queryCol: String,
@@ -1355,28 +1355,21 @@ object Ann {
       lambda: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.storage.StorageLevel
-    val spark = candidates.sparkSession
     // Composing k rounds as one lineage would re-plan the candidates
     // subplan O(3^k) times (each round reads it via anti-join, sim-join
     // and union) — the connectedComponents idiom instead: persist the
-    // inputs once, materialize each round, and cut the lineage with an
-    // RDD barrier so round i's plan is flat over round i-1's result.
+    // inputs once and cut every round ([[Generations.cut]]) so round i's
+    // plan is flat over round i-1's result.
     val cand = candidates.select(
         col(queryCol).as("__q"), col(idCol).as("__id"),
         col(vecCol).as("__v"), col(relCol).cast("double").as("__rel"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val rank1 = Window.partitionBy(col("__q"))
       .orderBy(desc("__score"), col("__id"))
-    def barrier(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
-    var retained: Option[DataFrame] = None
-    var selectedP = cand.withColumn("__score", col("__rel"))
+    val gens = new Generations(Seq(cand))
+    var selected = gens.cut(cand.withColumn("__score", col("__rel"))
       .withColumn("__rn", row_number().over(rank1)).filter(col("__rn") === 1)
-      .select(col("__q"), col("__id"), col("__v"), lit(1).as("step"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    selectedP.count()
-    var selected = barrier(selectedP)
-    retained = Some(selectedP)
+      .select(col("__q"), col("__id"), col("__v"), lit(1).as("step")))
     for (i <- 2 to k) {
       val picked = selected.select(
         col("__q").as("__sq"), col("__id").as("__sid"), col("__v").as("__sv"))
@@ -1392,18 +1385,12 @@ object Ann {
           lit(lambda) * col("__rel") - lit(1.0 - lambda) * col("__msim"))
         .withColumn("__rn", row_number().over(rank1)).filter(col("__rn") === 1)
         .select(col("__q"), col("__id"), col("__v"), lit(i).as("step"))
-      val nextP = selected.unionByName(pick)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      nextP.count() // materialize while the previous round's cache lives
-      retained.foreach(_.unpersist(false))
-      retained = Some(nextP)
-      selected = barrier(nextP)
+      selected = gens.cut(selected.unionByName(pick))
     }
     // the final round's cache (and the candidate cache) back the returned
     // frame; release both after the caller's first completed action
-    CacheRelease.afterFirstAction(
+    gens.releaseAfterFirstAction(
       selected.select(col("__q").as(queryCol), col("__id").as(idCol),
-        col("step")),
-      Seq(cand) ++ retained.toSeq)
+        col("step")))
   }
 }

@@ -1,14 +1,11 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicBoolean
-
 import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.slf4j.LoggerFactory
 
 import graft.functions.TextFunctions
@@ -191,7 +188,7 @@ object Dedup {
     * twice. The analyzer allows the duplicated observe node because both
     * occurrences carry the same name over the same canonicalized subtree.
     * Metrics (rows that were in over-cap buckets + max bucket size) are
-    * logged by [[armLshListener]] after the first action — caps are never
+    * logged by [[capWarning]] after the first action — caps are never
     * silent. */
   private def capBuckets(buckets: DataFrame, cap: Int,
       metricName: String): DataFrame =
@@ -203,44 +200,18 @@ object Dedup {
         max(col("__bucket_n")).as("max_bucket_size"))
       .filter(col("__bucket_n") <= cap).drop("__bucket_n")
 
-  /** One-shot QueryExecutionListener armed on `result`'s session: after the
-    * first completed action whose plan contains `result`, log the LSH-cap
-    * metric if any bucket was dropped, unpersist `release`, and unregister.
-    * Keeps operators fully lazy while guaranteeing a long-lived session
-    * calling them repeatedly accumulates no cached frames. If a second
-    * action races the release it may recompute (or briefly reuse) the
-    * cache — both are correct; only the first action is guaranteed the
-    * cached plan. */
-  private def armLshListener(result: DataFrame, metricName: String, cap: Int,
-      release: Seq[DataFrame]): DataFrame = {
-    val spark = result.sparkSession
-    val key = result.queryExecution.analyzed.canonicalized
-    val listener = new QueryExecutionListener {
-      private val done = new AtomicBoolean(false)
-      private def maybeRelease(qe: QueryExecution): Unit = {
-        val uses = try qe.analyzed.exists(_.canonicalized == key)
-          catch { case _: Throwable => false }
-        if (uses && done.compareAndSet(false, true)) {
-          qe.observedMetrics.get(metricName).foreach { m =>
-            val dropped = Option(m.get(0)).fold(0L)(_.toString.toLong)
-            val maxB = Option(m.get(1)).fold(0L)(_.toString.toLong)
-            if (dropped > 0)
-              log.warn(s"[graft] $metricName: dropped $dropped bucket-rows in " +
-                s"buckets over cap=$cap (max bucket size seen: $maxB); " +
-                "near-duplicates confined to dropped buckets are not candidates")
-          }
-          release.foreach(_.unpersist(false))
-          spark.listenerManager.unregister(this)
-        }
-      }
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = maybeRelease(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = maybeRelease(qe)
+  /** The bucket-cap warning a capped operator passes to
+    * [[CacheRelease.afterFirstAction]]: after the first completed action on
+    * its result, log the [[capBuckets]] metric if any bucket was dropped. */
+  private def capWarning(metricName: String, cap: Int): QueryExecution => Unit =
+    qe => qe.observedMetrics.get(metricName).foreach { m =>
+      val dropped = Option(m.get(0)).fold(0L)(_.toString.toLong)
+      val maxB = Option(m.get(1)).fold(0L)(_.toString.toLong)
+      if (dropped > 0)
+        log.warn(s"[graft] $metricName: dropped $dropped bucket-rows in " +
+          s"buckets over cap=$cap (max bucket size seen: $maxB); " +
+          "near-duplicates confined to dropped buckets are not candidates")
     }
-    spark.listenerManager.register(listener)
-    result
-  }
 
   /** Pick rowsPerBand for a target jaccard threshold: the LSH S-curve's
     * steepest point sits near (1/b)^(1/r) with b = numHashes/r bands, so we
@@ -281,10 +252,11 @@ object Dedup {
     *    measured 1.3s encode vs 3×0.2s recompute at sf0.1, and at 100 TB
     *    the cache write/read IO matches the re-scan IO it saves;
     *  - true: persist MEMORY_AND_DISK, released after the first completed
-    *    action (see [[armLshListener]]) — prefer when the source scan is
-    *    the expensive part (slow object store, heavy upstream transforms),
-    *    and REQUIRED when `df`'s lineage is nondeterministic (rand()-derived
-    *    columns, nondeterministic UDFs, changing source, …): with recompute,
+    *    action (see [[CacheRelease.afterFirstAction]]) — prefer when the
+    *    source scan is the expensive part (slow object store, heavy
+    *    upstream transforms), and REQUIRED when `df`'s lineage is
+    *    nondeterministic (rand()-derived columns, nondeterministic UDFs,
+    *    changing source, …): with recompute,
     *    the three consumers re-execute the input independently and an
     *    unstable input would bucket signatures against one snapshot but
     *    verify shingles against another — persist pins a single snapshot for
@@ -352,8 +324,9 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 
-    armLshListener(verified, "graft_lsh_minhash", maxBucketSize,
-      if (persistShingles || !inputDeterministic) Seq(withHashes) else Nil)
+    CacheRelease.afterFirstAction(verified,
+      if (persistShingles || !inputDeterministic) Seq(withHashes) else Nil,
+      capWarning("graft_lsh_minhash", maxBucketSize))
   }
 
   /** Greedy dedup from a pair list: drop every id that pairs with a smaller
@@ -415,26 +388,25 @@ object Dedup {
     * Algorithm: min-label propagation with per-round path compression
     * (comp := comp(comp)) — the pointer-jumping step makes convergence
     * O(log diameter) rounds rather than O(diameter), the property that
-    * matters when a 100 TB corpus chains long near-dup runs. Each round
-    * materializes its label table and re-enters the plan through a
-    * LogicalRDD barrier: the round's self-join references its input twice,
-    * so WITHOUT the barrier the logical plan doubles every round
-    * (exponential analysis/codegen cost); with it each round's plan is
-    * O(1) and the persisted RDD bounds recompute. The previous round's
-    * cache is released only after the next one is materialized. */
+    * matters when a 100 TB corpus chains long near-dup runs. Every round
+    * cuts ([[Generations.cut]]: persist, one action, LogicalRDD barrier):
+    * the round's self-join references its input twice, so WITHOUT the
+    * barrier the logical plan doubles every round (exponential
+    * analysis/codegen cost); with it each round's plan is O(1) and the
+    * persisted RDD bounds recompute. The previous round's cache is
+    * released only after the next one is materialized. */
   def connectedComponents(
       pairs: DataFrame,
       idA: String = "id_a",
       idB: String = "id_b",
       maxIter: Int = 25): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val spark = pairs.sparkSession
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val gens = new Generations(Seq(edges))
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("comp"))
-    var retained: Option[DataFrame] = None // persisted frame backing `labels`
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -443,29 +415,24 @@ object Dedup {
         .groupBy(col("dst").as("id")).agg(min("comp").as("nbr"))
       val stepped = labels.join(prop, Seq("id"), "left")
         .select(col("id"),
-          least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"))
+          least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"),
+          col("comp").as("__old"))
       // path compression: follow the label one hop (labels are node ids, so
-      // the inner self-join is total)
-      val persisted = stepped
+      // the inner self-join is total); the round's one action counts the
+      // labels that changed against `__old`, the label before the round
+      val (next, changed) = gens.cut(stepped
         .join(stepped.select(col("id").as("comp"), col("comp").as("comp2")), Seq("comp"))
-        .select(col("id"), col("comp2").as("comp"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      persisted.count() // materialize while the previous round's cache lives
-      val next = spark.createDataFrame(persisted.rdd, persisted.schema) // barrier
-      val changed = next
-        .join(labels.withColumnRenamed("comp", "old"), "id")
-        .filter(col("comp") =!= col("old")).limit(1).count() > 0
-      retained.foreach(_.unpersist(false))
-      retained = Some(persisted)
-      labels = next
-      converged = !changed
+        .select(col("id"), col("comp2").as("comp"), col("__old")),
+        _.filter(col("comp") =!= col("__old")).count())
+      labels = next.select("id", "comp")
+      converged = changed == 0
       iter += 1
     }
-    edges.unpersist(false)
+    if (!converged) gens.release()
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    // the final round's cache backs the returned frame; release it after the
-    // caller's first action (same one-shot listener contract as minhashPairs)
-    retained.fold(labels)(p => armLshListener(labels, "graft_cc", 0, Seq(p)))
+    // the final round's cache backs the returned frame; release it (and the
+    // edges) after the caller's first action
+    gens.releaseAfterFirstAction(labels)
   }
 
   // ------------------------------------------------------------- simhash
@@ -565,7 +532,8 @@ object Dedup {
       .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-    armLshListener(pairs, metricName, maxBucketSize, Nil)
+    CacheRelease.afterFirstAction(pairs, Nil,
+      capWarning(metricName, maxBucketSize))
   }
 
   // --------------------------------------------------- embedding near-dup
@@ -593,7 +561,8 @@ object Dedup {
       .withColumn("cosine", Ann.cosine(col("vec_a"), col("vec_b")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
-    armLshListener(pairs, "graft_lsh_embedding", maxBucketSize, Nil)
+    CacheRelease.afterFirstAction(pairs, Nil,
+      capWarning("graft_lsh_embedding", maxBucketSize))
   }
 
   // ------------------------------------------------------- semantic dedup
@@ -644,7 +613,8 @@ object Dedup {
       .join(reps, Seq("id"), "left")
       .select(col("id"), col("gr_cluster"),
         col("rep_id").isNull.as("kept"), col("rep_id"))
-    armLshListener(out, "graft_semdedup", maxClusterSize, Nil)
+    CacheRelease.afterFirstAction(out, Nil,
+      capWarning("graft_semdedup", maxClusterSize))
   }
 
   /** Incremental [[semDedup]]: verdicts for an APPENDED batch without
@@ -723,7 +693,8 @@ object Dedup {
       .join(reps, Seq("id"), "left")
       .select(col("id"), col("gr_cluster"),
         col("rep_id").isNull.as("kept"), col("rep_id"))
-    armLshListener(out, "graft_semdedup_append", maxClusterSize, Seq(batch))
+    CacheRelease.afterFirstAction(out, Seq(batch),
+      capWarning("graft_semdedup_append", maxClusterSize))
   }
 
   /** Persist-ready minhash index of a corpus: (id, shingle_set, sig).
@@ -1062,8 +1033,9 @@ object Dedup {
         graft.functions.SortedJaccardExpr(col("set_a"), col("set_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    armLshListener(verified, "graft_lsh_incremental", maxBucketSize,
-      if (planIsDeterministic(newDocs)) Nil else Seq(newIdx))
+    CacheRelease.afterFirstAction(verified,
+      if (planIsDeterministic(newDocs)) Nil else Seq(newIdx),
+      capWarning("graft_lsh_incremental", maxBucketSize))
   }
 
   /** The ingest gate built on [[minhashPairsAgainst]]: keep only new-batch
@@ -1139,8 +1111,8 @@ object Dedup {
     * The per-doc span frame feeds BOTH the `n_spans` projection and the
     * span-key aggregate, so with `persistSpans=true` (default) it is
     * persisted MEMORY_AND_DISK inside the operator and released after
-    * the first completed action ([[armLshListener]]): the corpus is
-    * scanned and tokenized exactly once, and both branches see one
+    * the first completed action ([[CacheRelease.afterFirstAction]]): the
+    * corpus is scanned and tokenized exactly once, and both branches see one
     * pinned snapshot (a nondeterministic input lineage cannot diverge
     * between them). `persistSpans=false` trades storage-memory pressure
     * for a second scan+tokenize pass — only sensible when executor
@@ -1212,7 +1184,7 @@ object Dedup {
         (col("n_spans") - coalesce(col("__n_uniq"), lit(0L))).as("n_shared"))
       .withColumn("share_ratio",
         col("n_shared").cast("double") / col("n_spans"))
-    if (doPersist) armLshListener(result, "graft_span_stats", 0, Seq(perDoc))
+    if (doPersist) CacheRelease.afterFirstAction(result, Seq(perDoc))
     else result
   }
 
@@ -1296,7 +1268,7 @@ object Dedup {
         coalesce(col("text_clean"), lit("")).as("text_clean"),
         col("n_chunks"),
         (col("n_chunks") - coalesce(col("__n_kept"), lit(0L))).as("n_removed"))
-    armLshListener(result, "graft_strip_chunks", 0, Seq(perDoc))
+    CacheRelease.afterFirstAction(result, Seq(perDoc))
   }
 
   /** Keep-FIRST exact chunk dedup — the C4/line-dedup semantic
@@ -1365,7 +1337,7 @@ object Dedup {
         coalesce(col("text_clean"), lit("")).as("text_clean"),
         col("n_chunks"),
         (col("n_chunks") - coalesce(col("__n_kept"), lit(0L))).as("n_removed"))
-    armLshListener(result, "graft_keepfirst_chunks", 0, Seq(perDoc))
+    CacheRelease.afterFirstAction(result, Seq(perDoc))
   }
 
   /** Cross-document repeated-SPAN dedup (the ExactSubstr recipe of Lee et
@@ -1436,7 +1408,7 @@ object Dedup {
         col("__r").getField("text_clean").as("text_clean"),
         size(col("__w")).cast("long").as("n_words"),
         col("__r").getField("n_removed").cast("long").as("n_removed"))
-    CacheRelease.afterFirstAction(out, Seq(perDoc), _ => ())
+    CacheRelease.afterFirstAction(out, Seq(perDoc))
   }
 
   /** Multi-SCALE repeated-span dedup — [[dropRepeatedSpans]] run at
@@ -1502,7 +1474,7 @@ object Dedup {
         col("__r").getField("text_clean").as("text_clean"),
         size(col("__w")).cast("long").as("n_words"),
         col("__r").getField("n_removed").cast("long").as("n_removed"))
-    CacheRelease.afterFirstAction(out, Seq(perDoc), _ => ())
+    CacheRelease.afterFirstAction(out, Seq(perDoc))
   }
 
   /** Arbitrary-length EXACT substring dedup (Lee et al. 2022,
@@ -1580,7 +1552,7 @@ object Dedup {
         col("__r").getField("text_clean").as("text_clean"),
         size(col("__w")).cast("long").as("n_words"),
         col("__r").getField("n_removed").cast("long").as("n_removed"))
-    CacheRelease.afterFirstAction(out, Seq(perDoc), _ => ())
+    CacheRelease.afterFirstAction(out, Seq(perDoc))
   }
 
   /** Corpus version diff: `(id, status)` for every id in either corpus —

@@ -593,9 +593,10 @@ object Frontier {
     *
     * 100 TB shape: the walk is `maxHops` rounds of one equi-join of the
     * (shrinking) unresolved state against the redirect map — both
-    * redirect-wave-sized, NEVER corpus-sized — with the per-round
-    * persist + LogicalRDD barrier discipline ([[Graph.pageRank]]'s
-    * pattern) keeping each round's plan O(1). Loop detection rides a
+    * redirect-wave-sized, NEVER corpus-sized — composed into one plan and
+    * cut every [[Graph.FuseIterationLimit]] rounds as [[Graph.pageRank]]
+    * is, so the default walk is one Spark job and no plan is more than 8
+    * rounds deep. Loop detection rides a
     * per-row visited array bounded by maxHops+1 entries; no window, no
     * driver state, no collect. Real chains are ≤ 3–5 hops (RFC 9110
     * suggests clients cap around 5), so the default bound is 5. */
@@ -608,7 +609,6 @@ object Frontier {
     require(maxHops >= 1 && maxHops <= 32,
       s"maxHops must be in [1, 32], got $maxHops")
     import org.apache.spark.storage.StorageLevel
-    val spark = redirects.sparkSession
     val st = col(statusCol).cast("int")
     val rows = redirects.select(
         when(st.isin(301, 302, 307, 308), col(urlCol).cast("string"))
@@ -644,9 +644,8 @@ object Frontier {
       col("__perm").as("perm"),
       array(col("__src")).as("visited"),
       lit(null).cast("string").as("outcome"))
-    val fuse = maxHops <= Graph.fuseLimit
-    var retained: Option[DataFrame] = None
-    for (_ <- 1 to maxHops) {
+    val gens = new Generations(Seq(map))
+    for (i <- 1 to maxHops) {
       val open = col("outcome").isNull
       val resolvedC = open && col("__src").isNull
       val loopC = open && col("__src").isNotNull &&
@@ -656,9 +655,9 @@ object Frontier {
         (col("hops") + 1 > maxHops)
       val terminal = resolvedC || loopC || excC
       // state's output names (url/cur/hops/perm/visited/outcome) and map's
-      // (__src/__perm/__loc) are disjoint, so the fused path can join and
-      // select by bare name; state appears once per round (linear plan)
-      val stepped = state
+      // (__src/__perm/__loc) are disjoint, so the rounds join and select
+      // by bare name; state appears once per round (linear plan)
+      state = state
         .join(map, col("cur") === col("__src") && col("outcome").isNull,
           "left")
         .select(
@@ -678,21 +677,8 @@ object Frontier {
             .when(loopC, lit("loop"))
             .when(excC, lit("exceeded"))
             .otherwise(lit(null).cast("string")).as("outcome"))
-      if (fuse) {
-        // fused single-plan walk (r20 optimization round): maxHops ≤ 8
-        // composes the bounded-hop join rounds into ONE job — no
-        // per-round persist/count/barrier; see Graph.pageRank's fused path
-        state = stepped
-      } else {
-        val persisted = stepped.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.count() // materialize while the previous round's cache lives
-        val barrier = spark.createDataFrame(persisted.rdd, persisted.schema)
-        retained.foreach(_.unpersist(false))
-        retained = Some(persisted)
-        state = barrier
-      }
+      if (Graph.cutsAfter(i, maxHops)) state = gens.cut(state)
     }
-    if (!fuse) map.unpersist(false)
     // maxHops rounds terminate every row (hops caps at maxHops, and a
     // capped row terminates the next round) — the guard is defensive
     val result = state.select(
@@ -703,7 +689,7 @@ object Frontier {
       col("hops"),
       (col("outcome") === "resolved" && col("perm")).as("permanent"),
       col("outcome"))
-    if (fuse) CacheRelease.afterFirstAction(result, Seq(map)) else result
+    gens.releaseAfterFirstAction(result)
   }
 
   /** Fold PERMANENT resolved redirects into a url-keyed table — the
@@ -761,8 +747,9 @@ object Frontier {
     *
     * 100 TB shape: pointer doubling — ceil(log2(maxChain)) rounds of
     * one equi-join of the permanent-moves map against ITSELF
-    * (moves-sized, never corpus-sized), with the per-round persist +
-    * LogicalRDD barrier discipline keeping each round's plan O(1).
+    * (moves-sized, never corpus-sized); every round cuts
+    * ([[Generations.cut]]: persist, one action, LogicalRDD barrier),
+    * keeping each round's plan O(1).
     * EVERY intermediate cache is released before return and the
     * result is materialized via an eager localCheckpoint (lineage
     * cut, blocks freed by the context cleaner once the frame is
@@ -775,8 +762,6 @@ object Frontier {
       maxChain: Int = 32): DataFrame = {
     require(maxChain >= 2 && maxChain <= 1024,
       s"maxChain must be in [2, 1024], got $maxChain")
-    import org.apache.spark.storage.StorageLevel
-    val spark = moves.sparkSession
     val isPerm = col("outcome") === "resolved" && col("permanent")
     // ONE url-keyed aggregation builds the deduped map AND the
     // divergent-target refusal (r21 optimization round, guide §2.4): the
@@ -789,7 +774,8 @@ object Frontier {
     // cannot fold it below the aggregation. A null url is dropped first:
     // the url-keyed groupBy would keep it as a group of its own, where the
     // join formulation's inner equi-join dropped it.
-    var state = moves.filter(isPerm && col("url").isNotNull)
+    val gens = new Generations(Nil)
+    var state = gens.cut(moves.filter(isPerm && col("url").isNotNull)
       .groupBy("url")
       .agg(collect_set(struct(col("final_url"), col("hops"))).as("__fs"))
       .select(
@@ -797,10 +783,7 @@ object Frontier {
           lit("compactRedirectMoves: conflicting permanent targets for "),
           col("url")))).otherwise(col("url")).as("url"),
         col("__fs").getItem(0).getField("final_url").as("final_url"),
-        col("__fs").getItem(0).getField("hops").as("hops"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    state.count()
-    var retained: DataFrame = state
+        col("__fs").getItem(0).getField("hops").as("hops")))
     val rounds = 32 - Integer.numberOfLeadingZeros(maxChain - 1) // ceil(log2)
     // NOTE (r20 optimization round): the fused single-plan treatment that
     // sped up pageRank/trustRank/resolveRedirects was tried here and
@@ -824,23 +807,17 @@ object Frontier {
       round += 1
       val hop = state.select(col("url").as("__src"),
         col("final_url").as("__dst"), col("hops").as("__h"))
-      val stepped = state
+      // the round's one action materializes it while the previous round's
+      // cache lives AND reads the moved-row count
+      val (stepped, movedN) = gens.cut(state
         .join(hop, col("final_url") === col("__src"), "left")
         .select(col("url"),
           coalesce(col("__dst"), col("final_url")).as("final_url"),
           (col("hops") + coalesce(col("__h"), lit(0L))).as("hops"),
-          col("__dst").isNotNull.as("__moved"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // materialize while the previous round's cache lives AND read the
-      // moved-row count from the same single job
-      val movedN = stepped
-        .agg(coalesce(sum(when(col("__moved"), 1L).otherwise(0L)), lit(0L)))
-        .head.getLong(0)
-      val next = stepped.select("url", "final_url", "hops")
-      val barrier = spark.createDataFrame(next.rdd, next.schema)
-      retained.unpersist(false)
-      retained = stepped
-      state = barrier
+          col("__dst").isNotNull.as("__moved")),
+        _.agg(coalesce(sum(when(col("__moved"), 1L).otherwise(0L)), lit(0L)))
+          .head.getLong(0))
+      state = stepped.select("url", "final_url", "hops")
       converged = movedN == 0L
     }
     // after ceil(log2(maxChain)) doubling rounds every chain of length
@@ -865,7 +842,7 @@ object Frontier {
     // later action
     val result = compacted.unionByName(moves.filter(!isPerm))
       .localCheckpoint(true)
-    retained.unpersist(false)
+    gens.release()
     result
   }
 

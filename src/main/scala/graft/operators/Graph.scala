@@ -13,20 +13,19 @@ object Graph {
   /** Rank scale: ranks are carried as integer parts-per-billion. */
   val RankScale = 1000000000L
 
-  /** Walks of at most this many iterations compose into ONE fused plan
-    * (one Spark job, stages pipelining across iterations); longer walks
-    * keep the per-round persist + count + LogicalRDD-barrier discipline
-    * that bounds lineage depth. 8 covers every declared gate (all use 5)
-    * while keeping the fused plan ~24 joins deep at worst — well inside
-    * Catalyst's comfort zone. */
+  /** A walk composes up to this many rounds into ONE plan (one Spark job,
+    * stages pipelining across rounds), then cuts: it persists the round's
+    * ranks, counts them, and re-enters through a LogicalRDD barrier
+    * ([[Generations.cut]]) — after every `FuseIterationLimit`-th round
+    * that more rounds follow. A walk of n rounds cuts ⌈n/8⌉−1 times, so a
+    * walk of ≤ 8 rounds (every declared gate uses 5) is one fused plan,
+    * and no plan grows past ~24 joins deep — well inside Catalyst's
+    * comfort zone. */
   val FuseIterationLimit = 8
 
-  /** Test hook: force the barrier path (Some(0)) or another threshold so
-    * the fused/barrier equivalence is assertable on identical inputs.
-    * Production code never sets this. */
-  private[graft] var fuseLimitOverride: Option[Int] = None
-  private[graft] def fuseLimit: Int =
-    fuseLimitOverride.getOrElse(FuseIterationLimit)
+  /** Round `i` of a walk's rounds is followed by a cut. */
+  private[operators] def cutsAfter(i: Int, rounds: Int): Boolean =
+    i % FuseIterationLimit == 0 && i < rounds
 
   /** Fixed-iteration PageRank (Page et al. 1999) over an edge list, in
     * EXACT fixed-point arithmetic: ranks are integer parts-per-billion
@@ -51,10 +50,10 @@ object Graph {
     * — each iteration shuffles only the rank table (|V| rows, two longs)
     * to the edges' existing partitioning, aggregates contributions by
     * `dst` (partial aggregation map-side), and left-joins back to the node
-    * set for the teleport term. Each iteration's rank table is persisted
-    * and the previous one released, so lineage stays O(1) deep in cached
-    * terms; a 100-iteration production run would additionally checkpoint
-    * every ~10 iterations to truncate the logical plan.
+    * set for the teleport term. Rounds compose into one plan, cut every
+    * [[FuseIterationLimit]] rounds, so no plan is more than 8 rounds deep
+    * and at most one rank generation is cached; every cache is released
+    * after the result's first completed action.
     *
     * Returns (node, rank_ppb) — divide by [[RankScale]] for a double rank.
     */
@@ -67,7 +66,6 @@ object Graph {
     require(iterations >= 1, "iterations must be >= 1")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0, 100], got $dampingPct")
-    val spark = edges.sparkSession
     // e is persisted: BOTH eo (its distinct side and its outdeg side) and
     // the node set derive from it — uncached, the raw edge table is
     // scanned + distinct'd twice (r20 optimization round, guide §2.4:
@@ -88,68 +86,37 @@ object Graph {
     require(n > 0, "empty edge list")
     val teleport = (RankScale * (100 - dampingPct) / 100) / n
 
+    val gens = new Generations(Seq(e, eo, nodes))
     var ranks = nodes.select(col("node"), lit(RankScale / n).as("rank_ppb"))
-    if (iterations <= fuseLimit) {
-      // FUSED path (r20 optimization round, guide §§1.2/2.6): a small fixed
-      // iteration count composes into ONE plan and ONE job — no per-round
-      // persist/count/barrier, so the walk pays one scheduling round trip
-      // instead of `iterations` sequential ones, and iteration i+1's stages
-      // pipeline behind i's inside a single DAG. ranks_{i-1} appears exactly
-      // once in ranks_i's plan, so the composed plan grows LINEARLY with
-      // iterations (contrast mmrRerank's O(3^k), which keeps its barriers).
-      // Joins are expressed over disjoint output column names (not
-      // df("col") refs): the fused right side carries the node set's
-      // lineage, and name-level resolution is what stays unambiguous.
-      for (_ <- 1 to iterations) {
-        val contrib = eo
-          .join(ranks.select(col("node").as("__rn"), col("rank_ppb")),
-            col("src") === col("__rn"))
-          .select(col("dst"), expr("rank_ppb DIV outdeg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("in_ppb"))
-        ranks = nodes
-          .join(contrib.select(col("dst").as("__cd"), col("in_ppb")),
-            col("node") === col("__cd"), "left")
-          .select(col("node"),
-            (lit(teleport) +
-              expr(s"(COALESCE(in_ppb, 0L) * $dampingPct) DIV 100"))
-              .as("rank_ppb"))
-      }
-      // caches release after the caller's first completed action — the
-      // fused plan still references e/eo/nodes, so an eager unpersist here
-      // would recompute the edge prep once per iteration
-      return CacheRelease.afterFirstAction(ranks, Seq(e, eo, nodes))
-    }
-    var retained: Option[DataFrame] = None // persisted frame backing `ranks`
-    for (_ <- 1 to iterations) {
+    // One body for every length (r20 optimization round):
+    // rounds compose into one plan and one job — no per-round
+    // persist/count/barrier, so the walk pays one scheduling round trip
+    // per FuseIterationLimit rounds, and round i+1's stages pipeline
+    // behind i's inside a single DAG. ranks_{i-1} appears exactly once in
+    // ranks_i's plan, so the composed plan grows LINEARLY with rounds
+    // (contrast mmrRerank's O(3^k), which cuts every round). Joins are
+    // expressed over disjoint output column names (not df("col") refs):
+    // the right side carries the node set's lineage, and name-level
+    // resolution is what stays unambiguous.
+    for (i <- 1 to iterations) {
       val contrib = eo
-        .join(ranks, eo("src") === ranks("node"))
+        .join(ranks.select(col("node").as("__rn"), col("rank_ppb")),
+          col("src") === col("__rn"))
         .select(col("dst"), expr("rank_ppb DIV outdeg").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("in_ppb"))
-      val next = nodes
-        .join(contrib, nodes("node") === contrib("dst"), "left")
+      ranks = nodes
+        .join(contrib.select(col("dst").as("__cd"), col("in_ppb")),
+          col("node") === col("__cd"), "left")
         .select(col("node"),
           (lit(teleport) +
             expr(s"(COALESCE(in_ppb, 0L) * $dampingPct) DIV 100"))
             .as("rank_ppb"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count() // materialize while the previous generation's cache lives
-      // LogicalRDD barrier (connectedComponents' pattern): each iteration's
-      // plan references nodes, eo AND the previous ranks — without the
-      // barrier the logical plan compounds every round and analysis/codegen
-      // time, not the data, dominates; with it each round's plan is O(1)
-      val barrier = spark.createDataFrame(next.rdd, next.schema)
-      retained.foreach(_.unpersist(false))
-      retained = Some(next)
-      ranks = barrier
+      if (cutsAfter(i, iterations)) ranks = gens.cut(ranks)
     }
-    // the returned frame is a pure LogicalRDD over the last generation's
-    // cache: nothing references eo/nodes anymore
-    e.unpersist(false)
-    eo.unpersist(false)
-    nodes.unpersist(false)
-    // the final generation's cache backs the returned frame (|V| rows of two
-    // longs — the cheapest cache in the pipeline); left to session eviction
-    ranks
+    // caches release after the caller's first completed action — the
+    // rounds after the last cut still reference e/eo/nodes, so an eager
+    // unpersist here would recompute the edge prep once per round
+    gens.releaseAfterFirstAction(ranks)
   }
 
   /** TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004): PageRank
@@ -160,8 +127,8 @@ object Graph {
     * [[pageRank]]'s popularity. Same integer-ppb arithmetic (seed init
     * `RankScale div |seeds|`, seed-only teleport
     * `(RankScale·(100−d) div 100) div |seeds|`, contributions
-    * `rank div outdeg` damped `·d div 100`), same per-iteration
-    * LogicalRDD barrier + cache rotation, so any engine replays it
+    * `rank div outdeg` damped `·d div 100`), same one-plan rounds cut
+    * every [[FuseIterationLimit]] rounds, so any engine replays it
     * exactly. Seeds must be graph nodes — an unknown seed would
     * silently strand trust mass, so it is refused loudly. Returns
     * `(node, trust_ppb)`. */
@@ -176,7 +143,6 @@ object Graph {
     require(iterations >= 1, "iterations must be >= 1")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0, 100], got $dampingPct")
-    val spark = edges.sparkSession
     // e persisted for the same reason as pageRank's (one raw-edge pass)
     val e = edges
       .select(col(srcCol).cast("long").as("src"),
@@ -214,51 +180,26 @@ object Graph {
       .select(col("node"),
         when(col("__seed").isNotNull, lit(RankScale / nSeeds))
           .otherwise(lit(0L)).as("trust_ppb"))
-    if (iterations <= fuseLimit) {
-      // fused single-plan walk — see pageRank's fused path for the
-      // rationale; plan growth is linear in iterations here too
-      for (_ <- 1 to iterations) {
-        val contrib = eo
-          .join(ranks.select(col("node").as("__rn"), col("trust_ppb")),
-            col("src") === col("__rn"))
-          .select(col("dst"), expr("trust_ppb DIV outdeg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("in_ppb"))
-        ranks = nodes
-          .join(contrib.select(col("dst").as("__cd"), col("in_ppb")),
-            col("node") === col("__cd"), "left")
-          .join(seedFlag, Seq("node"), "left")
-          .select(col("node"),
-            (when(col("__seed").isNotNull, lit(teleport)).otherwise(lit(0L)) +
-              expr(s"(COALESCE(in_ppb, 0L) * $dampingPct) DIV 100"))
-              .as("trust_ppb"))
-      }
-      return CacheRelease.afterFirstAction(ranks, Seq(e, eo, nodes, sd))
-    }
-    var retained: Option[DataFrame] = None
-    for (_ <- 1 to iterations) {
+    val gens = new Generations(Seq(e, eo, nodes, sd))
+    // pageRank's one body and cut cadence; plan growth is linear in
+    // rounds here too
+    for (i <- 1 to iterations) {
       val contrib = eo
-        .join(ranks, eo("src") === ranks("node"))
+        .join(ranks.select(col("node").as("__rn"), col("trust_ppb")),
+          col("src") === col("__rn"))
         .select(col("dst"), expr("trust_ppb DIV outdeg").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("in_ppb"))
-      val next = nodes
-        .join(contrib, nodes("node") === contrib("dst"), "left")
+      ranks = nodes
+        .join(contrib.select(col("dst").as("__cd"), col("in_ppb")),
+          col("node") === col("__cd"), "left")
         .join(seedFlag, Seq("node"), "left")
         .select(col("node"),
           (when(col("__seed").isNotNull, lit(teleport)).otherwise(lit(0L)) +
             expr(s"(COALESCE(in_ppb, 0L) * $dampingPct) DIV 100"))
             .as("trust_ppb"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      val barrier = spark.createDataFrame(next.rdd, next.schema)
-      retained.foreach(_.unpersist(false))
-      retained = Some(next)
-      ranks = barrier
+      if (cutsAfter(i, iterations)) ranks = gens.cut(ranks)
     }
-    e.unpersist(false)
-    eo.unpersist(false)
-    nodes.unpersist(false)
-    sd.unpersist(false)
-    ranks
+    gens.releaseAfterFirstAction(ranks)
   }
 
   /** The k-core of an undirected simple graph: the maximal subgraph in
@@ -275,13 +216,13 @@ object Graph {
     * error).
     *
     * Spark shape: each round is ONE degree aggregation over the current
-    * edge set + two semi-joins back (u-side, v-side); the edge frame is
-    * persisted per generation with a LogicalRDD barrier (pageRank's
-    * pattern) so plans stay O(1) deep. Rounds are bounded by the peel
-    * depth — O(√m) worst case but single digits on real graphs — and
-    * the edge set only SHRINKS, so later rounds cost less. Convergence
-    * is detected by edge count (an action per round, like any
-    * iterate-to-fixpoint). */
+    * edge set + two semi-joins back (u-side, v-side); every round cuts
+    * ([[Generations.cut]]: persist, count, LogicalRDD barrier) because it
+    * reads the edge set three times, so plans stay O(1) deep. Rounds are
+    * bounded by the peel depth — O(√m) worst case but single digits on
+    * real graphs — and the edge set only SHRINKS, so later rounds cost
+    * less. Convergence is detected by edge count (the round's one action,
+    * like any iterate-to-fixpoint). */
   def kCore(
       edges: DataFrame,
       srcCol: String,
@@ -290,15 +231,12 @@ object Graph {
       maxIterations: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIterations >= 1, "maxIterations must be >= 1")
-    val spark = edges.sparkSession
-    var e = edges
+    val gens = new Generations(Nil)
+    var (e, nEdges) = gens.cut(edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var nEdges = e.count()
-    var retained: Option[DataFrame] = Some(e)
+      .distinct(), _.count())
     var rounds = 0
     var converged = nEdges == 0
     while (!converged && rounds < maxIterations) {
@@ -307,31 +245,27 @@ object Graph {
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select("node")
-      val next = e
+      val (next, n2) = gens.cut(e
         .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .select("u", "v")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n2 = next.count()
-      val barrier = spark.createDataFrame(next.rdd, next.schema)
-      retained.foreach(_.unpersist(false))
-      retained = Some(next)
+        .select("u", "v"), _.count())
       converged = n2 == nEdges
       nEdges = n2
-      e = barrier
+      e = next
       rounds += 1
     }
     // a silent non-core would be WRONG, not approximate: interior nodes
     // of a long path survive a truncated peel even though the true core
     // is empty — refuse rather than mislead
-    require(converged || nEdges == 0,
+    val peeled = converged || nEdges == 0
+    if (!peeled) gens.release()
+    require(peeled,
       s"kCore did not reach its fixpoint in $maxIterations rounds " +
         s"($nEdges edges still peeling) — raise maxIterations; a long-chain " +
         "graph peels O(diameter) rounds")
-    val core = e.select(col("u").as("node"))
+    gens.releaseAfterFirstAction(e.select(col("u").as("node"))
       .union(e.select(col("v").as("node")))
-      .distinct()
-    core
+      .distinct())
   }
 
   /** Bounded-hop BFS over an undirected edge list: every node reachable
@@ -341,8 +275,8 @@ object Graph {
     * frontier (not the visited set) to the adjacency list, anti-joins
     * what is already visited, and stops early when a frontier empties —
     * per-hop cost is proportional to the frontier's edge neighborhood,
-    * never the graph. Same per-generation persist + LogicalRDD barrier
-    * discipline as [[pageRank]]/[[kCore]]. */
+    * never the graph. Every hop cuts ([[Generations.cut]]) the frontier
+    * and the visited set, as [[kCore]] does, so plans stay O(1) deep. */
   def reachableFrom(
       edges: DataFrame,
       srcCol: String,
@@ -359,41 +293,33 @@ object Graph {
     val adj = e.union(e.select(col("b").as("a"), col("a").as("b")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var visited = sources.distinct.toDF("node")
-      .withColumn("hops", lit(0L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // two chains of generations, each holding ONE cached frame: the
+    // frontier (read by the next hop's expansion) and the visited set
+    // (read by its anti-join and union), so the call retains O(1) cached
+    // frames, not O(hops)
+    val frontiers = new Generations(Nil)
+    val visiteds = new Generations(Seq(adj))
+    var visited = sources.distinct.toDF("node").withColumn("hops", lit(0L))
     var frontier = visited
-    // cached frames superseded each hop (previous visited generation and
-    // previous frontier) — released as soon as the next generation is
-    // materialized, so the call retains O(1) cached frames, not O(hops)
-    var prevFrontier: Option[DataFrame] = None
     var hop = 0L
     var done = false
     while (!done && hop < maxHops) {
       hop += 1
-      val next = frontier.join(adj, frontier("node") === adj("a"))
+      val (next, n) = frontiers.cut(frontier.join(adj, col("node") === col("a"))
         .select(col("b").as("node"))
         .distinct()
         .join(visited, Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = next.count()
-      if (n == 0) { next.unpersist(false); done = true }
+        .withColumn("hops", lit(hop)), _.count())
+      if (n == 0) done = true
       else {
-        val merged = visited.unionByName(next)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        merged.count()
-        val barrier = spark.createDataFrame(merged.rdd, merged.schema)
-        visited.unpersist(false)
-        prevFrontier.foreach(_.unpersist(false))
-        prevFrontier = Some(next)
-        visited = merged
-        frontier = spark.createDataFrame(next.rdd, next.schema)
+        visited = visiteds.cut(visited.unionByName(next))
+        frontier = next
       }
     }
-    prevFrontier.foreach(_.unpersist(false))
-    adj.unpersist(false)
-    spark.createDataFrame(visited.rdd, visited.schema)
+    // the result is the visited barrier (or the sources, before any hop):
+    // it reads no frontier
+    frontiers.release()
+    visiteds.releaseAfterFirstAction(visited)
   }
 
   /** Bounded single-source shortest paths with EXACT integer edge
@@ -413,9 +339,10 @@ object Graph {
     * Spark shape: each round is one join of the current distance table
     * against the (persisted) adjacency list + one min-aggregation —
     * shuffles keyed on node id; the distance table holds only REACHED
-    * nodes, so early rounds are frontier-sized, not graph-sized. The
-    * reachableFrom cache discipline: O(1) cached generations, lineage
-    * cut per round with an RDD barrier. Returns (node, dist). */
+    * nodes, so early rounds are frontier-sized, not graph-sized. Every
+    * round cuts ([[Generations.cut]]), its one action counting the nodes
+    * it improved: O(1) cached generations and plan depth. Returns
+    * (node, dist). */
   def boundedShortestPaths(
       edges: DataFrame,
       srcCol: String,
@@ -440,35 +367,27 @@ object Graph {
         lit("boundedShortestPaths: negative edge weight")).cast("long"),
         lit(0L)))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = sources.distinct.toDF("node")
-      .withColumn("dist", lit(0L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    dist.count()
-    var cur = spark.createDataFrame(dist.rdd, dist.schema)
+    val gens = new Generations(Seq(adj))
+    var cur = sources.distinct.toDF("node").withColumn("dist", lit(0L))
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
       round += 1
-      val relaxed = cur.join(adj, cur("node") === adj("a"))
-        .select(col("b").as("node"), (cur("dist") + adj("w")).as("dist"))
-      val nextP = cur.unionByName(relaxed)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      nextP.count() // materialize while the previous round's cache lives
-      val next = spark.createDataFrame(nextP.rdd, nextP.schema)
-      val improved = next
-        .join(cur.withColumnRenamed("dist", "old"), Seq("node"), "left")
-        .filter(col("old").isNull || col("dist") < col("old"))
-        .limit(1).count() > 0
-      dist.unpersist(false)
-      dist = nextP
-      cur = next
-      done = !improved
+      val relaxed = cur.join(adj, col("node") === col("a"))
+        .select(col("b").as("node"), (col("dist") + col("w")).as("dist"))
+      // the round's one action counts the nodes it improved: `__old` is
+      // the node's distance before the round (null when newly reached)
+      val (next, improved) = gens.cut(
+        cur.withColumn("__old", col("dist"))
+          .unionByName(relaxed.withColumn("__old", lit(null).cast("long")))
+          .groupBy("node").agg(min("dist").as("dist"), min("__old").as("__old")),
+        _.filter(col("__old").isNull || col("dist") < col("__old")).count())
+      cur = next.select("node", "dist")
+      done = improved == 0
     }
-    adj.unpersist(false)
     // the final round's cache backs the result; release it after the
     // caller's first completed action (the shared CacheRelease contract)
-    CacheRelease.afterFirstAction(cur, Seq(dist))
+    gens.releaseAfterFirstAction(cur)
   }
 
   /** Per-node triangle counts over an undirected simple graph (edge list
@@ -553,9 +472,9 @@ object Graph {
     * Spark shape: undirected edge frame built once, hash-partitioned,
     * persisted; each round shuffles only (node, label) messages and one
     * (node, label) count aggregation with map-side combine, then the
-    * rank-1 argmax (a WindowGroupLimit-prunable rank filter). Per-round
-    * persist + LogicalRDD barrier (pageRank's pattern) keeps plans O(1)
-    * deep. */
+    * rank-1 argmax (a WindowGroupLimit-prunable rank filter). Every
+    * round cuts ([[Generations.cut]]) because it reads the previous
+    * labels twice, so plans stay O(1) deep. */
   def labelPropagation(
       edges: DataFrame,
       srcCol: String,
@@ -565,7 +484,6 @@ object Graph {
       seedLabelCol: String,
       iterations: Int = 3): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val spark = edges.sparkSession
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
@@ -585,10 +503,10 @@ object Graph {
       .union(sd.select(col("node")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val gens = new Generations(Seq(und, nodes))
     var labels = nodes.join(sd, Seq("node"), "left")
       .select(col("node"), col("seed_label"),
         col("seed_label").as("label"))
-    var retained: Option[DataFrame] = None
     for (_ <- 1 to iterations) {
       val msgs = und
         .join(labels.filter(col("label").isNotNull)
@@ -602,18 +520,10 @@ object Graph {
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("node"), col("nl"))
-      val next = labels.join(pick, Seq("node"), "left")
+      labels = gens.cut(labels.join(pick, Seq("node"), "left")
         .select(col("node"), col("seed_label"),
-          coalesce(col("seed_label"), col("nl"), col("label")).as("label"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      val barrier = spark.createDataFrame(next.rdd, next.schema)
-      retained.foreach(_.unpersist(false))
-      retained = Some(next)
-      labels = barrier
+          coalesce(col("seed_label"), col("nl"), col("label")).as("label")))
     }
-    und.unpersist(false)
-    nodes.unpersist(false)
-    labels.select(col("node"), col("label"))
+    gens.releaseAfterFirstAction(labels.select(col("node"), col("label")))
   }
 }

@@ -1853,6 +1853,23 @@ class CompactionHardeningSpec extends SparkSpec {
     assert(s2.partitionsCompacted == 1)
   }
 
+  test("csv drift guard splits headers on the whole multi-character separator") {
+    // under sep "||" a lone '|' is data: both headers have two fields, so
+    // the dir compacts (a per-character count reads 3 and 4 and refuses)
+    val dir = tmpDir("compact_csv_multisep")
+    for ((name, body) <- Seq("f1.csv" -> "id||v\n1||x\n", "f2.csv" -> "id||v|w\n2||y\n")) {
+      val p = java.nio.file.Paths.get(dir, "p=a", name)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, body)
+    }
+    val opts = Map("header" -> "true", "sep" -> "||")
+    val stats = Graft.compactPartitionedTable(spark, dir, targetFileBytes = 1L << 30,
+      format = "csv", options = opts)
+    assert(stats.partitionsCompacted == 1)
+    assert(spark.read.options(opts).csv(dir + "/p=a").collect().map(_.getString(0))
+      .toSet == Set("1", "2"))
+  }
+
   test("json dirs straddling a column addition rewrite under the union schema") {
     val out = tmpDir("compact_json_evolve")
     Seq((1L, "a")).toDF("id", "p")

@@ -254,23 +254,41 @@ class ReadPathSpec extends SparkSpec {
 
   test("A8h: csv header probe honors quoted cells containing the separator") {
     import graft.api.Graft
-    assert(Graft.splitCsvHeader("\"last,first\",age", ",") == Seq("last,first", "age"))
-    assert(Graft.splitCsvHeader("a,\"b\"\"c\",d", ",") == Seq("a", "b\"c", "d"))
-    assert(Graft.splitCsvHeader("x;y;z", ";") == Seq("x", "y", "z"))
-    assert(Graft.splitCsvHeader(" a , b ", ",") == Seq("a", "b"))
+    assert(Graft.splitCsvHeader("\"last,first\",age", ",", '"') == Seq("last,first", "age"))
+    assert(Graft.splitCsvHeader("a,\"b\"\"c\",d", ",", '"') == Seq("a", "b\"c", "d"))
+    assert(Graft.splitCsvHeader("x;y;z", ";", '"') == Seq("x", "y", "z"))
+    assert(Graft.splitCsvHeader(" a , b ", ",", '"') == Seq("a", "b"))
     // multi-char separators split on the full string, not its first char
-    assert(Graft.splitCsvHeader("a||b||c", "||") == Seq("a", "b", "c"))
-    assert(Graft.splitCsvHeader("a|b||c", "||") == Seq("a|b", "c"))
-    assert(Graft.splitCsvHeader("\"a||b\"||c", "||") == Seq("a||b", "c"))
+    assert(Graft.splitCsvHeader("a||b||c", "||", '"') == Seq("a", "b", "c"))
+    assert(Graft.splitCsvHeader("a|b||c", "||", '"') == Seq("a|b", "c"))
+    assert(Graft.splitCsvHeader("\"a||b\"||c", "||", '"') == Seq("a||b", "c"))
     // a separator that BEGINS with a double quote splits rather than
     // opening a quoted cell (separator match precedes quote-open)
-    assert(Graft.splitCsvHeader("a\"|b\"|c", "\"|") == Seq("a", "b", "c"))
+    assert(Graft.splitCsvHeader("a\"|b\"|c", "\"|", '"') == Seq("a", "b", "c"))
+    // the quote option names the quote character
+    assert(Graft.splitCsvHeader("'a,b',c", ",", '\'') == Seq("a,b", "c"))
     val dir = tmpDir("a8h")
     writeFile(s"$dir/p=1/f.csv", "\"last,first\",age\n\"doe,jane\",40\n")
     // a requested quoted column must be SEEN by the probe, not mis-split
     val rich = Graft.readPartitionedTableRich(spark, dir,
       options = Map("header" -> "true"), columns = Seq("last,first"))
     assert(rich.failures.isEmpty, rich.failures.mkString(";"))
+  }
+
+  test("A8i: lazy-errors csv probe reads gzip files through their codec") {
+    val dir = tmpDir("a8i")
+    def gz(path: String, content: String): Unit = {
+      Files.createDirectories(Paths.get(path).getParent)
+      val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(path))
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    gz(s"$dir/p=1/f.csv.gz", "x,y\n1,a\n2,b\n")
+    gz(s"$dir/p=2/f.csv.gz", "x,y\n3,c\n")
+    val cols = Seq("x", "y")
+    val rich = Graft.readPartitionedTableRich(spark, dir, format = "csv", columns = cols)
+    assert(rich.failures.isEmpty, rich.failures.mkString(";"))
+    assert(rich.data.count() == 3)
+    assert(Graft.readPartitionedTable(spark, dir, format = "csv", columns = cols).count() == 3)
   }
 
   test("projection pushdown: columns option prunes data columns, keeps partitions") {
@@ -347,6 +365,16 @@ class ReadPathSpec extends SparkSpec {
     val (_, bigJobs) = jobsDuring(Graft.readPartitionedTable(spark, big))
     assert(smallJobs == bigJobs,
       s"build jobs grow with partitions: $smallJobs at 4, $bigJobs at 40")
+  }
+
+  test("mixed-format tree: a column one format types as string reads as string") {
+    val dir = tmpDir("mixed_clash")
+    writeFile(s"$dir/p=c/f.csv", "v\n1\n")
+    writeFile(s"$dir/p=j/f.json", """{"v":"abc"}""" + "\n")
+    val df = Graft.readPartitionedTable(spark, dir)
+    assert(df.schema("v").dataType == org.apache.spark.sql.types.StringType)
+    assert(df.select("p", "v").collect().map(r => (r.getString(0), r.getString(1)))
+      .toSet == Set(("c", "1"), ("j", "abc")))
   }
 
   test("mixed-format tree with xlsx: every row carries its partition values") {

@@ -57,6 +57,41 @@ abstract class SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Dataset actions (count, collect, write, …) completed while `body`
+    * runs, counted by a QueryExecutionListener — one per action however
+    * many jobs AQE splits it into. `Dataset.rdd` reports to the listener
+    * as an execution named "rdd" but runs no job, so it is not counted.
+    * Fenced as [[jobsDuring]] is: a fence action is recognised by its one
+    * output column's name. */
+  def actionsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val prefix = "graft_test_fence_"
+    val actions = new java.util.concurrent.atomic.AtomicInteger
+    val fences = new java.util.concurrent.LinkedBlockingQueue[String]
+    val listener = new QueryExecutionListener {
+      private def seen(funcName: String, qe: QueryExecution): Unit =
+        qe.analyzed.output.map(_.name) match {
+          case Seq(f) if f.startsWith(prefix) => fences.put(f.stripPrefix(prefix))
+          case _ => if (funcName != "rdd") actions.incrementAndGet()
+        }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen(f, qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(f, qe)
+    }
+    def fence(name: String): Unit = {
+      spark.sql(s"SELECT 1 AS $prefix$name").collect()
+      assert(fences.poll(60, java.util.concurrent.TimeUnit.SECONDS) == name)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      fence("open")
+      actions.set(0)
+      val out = body
+      fence("close")
+      (out, actions.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** Order-insensitive comparison: sorted rows of string-rendered values. */
   def canon(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
     val cols = df.columns.sorted.toSeq
