@@ -39,8 +39,8 @@ object Bench {
     "q35_concurrency", "as4_asof_nearest", "q34_bloom_join",
     "q44_resample", "t30_conversations", "t31_feature_hash",
     // round-14 join/iteration shapes: blocked fuzzy linkage, exact
-    // prefix-filtered set-similarity join, greedy MMR (persist+barrier
-    // rounds), fragment-bucketed interval-overlap join
+    // prefix-filtered set-similarity join, greedy MMR (one grouped
+    // kernel), fragment-bucketed interval-overlap join
     "q49_fuzzy_link", "d18_jaccard_join", "a11_mmr", "rj2_interval_join",
     // round-13: markup extraction (map-side state machine), per-cluster
     // NSW graph ANN (build + routed walk), incremental SemDeDup,

@@ -1161,44 +1161,34 @@ object Ann {
     * Greedy selection is inherently sequential in k but NOT in queries or
     * candidates — and a candidate list is by definition the OUTPUT of ANN
     * serving (topN per query), so one query's list is bounded and fits one
-    * task. The operator therefore runs as ONE grouped kernel (r20
-    * optimization round, guide §§1.2, 2.6): a single shuffle groups each
-    * query's candidates onto one task, which runs all k greedy rounds
-    * in memory with the IDENTICAL double arithmetic as the former
-    * join-chain formulation (sequential-fold cosine, λ·rel − (1−λ)·max,
-    * ties to the smaller id, SQL null semantics: null scores order last,
-    * null cosines are ignored by the max). The former formulation paid
-    * k rounds of (anti-join + equi-join + aggregate + window), each
-    * materialized behind a persist + count + RDD barrier — 2k sequential
-    * jobs and 2 cache lifecycles per call. `maxCandidatesPerQuery`
-    * REFUSES loudly (the nswBuild doctrine) if a "candidate list"
-    * arrives corpus-sized — the default (65536) is shortlist-scale so
-    * the refusal fires before one task buffers executor-threatening
-    * vectors, not after. The default used to be 1<<20 (1,048,576):
-    * a call with more than 65536 candidates for one query that passed
-    * under the old default now refuses; pass a larger cap explicitly to
-    * keep it. Inputs whose id OR query column is not
-    * integral/string fall back to the barrier formulation (kept
-    * verbatim): the kernel's id tiebreak must replicate Catalyst's
-    * ordering exactly, and its group key must be injective on the query
-    * values — pinned only for those types (binary keys are
-    * identity-hashed by JVM arrays, struct/array keys can collide on
-    * their rendering, and float/double split -0.0 from 0.0 where SQL
-    * grouping normalizes them).
+    * task. The operator therefore runs as ONE grouped kernel for every id
+    * and query type: Catalyst's own grouping and sort (one hash exchange
+    * on the query, then a sort on (query, id)) hand each query's
+    * candidates to one task in ascending id order, which runs all k
+    * greedy rounds in memory with the IDENTICAL double arithmetic as a
+    * SQL round-by-round replay (sequential-fold cosine, λ·rel − (1−λ)·max,
+    * ties to the earlier — smaller-id — candidate, SQL null semantics:
+    * null scores order last, null cosines are ignored by the max).
+    * `maxCandidatesPerQuery` REFUSES loudly (the nswBuild doctrine) if a
+    * "candidate list" arrives corpus-sized — the default (65536) is
+    * shortlist-scale so the refusal fires while one task buffers the
+    * list, before it holds executor-threatening vectors. The default
+    * used to be 1<<20 (1,048,576): a call with more than 65536
+    * candidates for one query that passed under the old default now
+    * refuses; pass a larger cap explicitly to keep it.
     *
-    * Degenerate-input contract (where the two formulations diverge, so
-    * both are OUT of contract): candidate ids must be non-null and
-    * (query, id) pairs unique — a null id is re-pickable every round in
-    * the join formulation but deduped by the kernel's picked-set, a
-    * null query value runs all k steps in the kernel but only step 1 in
-    * the join chain, and duplicate (query, id) rows are scored per-row
-    * by the kernel but max-merged by the join's groupBy. ANN serving
-    * output (the operator's input by definition) satisfies all three.
+    * Degenerate-input contract: query values group as SQL `GROUP BY`
+    * groups them (-0.0 with 0.0, NaNs together, binary by content, all
+    * nulls as one query); ties break to the smaller id in Catalyst's
+    * ascending order (nulls first, strings by UTF-8 bytes, binary by
+    * unsigned bytes); (query, id) pairs must be unique — duplicate rows
+    * are separate candidates, each pickable once. ANN serving output
+    * (the operator's input by definition) has unique pairs.
     *
-    * Ties break to the smaller id at every step, and λ defaults to 0.5
-    * (exact in IEEE), so selection is deterministic and replayable by any
-    * engine with the same double cosine — the a11 gate's DuckDB oracle
-    * replays all k rounds unrolled. Returns (queryCol, idCol, step 1..k).
+    * λ defaults to 0.5 (exact in IEEE), so selection is deterministic
+    * and replayable by any engine with the same double cosine — the a11
+    * gate's DuckDB oracle replays all k rounds unrolled. Returns
+    * (queryCol, idCol, step 1..k).
     */
   def mmrRerank(
       candidates: DataFrame,
@@ -1213,17 +1203,6 @@ object Ann {
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0,1], got $lambda")
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._
-    def kernelSafe(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType | StringType => true
-      case _ => false
-    }
-    val idType = candidates.schema(idCol).dataType
-    // the id gate pins the tiebreak ordering; the query gate pins group-key
-    // injectivity (String.valueOf is identity-based for binary, collides
-    // for struct/array renderings, and splits -0.0 from 0.0 for floats)
-    if (!kernelSafe(idType) || !kernelSafe(candidates.schema(queryCol).dataType))
-      return mmrRerankBarrier(candidates, queryCol, idCol, vecCol, relCol,
-        k, lambda)
     val proj = candidates.select(
       col(queryCol).as("__q"), col(idCol).as("__id"),
       col(vecCol).as("__v"), col(relCol).cast("double").as("__rel"))
@@ -1231,22 +1210,6 @@ object Ann {
       proj.schema("__q").copy(name = queryCol),
       proj.schema("__id").copy(name = idCol),
       StructField("step", IntegerType, nullable = false)))
-    // Catalyst asc ordering for the supported id types: nulls first,
-    // integrals numeric, strings by UTF8 binary (NOT java String order)
-    val idCmp: (Any, Any) => Int = idType match {
-      case StringType => (a, b) =>
-        org.apache.spark.unsafe.types.UTF8String
-          .fromString(a.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String
-            .fromString(b.asInstanceOf[String]))
-      case _ => (a, b) => java.lang.Long.compare(
-        a.asInstanceOf[Number].longValue(), b.asInstanceOf[Number].longValue())
-    }
-    val idCmpNull: (Any, Any) => Int = (a, b) =>
-      if (a == null && b == null) 0
-      else if (a == null) -1
-      else if (b == null) 1
-      else idCmp(a, b)
     val kk = k; val lam = lambda; val cap = maxCandidatesPerQuery
     // the sequential-fold cosine of graft.functions.CosineSimilarity,
     // bit-identical (float/int elements pre-cast to double — exact)
@@ -1270,44 +1233,46 @@ object Ann {
       case o => throw new IllegalArgumentException(
         s"mmrRerank: $vecCol must be an array column, got ${o.getClass}")
     }
-    proj.groupByKey { (r: Row) =>
-      if (r.isNullAt(0)) "" else "v" + String.valueOf(r.get(0))
-    }(Encoders.STRING).flatMapGroups { (_, it) =>
+    // Catalyst's grouping and sort: one exchange on __q, each group's
+    // candidates in ascending id order (nulls first)
+    val groups = proj.groupBy(col("__q")).as[Row, Row](
+      Encoders.row(StructType(Seq(proj.schema("__q")))), Encoders.row(proj.schema))
+    groups.flatMapSortedGroups(col("__id")) { (key, it) =>
       val rows = new scala.collection.mutable.ArrayBuffer[
-        (Any, Any, Array[Double], java.lang.Double)]()
-      var qVal: Any = null
+        (Any, Array[Double], java.lang.Double)]()
       for (r <- it) {
         require(rows.length < cap,
           s"mmrRerank: a query's candidate list exceeds " +
             s"maxCandidatesPerQuery=$cap — MMR is a RERANK of a bounded " +
             "shortlist; cut candidates upstream (ANN topN) rather than " +
             "raising the cap")
-        qVal = r.get(0)
-        rows += ((r.get(0), r.get(1), toVec(r.get(2)),
+        rows += ((r.get(1), toVec(r.get(2)),
           if (r.isNullAt(3)) null else java.lang.Double.valueOf(r.getDouble(3))))
       }
-      val pickedIds = new scala.collection.mutable.HashSet[Any]()
+      val picked = new Array[Boolean](rows.length)
       val pickedVecs = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
       val out = new scala.collection.mutable.ArrayBuffer[Row](kk)
       var step = 1
       var more = true
       while (step <= kk && more) {
         // score = rel on the first pick, λ·rel − (1−λ)·max-cos after;
-        // SQL semantics: null rel/msim → null score, null scores last
-        var best: (Any, Any, Array[Double], java.lang.Double) = null
+        // SQL semantics: null rel/msim → null score, null scores last;
+        // only a strictly better score displaces the earlier candidate
+        var best = -1
         var bestScore: java.lang.Double = null
-        for (c <- rows if !pickedIds.contains(c._2)) {
+        for (i <- rows.indices if !picked(i)) {
+          val c = rows(i)
           val score: java.lang.Double =
-            if (step == 1) c._4
-            else if (c._4 == null) null
+            if (step == 1) c._3
+            else if (c._3 == null) null
             else {
               var msim: java.lang.Double = null
-              if (c._3 != null) {
+              if (c._2 != null) {
                 var j = 0
                 while (j < pickedVecs.length) {
                   val pv = pickedVecs(j)
                   if (pv != null) {
-                    val s = cos(c._3, pv)
+                    val s = cos(c._2, pv)
                     if (msim == null || java.lang.Double.compare(s, msim) > 0)
                       msim = s
                   }
@@ -1315,82 +1280,22 @@ object Ann {
                 }
               }
               if (msim == null) null
-              else lam * c._4.doubleValue() -
+              else lam * c._3.doubleValue() -
                 (1.0 - lam) * msim.doubleValue()
             }
-          val better =
-            if (best == null) true
-            else if (score == null && bestScore == null) idCmpNull(c._2, best._2) < 0
-            else if (score == null) false
-            else if (bestScore == null) true
-            else {
-              val d = java.lang.Double.compare(score, bestScore)
-              d > 0 || (d == 0 && idCmpNull(c._2, best._2) < 0)
-            }
-          if (better) { best = c; bestScore = score }
+          val better = best < 0 || (score != null &&
+            (bestScore == null || java.lang.Double.compare(score, bestScore) > 0))
+          if (better) { best = i; bestScore = score }
         }
-        if (best == null) more = false
+        if (best < 0) more = false
         else {
-          pickedIds += best._2
-          pickedVecs += best._3
-          out += Row(qVal, best._2, step)
+          picked(best) = true
+          pickedVecs += rows(best)._2
+          out += Row(key.get(0), rows(best)._1, step)
           step += 1
         }
       }
       out.iterator
     }(Encoders.row(outSchema)).toDF()
-  }
-
-  /** The pre-r20 join-chain MMR — kept as the fallback for id types whose
-    * Catalyst ordering the grouped kernel does not replicate. Semantics
-    * identical to [[mmrRerank]]; cost k rounds of joins, each cut by
-    * [[Generations.cut]]. */
-  private def mmrRerankBarrier(
-      candidates: DataFrame,
-      queryCol: String,
-      idCol: String,
-      vecCol: String,
-      relCol: String,
-      k: Int,
-      lambda: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
-    // Composing k rounds as one lineage would re-plan the candidates
-    // subplan O(3^k) times (each round reads it via anti-join, sim-join
-    // and union) — the connectedComponents idiom instead: persist the
-    // inputs once and cut every round ([[Generations.cut]]) so round i's
-    // plan is flat over round i-1's result.
-    val cand = candidates.select(
-        col(queryCol).as("__q"), col(idCol).as("__id"),
-        col(vecCol).as("__v"), col(relCol).cast("double").as("__rel"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val rank1 = Window.partitionBy(col("__q"))
-      .orderBy(desc("__score"), col("__id"))
-    val gens = new Generations(Seq(cand))
-    var selected = gens.cut(cand.withColumn("__score", col("__rel"))
-      .withColumn("__rn", row_number().over(rank1)).filter(col("__rn") === 1)
-      .select(col("__q"), col("__id"), col("__v"), lit(1).as("step")))
-    for (i <- 2 to k) {
-      val picked = selected.select(
-        col("__q").as("__sq"), col("__id").as("__sid"), col("__v").as("__sv"))
-      val remaining = cand.join(picked,
-        col("__q") === col("__sq") && col("__id") === col("__sid"), "left_anti")
-      val pick = remaining
-        .join(picked.select(col("__sq"), col("__sv")), col("__q") === col("__sq"))
-        .groupBy(col("__q"), col("__id"))
-        .agg(max(col("__rel")).as("__rel"),
-          max(cosine(col("__v"), col("__sv"))).as("__msim"),
-          first(col("__v")).as("__v"))
-        .withColumn("__score",
-          lit(lambda) * col("__rel") - lit(1.0 - lambda) * col("__msim"))
-        .withColumn("__rn", row_number().over(rank1)).filter(col("__rn") === 1)
-        .select(col("__q"), col("__id"), col("__v"), lit(i).as("step"))
-      selected = gens.cut(selected.unionByName(pick))
-    }
-    // the final round's cache (and the candidate cache) back the returned
-    // frame; release both after the caller's first completed action
-    gens.releaseAfterFirstAction(
-      selected.select(col("__q").as(queryCol), col("__id").as(idCol),
-        col("step")))
   }
 }

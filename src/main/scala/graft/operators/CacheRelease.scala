@@ -27,7 +27,11 @@ private[graft] object CacheRelease {
     * run `onAction(qe)` (e.g. read observed metrics and warn), unpersist
     * `release`, and unregister. If `MaxUnrelatedActions` other actions
     * complete first, release and unregister WITHOUT the callback — the
-    * caches must not outlive an abandoned result. */
+    * caches must not outlive an abandoned result. `Dataset.rdd` reports
+    * to the listener as an execution named "rdd" when the RDD is
+    * CREATED, and the RDD's own actions are never reported, so "rdd"
+    * executions count neither as a use nor as an unrelated action: a
+    * result consumed only through `.rdd` is released by expiry. */
   def afterFirstAction(result: DataFrame, release: Seq[DataFrame],
       onAction: QueryExecution => Unit = _ => ()): DataFrame = {
     val spark = result.sparkSession
@@ -35,20 +39,21 @@ private[graft] object CacheRelease {
     val listener = new QueryExecutionListener {
       private val done = new AtomicBoolean(false)
       private val unrelated = new java.util.concurrent.atomic.AtomicInteger(0)
-      private def maybeRelease(qe: QueryExecution): Unit = {
-        val uses = try qe.analyzed.exists(_.canonicalized == key)
-          catch { case _: Throwable => false }
-        val expired = !uses && unrelated.incrementAndGet() > MaxUnrelatedActions
-        if ((uses || expired) && done.compareAndSet(false, true)) {
-          if (uses) try onAction(qe) catch { case _: Throwable => () }
-          release.foreach(_.unpersist(false))
-          spark.listenerManager.unregister(this)
+      private def maybeRelease(funcName: String, qe: QueryExecution): Unit =
+        if (funcName != "rdd") {
+          val uses = try qe.analyzed.exists(_.canonicalized == key)
+            catch { case _: Throwable => false }
+          val expired = !uses && unrelated.incrementAndGet() > MaxUnrelatedActions
+          if ((uses || expired) && done.compareAndSet(false, true)) {
+            if (uses) try onAction(qe) catch { case _: Throwable => () }
+            release.foreach(_.unpersist(false))
+            spark.listenerManager.unregister(this)
+          }
         }
-      }
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = maybeRelease(qe)
+          durationNs: Long): Unit = maybeRelease(funcName, qe)
       override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = maybeRelease(qe)
+          exception: Exception): Unit = maybeRelease(funcName, qe)
     }
     spark.listenerManager.register(listener)
     result

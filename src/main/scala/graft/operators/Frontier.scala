@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -994,22 +994,52 @@ object Frontier {
     * checked for COLLISIONS: two hosts sharing an id would silently
     * merge their rank mass, so the operator counts ids against hosts
     * and refuses loudly instead (the host table is edge-bounded, so the
-    * check is one cheap aggregate). The check rides the result plan on
-    * the `host` column, so the refusal fires at the first action that
-    * reads `host`; an action that never reads it (a `count()`, a
-    * `select("rank_ppb")`) skips it. Returns `(host, rank_ppb)`.
+    * check is one cheap aggregate). The check is a filter on a one-row
+    * frame cross-joined into the result, which column pruning cannot
+    * drop, so the refusal fires at any action — a `count()` and a
+    * `select("rank_ppb")` included. Returns `(host, rank_ppb)`.
     *
     * 100 TB shape: the link table collapses to host-grain FIRST (one
     * distinct — hosts are millions where links are trillions), and the
     * iteration inherits pageRank's persisted-edge / rank-only-shuffle
     * design. */
   def hostRank(links: DataFrame, urlCol: String, outlinkCol: String,
-      iterations: Int = 5, dampingPct: Int = 85): DataFrame = {
-    def hid(h: org.apache.spark.sql.Column) =
-      conv(substring(md5(h), 1, 15), 16, 10).cast("long")
+      iterations: Int = 5, dampingPct: Int = 85): DataFrame =
+    hostGraphWalk(links, urlCol, outlinkCol, "rank_ppb", "rank") { (edges, _) =>
+      Graph.pageRank(edges, "src", "dst", iterations, dampingPct)
+    }
+
+  /** [[hostRank]]'s TrustRank twin ([[graft.operators.Graph.trustRank]]):
+    * trust seeded at a curated host whitelist flows along the SAME
+    * host-grain link graph — the quality half of crawl prioritization
+    * (hostRank says what is linked; this says what is linked FROM
+    * trusted ground, the Gyöngyi et al. spam-demotion signal). Same
+    * url→host collapse, persisted edge frame, collision-checked md5
+    * host ids (refused at any action) and integer-ppb replayability;
+    * trusted hosts absent from the graph are refused loudly (trustRank's
+    * own guard — a typo'd whitelist entry must not silently strand
+    * mass). Returns `(host, trust_ppb)`. */
+  def hostTrustRank(links: DataFrame, urlCol: String, outlinkCol: String,
+      trustedHosts: DataFrame, hostCol: String,
+      iterations: Int = 5, dampingPct: Int = 85): DataFrame =
+    hostGraphWalk(links, urlCol, outlinkCol, "trust_ppb", "trust") { (edges, hid) =>
+      Graph.trustRank(edges, "src", "dst",
+        trustedHosts.select(hid(col(hostCol)).as("sid")), "sid",
+        iterations, dampingPct)
+    }
+
+  /** The host graph under [[hostRank]] and [[hostTrustRank]]: `walk`
+    * gets the host-id edge frame `(src, dst)` and the host-id function,
+    * and returns `(node, rankCol)`; the result is `(host, rankCol)`,
+    * guarded against host-id collisions (`noun` names the mass in the
+    * refusal). */
+  private def hostGraphWalk(links: DataFrame, urlCol: String, outlinkCol: String,
+      rankCol: String, noun: String)(
+      walk: (DataFrame, Column => Column) => DataFrame): DataFrame = {
+    def hid(h: Column) = conv(substring(md5(h), 1, 15), 16, 10).cast("long")
     // persist the host-grain edge frame: it is TINY next to the link
     // table it collapses, and everything downstream — the collision
-    // check, pageRank's own edge prep, the node set, the final host
+    // check, the walk's own edge prep, the node set, the final host
     // attach — derives from it; without the cache each derivation
     // re-runs the full link harvest (measured 4× the query's cost).
     // Released by the shared one-shot listener after the result's
@@ -1023,72 +1053,24 @@ object Frontier {
       .union(e.select(col("__dh").as("host")))
       .distinct()
     // the collision guard rides the result plan as a broadcast one-row
-    // gate instead of an eager collect (r21 optimization round, guide
-    // §1.2 — the nswBuild guard-fold precedent): the former collect was
-    // a separate blocking job that paid the full link harvest before
-    // the walk job could start; folded, the harvest materializes once
-    // inside the single action and both the guard and the walk read the
-    // cache. Same refusal text, surfaced at the first action.
+    // gate, so the harvest materializes once inside the single action
+    // and both the guard and the walk read the cache (an eager collect
+    // would be a separate job paying the harvest before the walk). The
+    // refusal is the gate's filter, not a projected column, so pruning
+    // the output keeps it.
     val guard = hosts.agg(count(lit(1)).as("__nh"),
-      countDistinct(hid(col("host"))).as("__nid"))
-    val ranked = Graph.pageRank(
-        e.select(hid(col("__sh")).as("src"), hid(col("__dh")).as("dst")),
-        "src", "dst", iterations, dampingPct)
+        countDistinct(hid(col("host"))).as("__nid"))
+      .filter(when(col("__nh") =!= col("__nid"), raise_error(concat(
+        lit("host-id hash collision: "), col("__nh").cast("string"),
+        lit(" hosts -> "), col("__nid").cast("string"),
+        lit(s" ids — $noun mass would silently merge"))))
+        .otherwise(lit(true)))
+    val ranked = walk(
+        e.select(hid(col("__sh")).as("src"), hid(col("__dh")).as("dst")), hid)
       .join(hosts.select(col("host"), hid(col("host")).as("__hid")),
         col("node") === col("__hid"))
       .crossJoin(broadcast(guard))
-      .select(
-        when(col("__nh") =!= col("__nid"), raise_error(concat(
-          lit("host-id hash collision: "), col("__nh").cast("string"),
-          lit(" hosts -> "), col("__nid").cast("string"),
-          lit(" ids — rank mass would silently merge"))))
-          .otherwise(col("host")).as("host"),
-        col("rank_ppb"))
-    CacheRelease.afterFirstAction(ranked, Seq(e))
-  }
-
-  /** [[hostRank]]'s TrustRank twin ([[graft.operators.Graph.trustRank]]):
-    * trust seeded at a curated host whitelist flows along the SAME
-    * host-grain link graph — the quality half of crawl prioritization
-    * (hostRank says what is linked; this says what is linked FROM
-    * trusted ground, the Gyöngyi et al. spam-demotion signal). Same
-    * url→host collapse, persisted edge frame, collision-checked md5
-    * host ids and integer-ppb replayability; trusted hosts absent from
-    * the graph are refused loudly (trustRank's own guard — a typo'd
-    * whitelist entry must not silently strand mass). Returns
-    * `(host, trust_ppb)`. */
-  def hostTrustRank(links: DataFrame, urlCol: String, outlinkCol: String,
-      trustedHosts: DataFrame, hostCol: String,
-      iterations: Int = 5, dampingPct: Int = 85): DataFrame = {
-    def hid(h: org.apache.spark.sql.Column) =
-      conv(substring(md5(h), 1, 15), 16, 10).cast("long")
-    val e = links.select(
-        TextFunctions.urlHost(col(urlCol)).as("__sh"),
-        TextFunctions.urlHost(col(outlinkCol)).as("__dh"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hosts = e.select(col("__sh").as("host"))
-      .union(e.select(col("__dh").as("host")))
-      .distinct()
-    // broadcast one-row collision gate instead of an eager collect —
-    // see hostRank (r21 optimization round, guide §1.2)
-    val guard = hosts.agg(count(lit(1)).as("__nh"),
-      countDistinct(hid(col("host"))).as("__nid"))
-    val ranked = Graph.trustRank(
-        e.select(hid(col("__sh")).as("src"), hid(col("__dh")).as("dst")),
-        "src", "dst",
-        trustedHosts.select(hid(col(hostCol)).as("sid")), "sid",
-        iterations, dampingPct)
-      .join(hosts.select(col("host"), hid(col("host")).as("__hid")),
-        col("node") === col("__hid"))
-      .crossJoin(broadcast(guard))
-      .select(
-        when(col("__nh") =!= col("__nid"), raise_error(concat(
-          lit("host-id hash collision: "), col("__nh").cast("string"),
-          lit(" hosts -> "), col("__nid").cast("string"),
-          lit(" ids — trust mass would silently merge"))))
-          .otherwise(col("host")).as("host"),
-        col("trust_ppb"))
+      .select(col("host"), col(rankCol))
     CacheRelease.afterFirstAction(ranked, Seq(e))
   }
 

@@ -94,7 +94,8 @@ object Graph {
     // per FuseIterationLimit rounds, and round i+1's stages pipeline
     // behind i's inside a single DAG. ranks_{i-1} appears exactly once in
     // ranks_i's plan, so the composed plan grows LINEARLY with rounds
-    // (contrast mmrRerank's O(3^k), which cuts every round). Joins are
+    // (a round that read its predecessor through b branches would grow
+    // it as b^rounds). Joins are
     // expressed over disjoint output column names (not df("col") refs):
     // the right side carries the node set's lineage, and name-level
     // resolution is what stays unambiguous.

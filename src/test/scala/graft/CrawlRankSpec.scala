@@ -38,6 +38,20 @@ class CrawlRankSpec extends SparkSpec {
       canon(Frontier.hostRank(doubled, "url", "outlink")))
   }
 
+  test("the host-id collision guard survives count(), a narrow select and collect()") {
+    val trusted = Seq("a.com").toDF("h")
+    for ((name, out) <- Seq(
+        "hostRank" -> Frontier.hostRank(links, "url", "outlink"),
+        "hostTrustRank" -> Frontier.hostTrustRank(links, "url", "outlink", trusted, "h"))) {
+      val rankCol = out.columns(1)
+      for ((action, df) <- Seq("count()" -> out.groupBy().count(),
+          s"select($rankCol)" -> out.select(rankCol), "collect()" -> out))
+        assert(df.queryExecution.optimizedPlan.toString.contains("raise_error"),
+          s"$name under $action dropped the guard")
+      out.collect() // the result's first action releases its edge cache
+    }
+  }
+
   test("rankBudget allocates proportional integer slots within total") {
     val hr = Frontier.hostRank(links, "url", "outlink")
     val b = Frontier.rankBudget(hr, "host", "rank_ppb", 10000L).collect()

@@ -106,52 +106,94 @@ class MmrSpec extends SparkSpec {
     assert(pureRel.toSet === Set(1L, 2L))
   }
 
-  test("barrier fallback (non-integral id type) matches the grouped kernel") {
-    // double ids route to the legacy join-chain path (the kernel only
-    // replicates Catalyst's ordering for integral/string ids); both
-    // paths must agree with the reference greedy
-    val query = vec(5, 8)
-    val rows = (1L to 10L).map(id => (id, vec(id * 11 + 3, 8)))
-    val cands = mkCands(0L, rows, query)
-    val long = cands.map { case (id, v, rel) => (0L, id, v.toSeq, rel) }
+  /** Long-id candidates for one query (query_id 0) and the reference
+    * greedy over them. */
+  private def longCands(seed: Long, mult: Long, n: Long = 10L)
+      : (DataFrame, Seq[(Long, Array[Float], Double)]) = {
+    val cands = mkCands(0L, (1L to n).map(id => (id, vec(id * mult + seed, 8))),
+      vec(seed, 8))
+    val df = cands.map { case (id, v, rel) => (0L, id, v.toSeq, rel) }
       .toDF("query_id", "vec_id", "embedding", "rel")
       .withColumn("embedding", col("embedding").cast("array<float>"))
-    val dbl = long.withColumn("vec_id", col("vec_id").cast("double"))
-    val viaKernel = Ann.mmrRerank(long, "query_id", "vec_id", "embedding",
-        "rel", k = 4)
-      .orderBy("step").collect().map(r => (r.getLong(1), r.getInt(2))).toSeq
-    val viaBarrier = Ann.mmrRerank(dbl, "query_id", "vec_id", "embedding",
-        "rel", k = 4)
-      .orderBy("step").collect()
-      .map(r => (r.getDouble(1).toLong, r.getInt(2))).toSeq
-    assert(viaKernel === refMmr(cands, 4, 0.5))
-    assert(viaBarrier === viaKernel)
+    (df, cands)
   }
 
-  test("barrier fallback (non-integral query type) matches the grouped kernel") {
-    // double query keys route to the join-chain path: the kernel's group
-    // key (String.valueOf) is not injective on doubles (-0.0 vs 0.0) nor
-    // on binary/struct/array query values, where SQL grouping semantics
-    // differ from the rendered-string key
-    val query = vec(9, 8)
-    val rows = (1L to 10L).map(id => (id, vec(id * 7 + 2, 8)))
-    val cands = mkCands(0L, rows, query)
-    val long = cands.map { case (id, v, rel) => (0L, id, v.toSeq, rel) }
-      .toDF("query_id", "vec_id", "embedding", "rel")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
+  private def picks(out: DataFrame, id: Row => Long): Seq[(Long, Int)] =
+    out.orderBy("step").collect().map(r => (id(r), r.getInt(2))).toSeq
+
+  test("double ids equal the reference greedy") {
+    val (long, cands) = longCands(5, 11)
+    val dbl = long.withColumn("vec_id", col("vec_id").cast("double"))
+    val got = picks(Ann.mmrRerank(dbl, "query_id", "vec_id", "embedding", "rel",
+      k = 4), _.getDouble(1).toLong)
+    assert(got === refMmr(cands, 4, 0.5))
+  }
+
+  test("double query keys run one grouped pass: no join, one hash exchange") {
+    val (long, cands) = longCands(9, 7)
     val dblQ = long.withColumn("query_id", col("query_id").cast("double"))
-    val viaKernel = Ann.mmrRerank(long, "query_id", "vec_id", "embedding",
-        "rel", k = 4)
-      .orderBy("step").collect().map(r => (r.getLong(1), r.getInt(2))).toSeq
-    val out = Ann.mmrRerank(dblQ, "query_id", "vec_id", "embedding", "rel",
-      k = 4)
-    // routed to the barrier path: no grouped-kernel node in the plan
-    assert(!out.queryExecution.analyzed.toString.contains("MapGroups"),
+    val out = Ann.mmrRerank(dblQ, "query_id", "vec_id", "embedding", "rel", k = 4)
+    assert(picks(out, _.getLong(1)) === refMmr(cands, 4, 0.5))
+    val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert(!plan.contains("Join"), plan)
+    assert("Exchange hashpartitioning".r.findAllMatchIn(plan).size == 1, plan)
+    assert(out.queryExecution.analyzed.toString.contains("MapGroups"),
       out.queryExecution.analyzed.toString)
-    val viaBarrier = out.orderBy("step").collect()
-      .map(r => (r.getLong(1), r.getInt(2))).toSeq
-    assert(viaKernel === refMmr(cands, 4, 0.5))
-    assert(viaBarrier === viaKernel)
+  }
+
+  test("binary ids equal the reference greedy (byte order is id order)") {
+    // 8-byte big-endian positive longs: unsigned byte order = numeric order
+    val (long, cands) = longCands(4, 13)
+    val bytes = udf((id: Long) => java.nio.ByteBuffer.allocate(8).putLong(id).array())
+    val bin = long.withColumn("vec_id", bytes(col("vec_id")))
+    val got = picks(Ann.mmrRerank(bin, "query_id", "vec_id", "embedding", "rel",
+      k = 4), r => java.nio.ByteBuffer.wrap(r.getAs[Array[Byte]](1)).getLong)
+    assert(got === refMmr(cands, 4, 0.5))
+  }
+
+  test("query keys -0.0 and 0.0 are one query") {
+    // the k picks are made over the rows of both keys together
+    val (long, cands) = longCands(6, 5)
+    val split = long.withColumn("query_id",
+      when(col("vec_id") % 2 === 0, lit(-0.0)).otherwise(lit(0.0)))
+    val got = picks(Ann.mmrRerank(split, "query_id", "vec_id", "embedding", "rel",
+      k = 4), _.getLong(1))
+    assert(got === refMmr(cands, 4, 0.5))
+  }
+
+  test("struct query keys group per struct value") {
+    val (a, candsA) = longCands(3, 7, n = 6)
+    val (b, candsB) = longCands(8, 3, n = 6)
+    val df = a.withColumn("query_id", struct(lit("a").as("s"), lit(1L).as("n")))
+      .unionByName(b.withColumn("query_id", struct(lit("a").as("s"), lit(2L).as("n"))))
+    val rows = Ann.mmrRerank(df, "query_id", "vec_id", "embedding", "rel", k = 3)
+      .collect()
+    for ((n, cs) <- Seq(1L -> candsA, 2L -> candsB)) {
+      val got = rows.filter(_.getStruct(0).getLong(1) == n).sortBy(_.getInt(2))
+        .map(r => (r.getLong(1), r.getInt(2))).toSeq
+      assert(got === refMmr(cs, 3, 0.5), s"query n=$n")
+    }
+  }
+
+  test("null query values are one query") {
+    val (long, cands) = longCands(2, 9)
+    val nulls = long.withColumn("query_id", lit(null).cast("long"))
+    val out = Ann.mmrRerank(nulls, "query_id", "vec_id", "embedding", "rel", k = 4)
+      .collect()
+    assert(out.forall(_.isNullAt(0)))
+    assert(out.sortBy(_.getInt(2)).map(r => (r.getLong(1), r.getInt(2))).toSeq ===
+      refMmr(cands, 4, 0.5))
+  }
+
+  test("a string-id tie breaks by UTF-8 byte order, not UTF-16") {
+    // U+FF61 sorts before U+10000 in UTF-8 bytes (EF.. < F0..) but after
+    // it in Java's UTF-16 order (FF61 > D800); identical vectors and
+    // relevance tie every score
+    val df = Seq(("\uD800\uDC00", Seq(1.0f, 0.0f), 0.5), ("\uFF61", Seq(1.0f, 0.0f), 0.5))
+      .toDF("vec_id", "embedding", "rel").withColumn("query_id", lit(0L))
+    val got = Ann.mmrRerank(df, "query_id", "vec_id", "embedding", "rel", k = 2)
+      .orderBy("step").collect().map(_.getString(1)).toSeq
+    assert(got === Seq("\uFF61", "\uD800\uDC00"))
   }
 
   test("the default candidate cap refuses shortlists above 65536") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
-import graft.operators.{Ann, CacheRelease, Dedup, Frontier, Graph}
+import graft.operators.{CacheRelease, Dedup, Frontier, Graph}
 
 /** The iterative operators hold their generations through one helper
   * (graft.operators.Generations): at most one cached generation per chain
@@ -34,10 +34,6 @@ class GenerationsSpec extends SparkSpec {
     (8L, 9L), (9L, 8L), (8L, 5L), (3L, 4L))
   private def edges = edgeList.toDF("src", "dst")
 
-  private def mmrCandidates: DataFrame =
-    (1 to 8).map(i => (0.0, i.toDouble, Seq(i.toFloat, (i % 3).toFloat), 1.0 / i))
-      .toDF("query_id", "vec_id", "embedding", "rel")
-
   private val redirects = Seq(
       ("http://a/", 301, "http://b/"), ("http://b/", 301, "http://c/"),
       ("http://l1/", 302, "http://l2/"), ("http://l2/", 302, "http://l1/"))
@@ -62,9 +58,7 @@ class GenerationsSpec extends SparkSpec {
       "url", "status", "location", maxHops = 10)),
     "compactRedirectMoves" -> (() => Frontier.compactRedirectMoves(moves)),
     "connectedComponents" -> (() => Dedup.connectedComponents(
-      edgeList.toDF("id_a", "id_b"))),
-    "mmrRerank (barrier fallback)" -> (() => Ann.mmrRerank(mmrCandidates,
-      "query_id", "vec_id", "embedding", "rel", k = 3)))
+      edgeList.toDF("id_a", "id_b"))))
 
   for ((name, build) <- operators)
     test(s"$name releases its caches after one collect") {
@@ -95,5 +89,22 @@ class GenerationsSpec extends SparkSpec {
     val left = awaitOnly(before)
     assert(left.isEmpty,
       s"${left.size} persisted RDD(s) outlived the abandoned ${abandoned.columns.mkString(",")}")
+  }
+
+  test("Dataset.rdd calls neither use nor expire a pending result") {
+    // Spark reports each Dataset.rdd as an execution named "rdd" when the
+    // RDD is created; it runs nothing, so it must not spend the pending
+    // result's unrelated-action budget (nor count as its first action)
+    val before = drained()
+    val result = Dedup.connectedComponents(edgeList.toDF("id_a", "id_b"))
+    val held = persisted -- before
+    assert(held.nonEmpty, "the rounds hold their caches")
+    val (_, actions) = actionsDuring(
+      (0 to CacheRelease.MaxUnrelatedActions).foreach(_ => Seq(1).toDF("x").rdd))
+    assert(actions == 0)
+    assert(held.subsetOf(persisted), "released before the result's first action")
+    result.collect()
+    val left = awaitOnly(before)
+    assert(left.isEmpty, s"${left.size} persisted RDD(s) outlived the collect")
   }
 }
