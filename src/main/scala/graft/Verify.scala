@@ -69,23 +69,13 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // a spot check writes only its own gates' SQL, so the checker's
     // verdict covers exactly the dumped gates
-    val json = SparkEntry.oracleSql
+    val sql = new java.util.LinkedHashMap[String, String]
+    SparkEntry.oracleSql
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .foreach { case (k, v) => sql.put(k, v) }
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(sql)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

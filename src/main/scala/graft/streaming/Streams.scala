@@ -371,16 +371,11 @@ object Streams {
       threshold: Double = 0.7,
       maxBucketSize: Int = graft.operators.Dedup.DefaultMaxBucketSize,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    require(newDocs.isStreaming, "minhashIngestGate needs a streaming DataFrame")
-    newDocs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    appendIngest(newDocs, checkpoint, trigger, "minhashIngestGate") {
+      (batch, batchId) =>
         ingestGateBatch(batch, batchId, idCol, textCol, indexPath,
           survivorsPath, checkpoint, rowsPerBand, threshold, maxBucketSize)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    }
   }
 
   /** STREAMING write-time enforcement: every micro-batch routes through
@@ -400,17 +395,12 @@ object Streams {
       quarantinePath: String,
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    require(rows.isStreaming, "streamEnforce needs a streaming DataFrame")
     val ctag = checkpointTag(checkpoint)
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Enforce.writeRouted(batch, checks,
-          cleanPath, quarantinePath, s"enf_${ctag}_b$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    appendIngest(rows, checkpoint, trigger, "streamEnforce") { (batch, batchId) =>
+      graft.operators.Enforce.writeRouted(batch, checks,
+        cleanPath, quarantinePath, s"enf_${ctag}_b$batchId")
+      true
+    }
   }
 
   /** Injective-in-practice tag for a gate's commit markers and appends:
@@ -582,12 +572,14 @@ object Streams {
         graft.operators.Pq.pqAppend(spark, indexPath, batch, idCol, vecCol, tag)
     }
 
-  /** Shared foreachBatch shell of the append-only index ingests. */
-  private def appendIngest(newVecs: DataFrame, checkpoint: String,
+  /** Shared foreachBatch shell of the ingest and enforcement streams:
+    * `rows` must be streaming, and each micro-batch runs `runBatch`
+    * under `checkpoint` and `trigger`. */
+  private def appendIngest(rows: DataFrame, checkpoint: String,
       trigger: Trigger, name: String)(
       runBatch: (DataFrame, Long) => Boolean): StreamingQuery = {
-    require(newVecs.isStreaming, s"$name needs a streaming DataFrame")
-    newVecs.writeStream
+    require(rows.isStreaming, s"$name needs a streaming DataFrame")
+    rows.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         runBatch(batch, batchId)
         ()

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Random
+
 import graft.operators.Multimodal
 
 /** PCM16 silence segmentation: pause rule, trimming, short-quiet
@@ -43,5 +45,30 @@ class AudioVadSpec extends SparkSpec {
     assert(Multimodal.wavSilenceSegments(Array[Byte](1, 2, 3), 100, 50).isEmpty)
     val stereoHeader = Multimodal.syntheticWavBytes(8000, 2, 16, 10)
     assert(Multimodal.wavSilenceSegments(stereoHeader, 100, 50).isEmpty)
+  }
+
+  test("silence segmentation is total; segments are ordered, disjoint, in-range") {
+    val rnd = new Random(20260818L)
+    for (i <- 1 to 300) {
+      val junk = new Array[Byte](rnd.nextInt(200))
+      rnd.nextBytes(junk)
+      Multimodal.wavSilenceSegments(junk, 100, 10) // must not throw
+      val n = 20 + rnd.nextInt(300)
+      val sil = Seq.fill(rnd.nextInt(3))(
+        (rnd.nextInt(n), 1 + rnd.nextInt(60)))
+      val wav = Multimodal.syntheticWavPcm16Silence(8000, i.toLong, n, sil)
+      val segs = Multimodal.wavSilenceSegments(wav, 100,
+        1 + rnd.nextInt(40)).get
+      // invariants for ANY input: ordered, disjoint, within [0, n)
+      segs.sliding(2).foreach {
+        case Seq(a, b) => assert(a._3 <= b._2, s"$a overlaps $b")
+        case _ =>
+      }
+      assert(segs.forall(s => s._2 >= 0 && s._3 <= n && s._2 < s._3))
+      assert(segs.map(_._1) == segs.indices)
+      // truncations of the container must be None or consistent
+      Multimodal.wavSilenceSegments(
+        wav.take(rnd.nextInt(wav.length + 1)), 100, 10)
+    }
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import scala.util.Random
+import org.apache.spark.unsafe.types.UTF8String
+
 import org.apache.spark.sql.functions._
 import graft.functions.MojibakeRepairExpr
 
@@ -55,5 +58,31 @@ class MojibakeSpec extends SparkSpec {
       .toDF("id", "t")
       .select(MojibakeRepairExpr(col("t"))).collect()
     assert(r(0).isNullAt(0) && r(1).getString(0) == "")
+  }
+
+  private def u(s: String) = UTF8String.fromString(s)
+
+  test("mojibake repair is total, idempotent-safe and never lengthens") {
+    val rnd = new Random(20260816L)
+    for (_ <- 1 to 400) {
+      val len = 1 + rnd.nextInt(120)
+      val sb = new StringBuilder
+      for (_ <- 0 until len) {
+        rnd.nextInt(5) match {
+          case 0 => sb.append((32 + rnd.nextInt(95)).toChar)       // ascii
+          case 1 => sb.append((0x80 + rnd.nextInt(0x80)).toChar)   // latin1 high
+          case 2 => sb.append(Seq('€', '’', '™',
+            'Œ', '˜')(rnd.nextInt(5)))                   // cp1252 specials
+          case 3 => sb.append((0x100 + rnd.nextInt(0x3000)).toChar) // genuine unicode
+          case _ => sb.append(Seq('Ã', 'Â', 'â')(rnd.nextInt(3)))
+        }
+      }
+      val in = sb.toString
+      val out = graft.functions.MojibakeRepairImpl.repair(u(in)).toString
+      assert(out.length <= in.length, s"repair lengthened: $in -> $out")
+      // a second pass over already-repaired text must also be total
+      val out2 = graft.functions.MojibakeRepairImpl.repair(u(out)).toString
+      assert(out2.length <= out.length)
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Random
+
 import graft.operators.Multimodal
 
 /** MP4 shot-boundary detection: cuts land on the seed jumps, drift
@@ -48,5 +50,27 @@ class ShotDetectSpec extends SparkSpec {
       (0 until 20).map(j => (7L + f * 31L + j * 7L) % 256L).sum
     }
     assert(frames.map(_._4) == expect)
+  }
+
+  test("shot detection is total on arbitrary bytes and truncations") {
+    val rnd = new Random(20260817L)
+    for (i <- 1 to 300) {
+      val junk = new Array[Byte](rnd.nextInt(300))
+      rnd.nextBytes(junk)
+      Multimodal.mp4ShotBoundaries(junk, 8000) // may be None, must not throw
+      val valid = Multimodal.syntheticMp4WithShots(32, 24, 1000, 40,
+        nFrames = 2 + rnd.nextInt(12), frameSize = 8 + rnd.nextInt(40),
+        shotLen = 1 + rnd.nextInt(6), docSeed = i.toLong)
+      // bit flips and truncations of a valid container
+      val cut = valid.take(rnd.nextInt(valid.length + 1))
+      Multimodal.mp4ShotBoundaries(cut, 8000)
+      val flipped = valid.clone()
+      for (_ <- 0 to 4)
+        flipped(rnd.nextInt(flipped.length)) = rnd.nextInt(256).toByte
+      Multimodal.mp4ShotBoundaries(flipped, 8000)
+      // the untouched container must parse with shot 0 at frame 0
+      val ok = Multimodal.mp4ShotBoundaries(valid, 8000)
+      assert(ok.exists(s => s.headOption.contains((0, 0, 0L))))
+    }
   }
 }
