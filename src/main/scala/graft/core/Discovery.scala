@@ -39,7 +39,10 @@ object Discovery {
     * None only for generated (never-listed) names. */
   final case class ListedFile(name: String, meta: Option[FileMeta])
 
-  final case class DirectoryListing(files: Seq[ListedFile], directories: Seq[String])
+  /** `self` is set when the listed url is itself a FILE (a listing of a
+    * file returns that file's own status): its metadata, and no entries. */
+  final case class DirectoryListing(files: Seq[ListedFile], directories: Seq[String],
+      self: Option[FileMeta] = None)
 
   object DirectoryListing {
     def generated(fileNames: Seq[String], dirNames: Seq[String]): DirectoryListing =
@@ -58,6 +61,14 @@ object Discovery {
     val statuses =
       try fs.listStatus(path)
       catch { case _: java.io.FileNotFoundException => return DirectoryListing(Nil, Nil) }
+    // a listing of a FILE returns that file's own status (the name test
+    // first: it spares the leaf directories that hold one file each)
+    statuses match {
+      case Array(st) if st.isFile && st.getPath.getName == path.getName &&
+          st.getPath == fs.makeQualified(path) =>
+        return DirectoryListing(Nil, Nil, Some(FileMeta(st.getLen, st.getModificationTime)))
+      case _ =>
+    }
     val filtered = statuses
       .filterNot(st => { val n = st.getPath.getName; n.startsWith("_") || n.startsWith(".") })
     val (dirs, files) = filtered.partition(_.isDirectory)
@@ -99,6 +110,11 @@ object Discovery {
           DirectoryListing.generated(fileNames = Nil, dirNames = generated)
         case None => listDirectory(partition.url, fs)
       }
+      // a url that lists as a file (a single-file root) is itself the one
+      // partition: its own url, the listing's metadata, the columns so far
+      if (listing.self.isDefined)
+        return Seq(partition.copy(url = partition.url.stripSuffix("/"), meta = listing.self))
+          .filter(p => query.evalAll(p.columns))
 
       val subTasks = listing.directories.iterator
         .map(d => partition.expandBy(d + "/", Some(parser.parse(d))))

@@ -56,8 +56,9 @@ object TaggedAppend {
   /** Delete whatever a previous [[append]] attempt under `tag` left in
     * `path` — all of its part files, some of them (a crash can stop
     * mid-rename), or just the staging directory. Scans the root's files
-    * and one level of `key=value` partition subdirectories. Idempotent;
-    * returns the number of committed part files removed. */
+    * and recurses into every subdirectory whose name contains `=` (every
+    * level of a `key=value` partition tree). Idempotent; returns the
+    * number of committed part files removed. */
   def abort(fs: FileSystem, path: String, tag: String): Int = {
     requireSafeTag(tag)
     val root = new Path(path)

@@ -916,11 +916,7 @@ object AnnGates extends GateFamily {
     // make the fresh witness read as drifted
     val pth = new org.apache.hadoop.fs.Path(path)
     pth.getFileSystem(s.sessionState.newHadoopConf()).delete(pth, true)
-    // drop the fixture's label column before persisting: ANSI union
-    // coercion typed it BIGINT against the planted 'planted' string,
-    // which explodes the moment a write materializes the cast
-    val index = Ann.ivfBuild(
-      annCorpus(s, dir).select("vec_id", "embedding"), "vec_id", "embedding",
+    val index = Ann.ivfBuild(annCorpus(s, dir), "vec_id", "embedding",
       nlist = 16)
     graft.operators.GraphAnn.nswWrite(
       graft.operators.GraphAnn.nswBuild(index, "vec_id",

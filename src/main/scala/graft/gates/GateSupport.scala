@@ -29,7 +29,9 @@ private[graft] object GateSupport {
     * id order. Approximate search over this corpus is therefore fully
     * oracle-expressible, and the hash match IS the recall gate: any
     * sketch/routing inconsistency (e.g. driver-side vs executor-side sketch
-    * drift, mis-probed cluster) loses a planted row and goes red. */
+    * drift, mis-probed cluster) loses a planted row and goes red. A planted
+    * row has no organic label: its `label` is null, typed as
+    * `embeddings.label`, so the union keeps that column's type. */
   def annCorpus(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val planted = e.filter(col("vec_id") === 0)
@@ -37,7 +39,7 @@ private[graft] object GateSupport {
       .select((col("i") + 9000000L).as("vec_id"),
         transform(col("embedding"),
           x => (x * pow(lit(2.0), col("i") - 5)).cast("float")).as("embedding"),
-        lit("planted").as("label"))
+        lit(null).cast(e.schema("label").dataType).as("label"))
     e.unionByName(planted)
   }
 

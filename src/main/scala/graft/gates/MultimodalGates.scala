@@ -231,10 +231,6 @@ object MultimodalGates extends GateFamily {
       .orderBy("doc_id")
   }
 
-  /** FULL PNG pixel decode (inflate + all-filter unfilter + per-channel
-    * stats); the oracle recomputes mean/std from the fixture's closed-form
-    * pixel arithmetic over a generated (x, y, channel) grid — the decode
-    * must invert deflate AND all five scanline filters exactly to match. */
   /** Shared gate shape for the pixel decoders (m4/m6/m7): per-channel
     * stats posexploded to (doc_id, width, height, channel, mean, std),
     * rounded and ordered — ONE definition so the three gates cannot
@@ -486,6 +482,10 @@ object MultimodalGates extends GateFamily {
       .orderBy("id_a", "id_b")
   }
 
+  /** FULL PNG pixel decode (inflate + all-filter unfilter + per-channel
+    * stats); the oracle recomputes mean/std from the fixture's closed-form
+    * pixel arithmetic over a generated (x, y, channel) grid — the decode
+    * must invert deflate AND all five scanline filters exactly to match. */
   gate("m4_pixels",
       """WITH d AS (SELECT doc_id,
              CAST(doc_id % 13 + 4 AS INT) AS width,
@@ -576,8 +576,6 @@ object MultimodalGates extends GateFamily {
       Multimodal.decodeJpegPixels(s.read.parquet(Fixtures.jpeg420PixelDocs(s, dir))))
   }
 
-  /** Real RIFF/WAVE chunk-walk decode; oracle verifies the parse inverts
-    * the fixture's construction arithmetic (same pattern as m1). */
   /** FULL audio payload decode: every PCM16 sample folded into exact
     * integer sums; the oracle reproduces mean/RMS from the fixture's
     * closed-form sample arithmetic (same pattern as m4's pixel stats). */
@@ -1468,6 +1466,8 @@ object MultimodalGates extends GateFamily {
       .orderBy("doc_id")
   }
 
+  /** Real RIFF/WAVE chunk-walk decode; oracle verifies the parse inverts
+    * the fixture's construction arithmetic (same pattern as m1). */
   gate("m2_audio",
       """SELECT doc_id,
          CAST(8000 * (doc_id % 3 + 1) AS INT) AS sample_rate,

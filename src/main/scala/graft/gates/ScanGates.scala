@@ -222,12 +222,6 @@ object ScanGates extends GateFamily {
       .orderBy("l_orderkey", "l_linenumber")
   }
 
-  /** Incremental aggregate maintenance: a per-user (n_rows, sum_value)
-    * rollup advanced by two delta batches (even then odd event_ids)
-    * without re-reading the first
-    * ([[graft.api.Graft.maintainAggregate]]). The merged sidecar must
-    * equal the from-scratch aggregation — the oracle computes exactly
-    * that from source, so any double-count or lost delta breaks it. */
   /** Training-shard export + integrity manifest
     * ([[graft.operators.Export]]): the corpus hash-shards to 8
     * partitioned directories plus an underscore-hidden manifest (per
@@ -261,6 +255,12 @@ object ScanGates extends GateFamily {
       .orderBy("gr_shard")
   }
 
+  /** Incremental aggregate maintenance: a per-user (n_rows, sum_value)
+    * rollup advanced by two delta batches (even then odd event_ids)
+    * without re-reading the first
+    * ([[graft.api.Graft.maintainAggregate]]). The merged sidecar must
+    * equal the from-scratch aggregation — the oracle computes exactly
+    * that from source, so any double-count or lost delta breaks it. */
   gate("s39_agg_maintain",
       // the merged sidecar must equal the from-scratch aggregation
       """SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows,

@@ -539,17 +539,6 @@ object StreamingGates extends GateFamily {
       .select("vec_id", "rank").orderBy("rank")
   }
 
-  /** Streaming PQ index growth — st9's analog for the quantized serving
-    * table: codes are persisted from the organic corpus, then junk and
-    * planted batches stream through [[graft.streaming.Streams.pqIngest]]
-    * (encode against the STORED codebooks + replay-idempotent tagged
-    * append). The planted batch carries VERBATIM copies of the query at
-    * NEGATIVE ids: a verbatim copy's code is per-subspace the argmin cell
-    * for the query, so its ADC distance is the global minimum over all
-    * possible codes, and negative ids win every tie-break against the
-    * organic corpus (ids ≥ 0) — the streamed ids at ranks 1..10 are
-    * enumerable truth regardless of how the lossy quantizer treats the
-    * organic rows. */
   /** Arbitrary stateful streaming (flatMapGroupsWithState): per-user running
     * (count, exact decimal-cents sum, click count) in custom state; Update
     * mode emits the running totals each micro-batch, and the gate keeps each
@@ -572,6 +561,17 @@ object StreamingGates extends GateFamily {
       .orderBy("user_id")
   }
 
+  /** Streaming PQ index growth — st9's analog for the quantized serving
+    * table: codes are persisted from the organic corpus, then junk and
+    * planted batches stream through [[graft.streaming.Streams.pqIngest]]
+    * (encode against the STORED codebooks + replay-idempotent tagged
+    * append). The planted batch carries VERBATIM copies of the query at
+    * NEGATIVE ids: a verbatim copy's code is per-subspace the argmin cell
+    * for the query, so its ADC distance is the global minimum over all
+    * possible codes, and negative ids win every tie-break against the
+    * organic corpus (ids ≥ 0) — the streamed ids at ranks 1..10 are
+    * enumerable truth regardless of how the lossy quantizer treats the
+    * organic rows. */
   gate("st10_stream_pq_ingest",
       // streamed verbatim copies of the query at negative ids: global-minimum
       // ADC by construction, ties lost by every organic id >= 0
@@ -879,11 +879,6 @@ object StreamingGates extends GateFamily {
       .orderBy("event_type")
   }
 
-  /** STREAMING enforcement: the events stream routes through the s32
-    * quarantine protocol micro-batch by micro-batch (checkpoint-keyed
-    * tags → replay-idempotent in both destinations); the union of the
-    * two landed tables must reproduce every verdict the batch oracle
-    * computes. */
   /** STREAMING markup extraction — the crawl-ingest front door as a
     * stream: the per-document HTML wrapper of `t48` flows through
     * `extractMarkup` inside a file-source stream and lands via the
@@ -1045,6 +1040,11 @@ object StreamingGates extends GateFamily {
       .orderBy("doc_id")
   }
 
+  /** STREAMING enforcement: the events stream routes through the s32
+    * quarantine protocol micro-batch by micro-batch (checkpoint-keyed
+    * tags → replay-idempotent in both destinations); the union of the
+    * two landed tables must reproduce every verdict the batch oracle
+    * computes. */
   gate("st14_stream_enforce",
       // the stream must land on the batch truth: same counters over the
       // whole events table

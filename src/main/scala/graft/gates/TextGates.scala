@@ -703,13 +703,6 @@ object TextGates extends GateFamily {
       .orderBy("doc_id")
   }
 
-  /** HTML metadata extraction: title (mixed-case tag, padded, carrying
-    * an `&amp;` the decoder must fold), meta description (REVERSED
-    * attribute order on odd docs — both orders must parse), canonical
-    * link, and the `<html lang>` claim, all from fixture-built pages.
-    * The oracle reconstructs each field in closed form, so every regex
-    * and the entity decode are hash-pinned.
-    * See [[graft.functions.TextFunctions.htmlTitle]]. */
   /** Meta-robots compliance ([[graft.operators.Frontier.pageDirectives]]
     * / `indexablePages`): five directive variants — plain noindex,
     * index-follow, uppercase NOINDEX+nofollow, `none` (implies both),
@@ -800,6 +793,13 @@ object TextGates extends GateFamily {
       .orderBy("doc_id", "outlink")
   }
 
+  /** HTML metadata extraction: title (mixed-case tag, padded, carrying
+    * an `&amp;` the decoder must fold), meta description (REVERSED
+    * attribute order on odd docs — both orders must parse), canonical
+    * link, and the `<html lang>` claim, all from fixture-built pages.
+    * The oracle reconstructs each field in closed form, so every regex
+    * and the entity decode are hash-pinned.
+    * See [[graft.functions.TextFunctions.htmlTitle]]. */
   gate("t60_html_meta",
       // every field reconstructed in closed form: the &amp; in the title
       // must decode, both meta attribute orders must parse
@@ -3611,15 +3611,6 @@ object TextGates extends GateFamily {
       .orderBy("source")
   }
 
-  /** Bigram-LM perplexity over the corpus (trained on itself here; a real
-    * pipeline trains on a held-out quality sample). At gate scale the
-    * corpus vocabulary sits far under the model caps, so training is
-    * untruncated and the whole formula IS SQL-expressible: the oracle
-    * re-derives the counts and the add-k smoothing. Scores are quantized
-    * at 1e-6 for cross-engine hashing (ln/exp differ in the last ulp
-    * between engines; the FP spread is ~1e-13, so a 1e-6 quantum is 7
-    * orders of margin) and perplexity is recomputed from the ROUNDED
-    * avg_logprob so the exp amplification cannot straddle a boundary. */
   /** Trigram stupid-backoff LM gate: trained on the corpus itself, scored
     * distributed; the oracle retrains from scratch in SQL and replays the
     * full backoff chain (α=0.5 keeps every constant exact — see
@@ -3673,6 +3664,15 @@ object TextGates extends GateFamily {
       .orderBy("doc_id")
   }
 
+  /** Bigram-LM perplexity over the corpus (trained on itself here; a real
+    * pipeline trains on a held-out quality sample). At gate scale the
+    * corpus vocabulary sits far under the model caps, so training is
+    * untruncated and the whole formula IS SQL-expressible: the oracle
+    * re-derives the counts and the add-k smoothing. Scores are quantized
+    * at 1e-6 for cross-engine hashing (ln/exp differ in the last ulp
+    * between engines; the FP spread is ~1e-13, so a 1e-6 quantum is 7
+    * orders of margin) and perplexity is recomputed from the ROUNDED
+    * avg_logprob so the exp amplification cannot straddle a boundary. */
   gate("t11_perplexity",
       """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
                     FROM documents),
@@ -3984,8 +3984,6 @@ object TextGates extends GateFamily {
       .orderBy("doc_id")
   }
 
-  /** Pre-dedup text normalization (lowercase, control/punct strip, space
-    * collapse) — dialect-safe regex classes make it exactly oracle-able. */
   /** Frequent tokens via the Misra–Gries TypedImperativeAggregate, fed the
     * token ARRAY directly (no explode — each map task folds its rows into
     * one bounded sketch and only sketches cross the shuffle). capacity=64
@@ -4316,6 +4314,8 @@ object TextGates extends GateFamily {
       .orderBy("term")
   }
 
+  /** Pre-dedup text normalization (lowercase, control/punct strip, space
+    * collapse) — dialect-safe regex classes make it exactly oracle-able. */
   gate("t14_normalize",
       """SELECT doc_id,
          trim(regexp_replace(regexp_replace(regexp_replace(lower(text),

@@ -4,6 +4,9 @@ import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import graft.functions.NearestCentroids
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (array<float>). Two paths:
@@ -18,9 +21,9 @@ import org.apache.spark.sql.functions._
   *    turning ANN into a partition-pruned scan.
   *
   * All dot products run through fused codegen'd kernel expressions
-  * (CosineSimilarity, HyperplaneSketchExpr); the composable zip_with +
-  * aggregate forms are kept only as property-test references (Catalyst
-  * HOFs are interpreted). No UDFs.
+  * (CosineSimilarity, NearestCentroids, HyperplaneSketchExpr); the
+  * composable zip_with + aggregate forms are kept only as property-test
+  * references (Catalyst HOFs are interpreted). No UDFs.
   */
 object Ann {
 
@@ -249,7 +252,15 @@ object Ann {
     * pre-scan (a fraction computation would pay a full pass over the data)
     * and no RNG — `xxhash64(id, seed) % 16 == 0` picks ~1/16 of rows and
     * the limit stops the scan as soon as `nlist` are found. Tiny inputs
-    * top up from a plain limit. */
+    * top up from a plain limit.
+    *
+    * The input is read ONCE: it is persisted (`MEMORY_AND_DISK`) for the
+    * build, so the sample, its fallback, every Lloyd round and the final
+    * layout read the cached copy, and the copy is released after the
+    * first action over the returned `clustered` frame — the index's first
+    * consumer (a probe, a graph build, SemDeDup, `ivfWrite`'s data write)
+    * reads it too. An input the caller already cached stays the caller's:
+    * it is read as is and never released here. */
   def ivfBuild(
       df: DataFrame,
       idCol: String,
@@ -260,44 +271,47 @@ object Ann {
       assignTop: Int = 1): IvfIndex = {
     require(assignTop >= 1 && assignTop <= nlist,
       s"assignTop must be in [1, nlist=$nlist], got $assignTop")
+    val owned = df.storageLevel == StorageLevel.NONE
+    val input = if (owned) df.persist(StorageLevel.MEMORY_AND_DISK) else df
     def vecs(d: DataFrame): Array[Array[Double]] =
       d.collect().map(_.getSeq[Any](0).map {
         case f: Float => f.toDouble
         case d: Double => d
       }.toArray)
-    // id-ordered takes: a bare limit() is partition-order-dependent, which
-    // would make the seeded centroids depend on input layout — orderBy +
-    // limit plans as TakeOrdered (per-partition heaps, no full sort)
-    val sampled = vecs(df
-      .filter(pmod(xxhash64(col(idCol), lit(seed)), lit(16)) === 0)
-      .orderBy(col(idCol)).select(col(vecCol)).limit(nlist))
-    val sample =
-      if (sampled.length >= nlist) sampled
-      else vecs(df.orderBy(col(idCol)).select(col(vecCol)).limit(nlist))
-    require(sample.nonEmpty, "empty input")
-    var centroids = sample.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-
-    // nearest centroid per row: argmax over a static list of literal
-    // centroid vectors — codegen'd cosine per centroid, no shuffle
-    def assign(cs: Seq[(Int, Array[Double])]): DataFrame =
-      assignClusters(df, cs, vecCol)
-
-    for (_ <- 1 to iterations) {
-      val means = assign(centroids)
-        .select(col("gr_cluster"), posexplode(col(vecCol)))
-        .groupBy("gr_cluster", "pos").agg(avg(col("col").cast("double")).as("m"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray
-        }
-      centroids = centroids.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
+    val (centroids, clustered) = try {
+      // id-ordered takes: a bare limit() is partition-order-dependent, which
+      // would make the seeded centroids depend on input layout — orderBy +
+      // limit plans as TakeOrdered (per-partition heaps, no full sort)
+      val sampled = vecs(input
+        .filter(pmod(xxhash64(col(idCol), lit(seed)), lit(16)) === 0)
+        .orderBy(col(idCol)).select(col(vecCol)).limit(nlist))
+      val sample =
+        if (sampled.length >= nlist) sampled
+        else vecs(input.orderBy(col(idCol)).select(col(vecCol)).limit(nlist))
+      require(sample.nonEmpty, "empty input")
+      var cs = sample.zipWithIndex.map { case (v, i) => (i, v) }.toSeq
+      for (_ <- 1 to iterations) {
+        val means = assignClusters(input, cs, vecCol)
+          .select(col("gr_cluster"), posexplode(col(vecCol)))
+          .groupBy("gr_cluster", "pos").agg(avg(col("col").cast("double")).as("m"))
+          .collect()
+          .groupBy(_.getInt(0))
+          .map { case (cid, rows) =>
+            cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray
+          }
+        cs = cs.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
+      }
+      // Lloyd refinement always runs on the PRIMARY (argmax) assignment;
+      // only the final stored layout multi-assigns — soft copies are a
+      // serving-recall device, not cluster members for the means
+      (cs, assignClusters(input, cs, vecCol, assignTop))
+    } catch { case e: Throwable =>
+      if (owned) input.unpersist(false)
+      throw e
     }
-    // Lloyd refinement always runs on the PRIMARY (argmax) assignment;
-    // only the final stored layout multi-assigns — soft copies are a
-    // serving-recall device, not cluster members for the means
     IvfIndex(centroids,
-      assignClustersTop(df, centroids, vecCol, assignTop), vecCol, assignTop)
+      if (owned) CacheRelease.afterFirstAction(clustered, Seq(input)) else clustered,
+      vecCol, assignTop)
   }
 
   /** Driver-side cosine between a centroid and a query (tiny: nlist×dim). */
@@ -405,66 +419,34 @@ object Ann {
       .filter(col("rank") <= k)
   }
 
-  /** The per-centroid scored structs backing assignment AND the drift
-    * telemetry: one literal centroid list, codegen'd cosine per centroid.
-    * Shared so the assigned cluster and its score can never disagree. */
-  private def scoredStructs(cs: Seq[(Int, Array[Double])],
-      vecCol: String): Seq[Column] =
-    cs.map { case (cid, c) =>
-      struct(cosine(col(vecCol), lit(c)).as("s"), lit(cid).as("cid"))
-    }
-
   /** Cosine of each row to its NEAREST centroid — the assignment-quality
-    * signal the drift telemetry aggregates (zero shuffle, same kernel as
-    * assignment). */
+    * signal the drift telemetry aggregates (zero shuffle, the assignment
+    * kernel's own score, so the assigned cluster and its score can never
+    * disagree). */
   private def assignedCos(cs: Seq[(Int, Array[Double])], vecCol: String): Column =
-    greatest(scoredStructs(cs, vecCol): _*).getField("s")
+    NearestCentroids(col(vecCol), cs, 1).getItem(0).getField("cos")
 
-  /** Nearest-centroid assignment: argmax over a static list of literal
-    * centroid vectors — codegen'd cosine per centroid, zero shuffle. The
-    * struct-comparison tie-break (equal score → larger cid) is shared by
-    * build and append, so identical vectors always land in the same
-    * cluster regardless of which path assigned them. */
-  private def assignClusters(df: DataFrame,
-      cs: Seq[(Int, Array[Double])], vecCol: String): DataFrame = {
+  /** Nearest-centroid assignment, zero shuffle, through one fused kernel
+    * ([[graft.functions.NearestCentroids]]): each row lands in its
+    * `assignTop` nearest clusters (one output row per landing). Rank 1 is
+    * the argmax (equal scores break to the LARGER cid, a NaN score ranks
+    * first), shared by build, append, [[GraphAnn.nswAppend]] and
+    * [[Dedup.semDedupAppend]], so identical vectors always land in the
+    * same cluster regardless of which path assigned them. `assignTop = 1`
+    * keeps the single-copy plan (no explode). */
+  private[operators] def assignClusters(df: DataFrame,
+      cs: Seq[(Int, Array[Double])], vecCol: String,
+      assignTop: Int = 1): DataFrame = {
     // no leading underscore in the column/dir name ON PURPOSE: `_`-prefixed
     // paths read as metadata to graft discovery (and hive), which would
     // hide the cluster dirs from compaction and any graft-side scan
     require(!df.columns.contains("gr_cluster"),
       "input already carries a 'gr_cluster' column — rename it before indexing")
+    val ranked = NearestCentroids(col(vecCol), cs, assignTop)
     df.withColumn("gr_cluster",
-      greatest(scoredStructs(cs, vecCol): _*).getField("cid"))
+      if (assignTop == 1) ranked.getItem(0).getField("cid")
+      else explode(ranked.getField("cid")))
   }
-
-  /** Top-`assignTop` soft assignment: each row lands in its `assignTop`
-    * nearest clusters (one output row per landing). Rank 1 uses EXACTLY
-    * [[assignClusters]]'s argmax contract — the struct sort key is
-    * `(−cosine, −cid)` ascending, so equal scores break to the LARGER
-    * cid, matching `greatest(struct(s, cid))` — and `assignTop = 1`
-    * keeps the original single-copy plan (no explode). */
-  private[operators] def assignClustersTop(df: DataFrame,
-      cs: Seq[(Int, Array[Double])], vecCol: String,
-      assignTop: Int): DataFrame =
-    if (assignTop == 1) assignClusters(df, cs, vecCol)
-    else {
-      require(!df.columns.contains("gr_cluster"),
-        "input already carries a 'gr_cluster' column — rename it before indexing")
-      val scored = array(cs.map { case (cid, c) =>
-        struct((-cosine(col(vecCol), lit(c))).as("ns"),
-          lit(-cid).as("ncid"))
-      }: _*)
-      df.withColumn("gr_cluster",
-        explode(transform(slice(sort_array(scored), 1, assignTop),
-          x => -x.getField("ncid"))))
-    }
-
-  /** The frozen-centroid assignment, shared with the operators that must
-    * cluster NEW rows exactly like the index did (incremental SemDeDup —
-    * [[graft.operators.Dedup.semDedupAppend]]). Same kernel, same
-    * tie-break, so batch and build assignments can never diverge. */
-  private[operators] def assignWithFrozenCentroids(df: DataFrame,
-      cs: Seq[(Int, Array[Double])], vecCol: String): DataFrame =
-    assignClusters(df, cs, vecCol)
 
   /** Sidecar carrying the structural parameters of a persisted IVF index
     * (`dim`, `nlist`) — the values an append MUST match: appending
@@ -686,7 +668,7 @@ object Ann {
     // multi-assigns exactly like the build did (sidecar assign_top), so
     // appended rows keep the index's boundary-recall contract.
     val assigned =
-      assignClustersTop(newVecs, centroids, vecCol, stored0.assignTop).persist()
+      assignClusters(newVecs, centroids, vecCol, stored0.assignTop).persist()
     try {
       graft.core.TaggedAppend.append(assigned, s"$path/data", tag,
         Seq("gr_cluster"))

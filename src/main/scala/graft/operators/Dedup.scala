@@ -650,7 +650,7 @@ object Dedup {
       requireMonotonicIds: Boolean = true): DataFrame = {
     require(index.assignTop == 1,
       "semDedupAppend needs a single-assignment index (assignTop = 1)")
-    val batch = graft.operators.Ann.assignWithFrozenCentroids(
+    val batch = graft.operators.Ann.assignClusters(
         newRows.select(col(idCol), col(index.vecCol)),
         index.centroids, index.vecCol)
       .select(col(idCol).as("id"), col(index.vecCol).as("vec"),

@@ -345,7 +345,7 @@ object GraphAnn {
     // assignment, one row per (cluster, copy) — both the witness
     // arithmetic and the touched-cluster set must see every copy, or a
     // soft copy's graph home would silently stay stale
-    val batchAssigned = Ann.assignClustersTop(
+    val batchAssigned = Ann.assignClusters(
       newVecs.select(col(idCol), col(vecCol)), preIdx.centroids, vecCol,
       preIdx.assignTop)
     val (bRows, bXor) = witness(batchAssigned, col(idCol), perCopy)

@@ -68,6 +68,7 @@ class CodegenCompileSpec extends SparkSpec {
     "d18_jaccard_join",     // SortedShingles + SortedJaccard
     "a1_ann_brute",         // CosineSimilarity
     "a2_ann_lsh",           // HyperplaneSketch
+    "a3_ann_ivf",           // NearestCentroids (centroid matrix reference obj)
     "p1_ann_pq",            // PqCodes (double[][][] reference objs)
     "t65_main_content",     // MainContent (r16)
     "t67_crawl_backedge",   // composed Http+MainContent+UrlResolve (r16)
@@ -87,7 +88,7 @@ class CodegenCompileSpec extends SparkSpec {
     * defect-class check, ~60 s of the suite's budget). */
   private val referenceObjGates = Seq(
     "t1_langid", "t63_unigram_tokens", "t57_dictionary_tag", "p1_ann_pq",
-    "d2_dedup_minhash", "t65b_main_content_blocks")
+    "d2_dedup_minhash", "t65b_main_content_blocks", "a3_ann_ivf")
 
   private def codegenOnlySweep(gates: Seq[String]): Unit = {
     val conf = spark.conf

@@ -29,6 +29,19 @@ class ReadPathSpec extends SparkSpec {
     assert(df.count() == 2)
   }
 
+  test("A1b: a single-file root is the one partition, from one listing") {
+    val dir = tmpDir("a1b")
+    writeFile(s"$dir/f1.csv", csv)
+    Discovery.resetListingCounter()
+    val parts = Graft.discover(spark, s"$dir/f1.csv")
+    assert(parts.map(_.url.stripPrefix("file:")) == Seq(s"$dir/f1.csv"))
+    assert(parts.head.columns.isEmpty && parts.head.meta.exists(_.size == csv.length))
+    assert(Discovery.listingCalls.get() == 1)
+    val df = Graft.readPartitionedTable(spark, s"$dir/f1.csv")
+    assert(df.columns.toSet == Set("c1", "c2"))
+    assert(df.count() == 2)
+  }
+
   test("A2: hive-style partitions auto-parsed as strings") {
     val dir = tmpDir("a2")
     writeFile(s"$dir/c3=42/c4=test/f1.csv", csv)

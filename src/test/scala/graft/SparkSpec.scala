@@ -58,22 +58,23 @@ abstract class SparkSpec extends AnyFunSuite {
   }
 
   /** Dataset actions (count, collect, write, …) completed while `body`
-    * runs, counted by a QueryExecutionListener — one per action however
-    * many jobs AQE splits it into. `Dataset.rdd` reports to the listener
-    * as an execution named "rdd" but runs no job, so it is not counted.
-    * Fenced as [[jobsDuring]] is: a fence action is recognised by its one
-    * output column's name. */
-  def actionsDuring[T](body: => T): (T, Int) = {
+    * runs, as the QueryExecutions a QueryExecutionListener saw — one per
+    * action however many jobs AQE splits it into. `Dataset.rdd` reports to
+    * the listener as an execution named "rdd" but runs no job, so it is not
+    * kept. Fenced as [[jobsDuring]] is: a fence action is recognised by its
+    * one output column's name. */
+  def executionsDuring[T](body: => T)
+      : (T, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val prefix = "graft_test_fence_"
-    val actions = new java.util.concurrent.atomic.AtomicInteger
+    val seenQes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val fences = new java.util.concurrent.LinkedBlockingQueue[String]
     val listener = new QueryExecutionListener {
       private def seen(funcName: String, qe: QueryExecution): Unit =
         qe.analyzed.output.map(_.name) match {
           case Seq(f) if f.startsWith(prefix) => fences.put(f.stripPrefix(prefix))
-          case _ => if (funcName != "rdd") actions.incrementAndGet()
+          case _ => if (funcName != "rdd") seenQes.add(qe)
         }
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen(f, qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(f, qe)
@@ -85,11 +86,18 @@ abstract class SparkSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     try {
       fence("open")
-      actions.set(0)
+      seenQes.clear()
       val out = body
       fence("close")
-      (out, actions.get)
+      (out, seenQes.toArray(Array.empty[QueryExecution]).toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** How many Dataset actions completed while `body` ran
+    * ([[executionsDuring]]). */
+  def actionsDuring[T](body: => T): (T, Int) = {
+    val (out, qes) = executionsDuring(body)
+    (out, qes.size)
   }
 
   /** Order-insensitive comparison: sorted rows of string-rendered values. */
