@@ -1,7 +1,5 @@
 package graft.api
 
-import java.util.UUID
-
 import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.Path
@@ -866,7 +864,7 @@ object Graft {
     }
     withFs(spark, url, fsConf) { fs =>
       val target = fs.makeQualified(new Path(url))
-      val tmp = new Path(target.getParent, s".graft_tmp_${UUID.randomUUID().toString.take(8)}")
+      val tmp = StagedCommit.objectStaging(target.getParent)
       val defaults = fmt match {
         case "csv" => Map("header" -> "true")
         case _ => Map.empty[String, String]
@@ -1322,17 +1320,11 @@ object Graft {
     *  - only matching partitions are touched: `query` scopes the pass
     *    (e.g. yesterday's dirs) exactly like a scoped read.
     *
-    * Commit protocol, per directory: new files are staged in a hidden
-    * `.graft_compact_<id>` child (dot-names are invisible to both graft
-    * discovery and Spark's own file index, so a partial stage never
-    * surfaces), then moved into the partition dir — part-file names embed a
-    * job UUID, so they cannot collide with the old files — and only then
-    * are the old files deleted. Readers listing DURING a commit may see a
-    * row twice (move-in happens before delete-old); a crash mid-commit
-    * leaves at worst that duplicate window plus a hidden staging dir, never
-    * missing rows. This is the documented trade of a metastore-less layout:
-    * with no manifest to swap atomically, duplicates-then-cleanup beats
-    * transient data loss.
+    * Commit protocol, per directory: [[StagedCommit.moveIn]] from a hidden
+    * staging child, new files in before old files out. Readers listing
+    * DURING a commit may see a row twice; a crash mid-commit leaves at
+    * worst that duplicate window plus the staging dir, never missing rows
+    * — duplicates-then-cleanup beats transient data loss.
     *
     * `options` apply to both the read and the write of the rewritten files
     * (e.g. csv `header`). Returns per-pass [[CompactionStats]]; a second
@@ -1401,8 +1393,7 @@ object Graft {
           csvSep(options), csvQuote(options)).size
 
       def rewrite(dir: String, desired: Int): Int = {
-        val oldFiles = byDir(dir).map(_.url)
-        val staging = new Path(dir, s".graft_compact_${UUID.randomUUID().toString.take(8)}")
+        val staging = StagedCommit.compactStaging(dir)
         // mergeSchema by default for the columnar formats: a dir whose files
         // straddle a column addition (an evolving sink) must rewrite under
         // the UNION schema — first-file inference would silently and
@@ -1419,18 +1410,10 @@ object Graft {
           .coalesce(desired)
           .write.format(format).options(options ++ fsConf)
           .mode("overwrite").save(staging.toString)
-        val staged = fs.listStatus(staging).filterNot { st =>
-          val n = st.getPath.getName; n.startsWith("_") || n.startsWith(".")
-        }
-        // move-in before delete-old: unique part names cannot collide, and a
-        // crash here leaves duplicates (cleanable), never missing rows
-        staged.foreach { st =>
-          val t = new Path(dir, st.getPath.getName)
-          require(fs.rename(st.getPath, t), s"rename failed: ${st.getPath} -> $t")
-        }
-        oldFiles.foreach(f => fs.delete(new Path(f), false))
+        val moved = StagedCommit.moveIn(fs, staging, new Path(dir),
+          byDir(dir).map(p => new Path(p.url)))
         fs.delete(staging, true)
-        staged.length
+        moved
       }
 
       // refuse csv schema drift BEFORE any dir rewrites (not mid-pass,
@@ -1511,16 +1494,16 @@ object Graft {
     }
   }
 
-  /** Retention vacuum: delete CRASH RESIDUE left by the write protocols —
-    * hidden `.graft_ingest_staging_<tag>` / `.graft_route_staging_<tag>`
-    * trees (a tagged or quarantine-routed append that died before its
-    * rename commit), hidden `.graft_compact_<id>` trees (a compaction
-    * rewrite that died before its swap), and Spark `_temporary` trees (a
-    * plain write that died before its job commit) — when their directory
-    * is older than `olderThanMs`. Metadata-only: one recursive
-    * listing, deletes by directory rename/unlink, never a data read.
+  /** Retention vacuum: delete CRASH RESIDUE older than `olderThanMs`, as
+    * [[StagedCommit.residue]] names it: the staging dir of any
+    * rename-committed write that died before its commit (`stagingDirs`),
+    * of a compaction rewrite (`compactDirs`), and Spark `_temporary` trees
+    * (`tempDirs`). Metadata-only: one recursive listing, deletes by
+    * directory unlink, never a data read.
     *
     * What it deliberately does NOT touch:
+    *  - a swap's retired dir ([[StagedCommit.isRetired]]), neither swept
+    *    nor descended into: after a crash it may be the complete copy;
     *  - `retired-*.parquet` files: those are LIVE DATA — compaction renames
     *    skipped tagged files to end the tag's addressability, it does not
     *    mark them garbage;
@@ -1545,14 +1528,8 @@ object Graft {
     val cutoff = System.currentTimeMillis() - olderThanMs
     withFs(spark, url, fsConf) { fs =>
       val root = fs.makeQualified(new Path(url))
-      var staging = 0; var compact = 0; var temp = 0
+      val swept = collection.mutable.Map[StagedCommit.Residue.Value, Int]().withDefaultValue(0)
       var files = 0L; var bytes = 0L; var recent = 0
-      def residueKind(name: String): Option[Int] =
-        if (name.startsWith(".graft_ingest_staging_") ||
-            name.startsWith(".graft_route_staging_")) Some(0)
-        else if (name.startsWith(".graft_compact_")) Some(1)
-        else if (name == "_temporary") Some(2)
-        else None
       def measure(p: Path): Unit =
         fs.listStatus(p).foreach { st =>
           if (st.isDirectory) measure(st.getPath)
@@ -1562,7 +1539,7 @@ object Graft {
         fs.listStatus(dir).foreach { st =>
           if (st.isDirectory) {
             val name = st.getPath.getName
-            residueKind(name) match {
+            StagedCommit.residue(name) match {
               case Some(kind) =>
                 // inclusive: olderThanMs=0 means "any age" — a dir touched
                 // in the same millisecond as the call must still sweep
@@ -1570,21 +1547,20 @@ object Graft {
                   measure(st.getPath)
                   require(fs.delete(st.getPath, true),
                     s"vacuum: failed to delete ${st.getPath}")
-                  kind match {
-                    case 0 => staging += 1
-                    case 1 => compact += 1
-                    case _ => temp += 1
-                  }
+                  swept(kind) += 1
                 } else recent += 1
               case None =>
                 // descend through data dirs (incl. key=value partitions);
-                // other hidden/system trees are left alone, unvisited
-                if (!name.startsWith(".") && !name.startsWith("_")) walk(st.getPath)
+                // other hidden/system trees and retired copies are left
+                // alone, unvisited
+                if (!name.startsWith(".") && !name.startsWith("_") &&
+                    !StagedCommit.isRetired(name)) walk(st.getPath)
             }
           }
         }
       if (fs.exists(root)) walk(root)
-      VacuumStats(staging, compact, temp, files, bytes, recent)
+      import StagedCommit.Residue._
+      VacuumStats(swept(Staging), swept(Compaction), swept(SparkTemporary), files, bytes, recent)
     }
   }
 
@@ -1598,8 +1574,6 @@ object Graft {
     *  - a delta row with no matching target key is INSERTED;
     *  - if `deleteCol` is set, delta rows with that boolean true are
     *    tombstones: matching target keys are deleted, nothing inserted.
-    * The merge is idempotent: re-running with the same delta (e.g. after a
-    * mid-swap crash) converges to the same table.
     *
     * Shape, built for 100 TB tables with small-fraction deltas: the
     * touched-partition list (one `distinct` over the delta's partition
@@ -1607,10 +1581,15 @@ object Graft {
     * cardinality the swap loop walks) prunes discovery, so the target scan
     * reads only affected partitions; survivors are ONE left-anti join on
     * the key; the union with the delta's inserts writes to a hidden
-    * staging tree; per-partition commit is move-in-before-delete file
-    * renames (compaction's crash contract: duplicates cleanable, rows
-    * never lost). Untouched partitions are never read, listed, or
-    * rewritten. Partitions whose every row is deleted are removed.
+    * staging tree, committed partition by partition with
+    * [[StagedCommit.moveIn]]. Untouched partitions are never read, listed,
+    * or rewritten. Partitions whose every row is deleted are removed.
+    *
+    * Crash contract, compaction's: a re-run with the same delta after a
+    * crash BETWEEN partitions converges to the same table, but a crash
+    * INSIDE one partition's move-in leaves it with its old files plus some
+    * new ones, and the re-run's left-anti join keeps both copies of each
+    * surviving row: duplicates in the partition being moved, never lost rows.
     *
     * Partition values are matched in their hive string form: the delta's
     * partition columns are cast to string with Spark's own cast (the same
@@ -1672,7 +1651,7 @@ object Graft {
         survivors.unionByName(inserts.select(survivors.columns.map(col): _*))
     }
 
-    val staging = s"$url/.graft_merge_${UUID.randomUUID().toString.take(8)}"
+    val staging = StagedCommit.mergeStaging(url)
     writePartitionedTable(newData, staging, partitionCols, format = format,
       mode = "overwrite", fsConf = fsConf)
 
@@ -1689,24 +1668,11 @@ object Graft {
           val src = new Path(staging + Path.SEPARATOR + rel)
           val dst = new Path(rootQ + Path.SEPARATOR + rel)
           val oldFiles =
-            if (fs.exists(dst))
-              fs.listStatus(dst).filter { st =>
-                val n = st.getPath.getName
-                st.isFile && !n.startsWith("_") && !n.startsWith(".")
-              }.map(_.getPath).toSeq
+            if (fs.exists(dst)) StagedCommit.visible(fs, dst).filter(_.isFile).map(_.getPath)
             else Seq.empty
           if (fs.exists(src)) {
             if (!fs.exists(dst)) fs.mkdirs(dst)
-            fs.listStatus(src).filter { st =>
-              val n = st.getPath.getName
-              st.isFile && !n.startsWith("_") && !n.startsWith(".")
-            }.foreach { st =>
-              val tgt = new Path(dst, st.getPath.getName)
-              require(fs.rename(st.getPath, tgt),
-                s"rename failed: ${st.getPath} -> $tgt")
-              moved += 1
-            }
-            oldFiles.foreach(f => fs.delete(f, false))
+            moved += StagedCommit.moveIn(fs, src, dst, oldFiles)
           } else if (oldFiles.nonEmpty) {
             // every row of this partition was deleted by the delta
             fs.delete(dst, true)
@@ -1725,9 +1691,7 @@ object Graft {
     * DECIMAL(38,6) sums — associative, so increments compose in any
     * order and the merged sums equal a from-scratch aggregation
     * EXACTLY), unions with the stored sidecar, re-aggregates, and
-    * commits with the staged-swap discipline (stage → move live aside →
-    * move staged in → delete retired; a crash leaves an extra copy and a
-    * loud marker, never a torn table).
+    * commits by [[StagedCommit.Aggregate]]'s whole-dir swap.
     *
     * Work per increment is O(delta + sidecar) — at 100 TB the sidecar is
     * the small (keys-cardinality) side; the corpus is touched only by
@@ -1756,11 +1720,7 @@ object Graft {
             .as(s"sum_$m")): _*)
     withFs(spark, path, Map.empty) { fs =>
       val root = fs.makeQualified(new Path(path))
-      val staging = new Path(root.getParent, root.getName + ".graft_agg_staging")
-      val retired = new Path(root.getParent, root.getName + ".graft_agg_retired")
-      require(!fs.exists(retired),
-        s"$retired exists — a previous maintenance crashed mid-swap; " +
-          "recover manually before retrying")
+      val swap = StagedCommit.Aggregate.open(fs, root)
       // exactly-once under micro-batch REPLAY: the last applied batch id
       // rides INSIDE the sidecar dir (an underscore file, invisible to
       // the parquet read), so the swap commits data and watermark
@@ -1781,7 +1741,7 @@ object Graft {
           lastApplied.exists(_ >= batchId.get)) {
         spark.read.parquet(root.toString)
       } else {
-        fs.delete(staging, true)
+        swap.sweep()
         val fresh = partial(delta)
         val merged =
           if (!fs.exists(root)) fresh
@@ -1791,20 +1751,14 @@ object Graft {
             spark.read.parquet(root.toString).unionByName(fresh)
               .groupBy(keyCols: _*).agg(sumCols.head, sumCols.tail: _*)
           }
-        merged.write.mode("overwrite").parquet(staging.toString)
+        merged.write.mode("overwrite").parquet(swap.staging.toString)
         batchId.foreach { id =>
-          val out = fs.create(new Path(staging, metaName), true)
+          val out = fs.create(new Path(swap.staging, metaName), true)
           try out.write(id.toString.getBytes(
             java.nio.charset.StandardCharsets.UTF_8))
           finally out.close()
         }
-        if (fs.exists(root)) {
-          require(fs.rename(root, retired), s"retiring $root failed")
-          require(fs.rename(staging, root), s"moving in $staging failed")
-          fs.delete(retired, true)
-        } else {
-          require(fs.rename(staging, root), s"moving in $staging failed")
-        }
+        swap.swapWhole()
         spark.read.parquet(root.toString)
       }
     }
@@ -1818,16 +1772,10 @@ object Graft {
     * partition columns move out of the files into the directory tree and
     * therefore read back as strings, the fsql partition-value model.
     *
-    * Staged-swap commit (the ivfRebuild/compaction discipline):
-    *  1. REWRITE the full table into a dot-prefixed staging subtree
-    *     (discovery skips dot-dirs, so a concurrent reader never sees a
-    *     half-written layout);
-    *  2. VERIFY — the staged row count must equal the live count, else
-    *     refuse and leave staging for inspection;
-    *  3. SWAP — live partition dirs move aside into a retired dir, staged
-    *     dirs move in, and ONLY THEN the retired copy is deleted. A crash
-    *     mid-swap leaves an extra copy (plus a loud `retired` marker the
-    *     next call refuses on), never a missing table.
+    * The full table is rewritten into a hidden staging subtree, VERIFIED
+    * (the staged row count must equal the live count, else refuse and
+    * leave staging for inspection) and swapped in partition dir by
+    * partition dir by [[StagedCommit.Relayout]].
     *
     * Refuses streaming-sink tables carrying `_spark_metadata` for the
     * same reason compaction does. One full read + one partitioned write;
@@ -1852,40 +1800,21 @@ object Graft {
         s"$url carries a streaming-sink _spark_metadata manifest; relayout " +
           "would invalidate it. Delete the manifest dir first to opt into " +
           "listing-based reads, then relayout.")
-      val staging = new Path(root, ".graft_relayout_staging")
-      val retired = new Path(root, ".graft_relayout_retired")
-      require(!fs.exists(retired),
-        s"$retired exists — a previous relayout crashed mid-swap; recover " +
-          "manually (inspect which copy is complete) before retrying")
-      fs.delete(staging, true)
+      val swap = StagedCommit.Relayout.open(fs, root).sweep()
       val live = readPartitionedTable(spark, url, Q.True, parser,
         format = format, fsConf = fsConf)
       newPartitionCols.foreach(c => require(live.columns.contains(c),
         s"new partition column '$c' not in table columns " +
           live.columns.mkString("[", ",", "]")))
       val liveCount = live.count()
-      writePartitionedTable(live, staging.toString, newPartitionCols,
+      writePartitionedTable(live, swap.staging.toString, newPartitionCols,
         format = format, fsConf = fsConf)
-      val stagedCount = readPartitionedTable(spark, staging.toString,
+      val stagedCount = readPartitionedTable(spark, swap.staging.toString,
         Q.True, parser, format = format, fsConf = fsConf).count()
       require(stagedCount == liveCount,
         s"staged relayout has $stagedCount rows vs live $liveCount — " +
           "refusing to swap (staging left for inspection)")
-      def children(dir: Path): Seq[Path] =
-        fs.listStatus(dir).map(_.getPath)
-          .filterNot(p => p.getName.startsWith(".") || p.getName.startsWith("_"))
-          .toSeq
-      fs.mkdirs(retired)
-      children(root).foreach { c =>
-        require(fs.rename(c, new Path(retired, c.getName)),
-          s"relayout swap: retiring $c failed")
-      }
-      children(staging).foreach { c =>
-        require(fs.rename(c, new Path(root, c.getName)),
-          s"relayout swap: moving in $c failed")
-      }
-      fs.delete(staging, true)
-      fs.delete(retired, true)
+      swap.swapChildren(StagedCommit.visible(fs, _).map(_.getPath.getName))()
     }
   }
 }

@@ -7,15 +7,12 @@ import org.apache.spark.sql.DataFrame
   * families (minhash flat layout, IVF `key=value`-partitioned layout).
   *
   * Plain `mode("append")` gives every attempt fresh random part-file
-  * names, so a crash-then-retry doubles the appended rows. Here the rows
-  * are staged into a hidden directory (invisible to scans), then renamed
-  * into the target under deterministic `ingest-<tag>-NNNNN.parquet` names
-  * — and any files a previous attempt under the same tag committed are
-  * deleted first. A crash at ANY point followed by a retry of the same
-  * logical append (same `tag`) therefore converges to exactly one copy of
-  * the batch. Partitioned layouts stage with the same `partitionBy` and
-  * rename per partition subdirectory, so `key=value` pruning keeps
-  * working over appended files.
+  * names, so a crash-then-retry doubles the appended rows. Here any files
+  * a previous attempt under the same tag committed are deleted, then the
+  * rows are staged and moved in under deterministic
+  * `ingest-<tag>-NNNNN.parquet` names ([[StagedCommit.moveInTagged]], per
+  * `key=value` subdirectory for partitioned layouts). A crash at ANY point
+  * followed by a retry of the same `tag` converges to exactly one copy.
   *
   * Cost model at 100 TB: abort/append pay METADATA-only listings — the
   * target's first level plus, for partitioned layouts, one listing per
@@ -39,9 +36,6 @@ object TaggedAppend {
 
   /** File-name prefix of the part files a tagged append commits. */
   def filePrefix(tag: String): String = s"ingest-$tag-"
-
-  private def stagingDir(root: Path, tag: String) =
-    new Path(root, s".graft_ingest_staging_$tag")
 
   def requireSafeTag(tag: String): Unit =
     // ASCII-only, matching listIngestTags' filename pattern exactly: a
@@ -75,7 +69,7 @@ object TaggedAppend {
           }
         }
       sweep(root)
-      val staging = stagingDir(root, tag)
+      val staging = StagedCommit.ingestStaging(root, tag)
       if (fs.exists(staging)) fs.delete(staging, true)
       removed
     }
@@ -92,29 +86,12 @@ object TaggedAppend {
       rows.sparkSession.sessionState.newHadoopConf())
     abort(fs, path, tag)
     val root = new Path(path)
-    val staging = stagingDir(root, tag)
+    val staging = StagedCommit.ingestStaging(root, tag)
     val writer = rows.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
      else writer).parquet(staging.toString)
-    // collect (stagedFile, relative partition subpath) pairs
-    def partFiles(dir: Path, rel: Seq[String]): Seq[(Path, Seq[String])] =
-      fs.listStatus(dir).toSeq.flatMap { st =>
-        if (st.isFile && st.getPath.getName.startsWith("part-"))
-          Seq((st.getPath, rel))
-        else if (st.isDirectory && st.getPath.getName.contains("="))
-          partFiles(st.getPath, rel :+ st.getPath.getName)
-        else Nil
-      }
-    val parts = partFiles(staging, Nil).sortBy { case (p, rel) =>
-      (rel.mkString("/"), p.getName)
-    }
-    parts.zipWithIndex.foreach { case ((src, rel), i) =>
-      val destDir = rel.foldLeft(root)(new Path(_, _))
-      if (rel.nonEmpty && !fs.exists(destDir)) fs.mkdirs(destDir)
-      val dest = new Path(destDir, f"${filePrefix(tag)}$i%05d.parquet")
-      require(fs.rename(src, dest), s"tagged append: rename $src -> $dest failed")
-    }
+    val n = StagedCommit.moveInTagged(fs, staging, root, filePrefix(tag))
     fs.delete(staging, true)
-    parts.length
+    n
   }
 }

@@ -201,15 +201,15 @@ object ScanGates extends GateFamily {
       .select("l_orderkey", "l_linenumber", "l_quantity",
         "l_returnflag", "l_linestatus")
     Graft.writePartitionedTable(sub, out, Seq("l_returnflag", "l_linestatus"))
-    def touch(rel: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(out, rel)
+    def touch(dir: org.apache.hadoop.fs.Path, rel: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(dir, rel)
       fs.mkdirs(p.getParent)
       val o = fs.create(p, true); o.write(120); o.close()
     }
-    touch(".graft_ingest_staging_dead/part-00000.parquet")
-    touch("l_returnflag=R/l_linestatus=F/.graft_compact_dead/part-00000.parquet")
-    touch("_temporary/0/_temporary/attempt_x/part-00000.parquet")
-    touch("_graft_ingest_commit_keep")
+    touch(StagedCommit.ingestStaging(bp, "dead"), "part-00000.parquet")
+    touch(StagedCommit.compactStaging(s"$out/l_returnflag=R/l_linestatus=F"), "part-00000.parquet")
+    touch(bp, "_temporary/0/_temporary/attempt_x/part-00000.parquet")
+    touch(bp, "_graft_ingest_commit_keep")
     val stats = Graft.vacuum(s, out, olderThanMs = 0)
     require(stats.stagingDirs == 1 && stats.compactDirs == 1 &&
         stats.tempDirs == 1 && stats.filesRemoved == 3,
@@ -268,10 +268,9 @@ object ScanGates extends GateFamily {
          FROM events GROUP BY user_id ORDER BY user_id""") { (s, dir) =>
     val base = s"/tmp/graft_fixtures/aggmaint_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
     val conf = s.sessionState.newHadoopConf()
-    for (suffix <- Seq("", ".graft_agg_staging", ".graft_agg_retired")) {
-      val p = new org.apache.hadoop.fs.Path(base + suffix)
+    val bp = new org.apache.hadoop.fs.Path(base)
+    for (p <- bp +: StagedCommit.Aggregate.residueOf(bp))
       p.getFileSystem(conf).delete(p, true)
-    }
     val ev = Fixtures.events(s, dir).select("user_id", "event_id", "value")
     Graft.maintainAggregate(s, base, ev.filter(col("event_id") % 2 === 0),
       Seq("user_id"), Seq("value"))

@@ -166,11 +166,9 @@ object StreamingGates extends GateFamily {
     val sidecar = s"/tmp/graft_fixtures/strline_side_$tag"
     val cp = s"/tmp/graft_fixtures/strline_cp_$tag"
     val conf = s.sessionState.newHadoopConf()
-    for (p <- Seq(src, sidecar, sidecar + ".graft_agg_staging",
-        sidecar + ".graft_agg_retired", cp)) {
-      val pp = new org.apache.hadoop.fs.Path(p)
+    for (pp <- Seq(src, sidecar, cp).map(new org.apache.hadoop.fs.Path(_)) ++
+        StagedCommit.Aggregate.residueOf(new org.apache.hadoop.fs.Path(sidecar)))
       pp.getFileSystem(conf).delete(pp, true)
-    }
     val lined = linedDocs(s, dir)
     for (part <- 0 to 2)
       lined.filter(col("doc_id") % 3 === part)
@@ -798,11 +796,9 @@ object StreamingGates extends GateFamily {
     val sidecar = s"/tmp/graft_fixtures/stragg_side_$tag"
     val cp = s"/tmp/graft_fixtures/stragg_cp_$tag"
     val conf = s.sessionState.newHadoopConf()
-    for (p <- Seq(src, sidecar, sidecar + ".graft_agg_staging",
-        sidecar + ".graft_agg_retired", cp)) {
-      val pp = new org.apache.hadoop.fs.Path(p)
+    for (pp <- Seq(src, sidecar, cp).map(new org.apache.hadoop.fs.Path(_)) ++
+        StagedCommit.Aggregate.residueOf(new org.apache.hadoop.fs.Path(sidecar)))
       pp.getFileSystem(conf).delete(pp, true)
-    }
     val ev = Fixtures.events(s, dir).select("user_id", "event_id", "value")
     for (part <- 0 to 2)
       ev.filter(col("event_id") % 3 === part)

@@ -493,19 +493,21 @@ object Ann {
     * `gr_cluster` (so every probe is a partition-pruned scan of nprobe/nlist
     * of the data — the 100 TB serving shape) plus the centroid table and
     * the [[IvfParamsSidecar]] alongside. The sidecar also records the
-    * build-time mean assigned cosine (one extra aggregation over the
-    * corpus, same codegen'd kernel as assignment) — the baseline
-    * [[ivfDriftReport]] compares every appended batch against. */
+    * build-time mean assigned cosine (observed on the data write, same
+    * codegen'd kernel as assignment) — the baseline [[ivfDriftReport]]
+    * compares every appended batch against. */
   def ivfWrite(index: IvfIndex, path: String): Unit = {
     val spark = index.clustered.sparkSession
     import spark.implicits._
-    index.clustered.write.mode("overwrite")
+    val meanCos = org.apache.spark.sql.Observation()
+    index.clustered
+      .observe(meanCos, avg(assignedCos(index.centroids, index.vecCol)).as("m"))
+      .write.mode("overwrite")
       .partitionBy("gr_cluster").parquet(s"$path/data")
     index.centroids.toDF("cid", "centroid")
       .write.mode("overwrite").parquet(s"$path/centroids")
     val dim = index.centroids.headOption.map(_._2.length).getOrElse(0)
-    val buildMeanCos = index.clustered
-      .agg(avg(assignedCos(index.centroids, index.vecCol))).head().getDouble(0)
+    val buildMeanCos = meanCos.get("m")
     val fs = ivfFs(spark, path)
     val out = fs.create(new org.apache.hadoop.fs.Path(path, IvfParamsSidecar), true)
     try out.write(
@@ -767,21 +769,14 @@ object Ann {
     * [[ivfDriftReport]] calls for: re-cluster the full current corpus
     * (build rows + every append) with fresh Lloyd refinement, so frozen
     * centroids catch up with a shifted distribution. The serving path is
-    * never overwritten blind:
-    *
-    *  1. STAGE — the re-clustered layout (data/centroids/sidecar) writes
-    *     to a hidden staging dir under the index root;
-    *  2. VERIFY — staged row count must equal the live count, and a
-    *     probe against the staged index must return; a verification
-    *     failure leaves the live index untouched;
-    *  3. SWAP — live dirs move aside, staged dirs move in, THEN the
-    *     retired copy is deleted (the compaction commit pattern:
-    *     new-in-before-old-gone, so a crash leaves a recoverable extra
-    *     copy, never a missing index);
-    *  4. RESET — append drift records are cleared (they measured the OLD
-    *     centroids) and the sidecar records `generation` + the NEW
-    *     build-time mean cosine, so the next [[ivfDriftReport]] compares
-    *     fresh appends against the rebuilt baseline.
+    * never overwritten blind: the re-clustered layout is staged, VERIFIED
+    * (staged row count equals the live count, a probe against the staged
+    * index returns; a failure leaves the live index untouched) and
+    * swapped in by [[graft.core.StagedCommit.Rebuild]]. After the swap,
+    * append drift records are cleared (they measured the OLD centroids)
+    * and the sidecar records `generation` + the NEW build-time mean
+    * cosine, so the next [[ivfDriftReport]] compares against the rebuilt
+    * baseline.
     *
     * Same quiesce contract as [[ivfCompact]]: single writer, no
     * concurrent appends/probes during the swap window. `nlist = 0` keeps
@@ -803,12 +798,7 @@ object Ann {
       if (node.hasNonNull("assign_top")) node.get("assign_top").asInt else 1
     val fs = ivfFs(spark, path)
     def p(child: String) = new org.apache.hadoop.fs.Path(path, child)
-    val staging = p(".graft_rebuild_staging")
-    val retired = p(".graft_rebuild_retired")
-    require(!fs.exists(retired),
-      s"$retired exists — a previous rebuild crashed mid-swap; recover " +
-        "manually (inspect which copy is complete) before rebuilding again")
-    fs.delete(staging, true) // sweep a previous attempt that died pre-swap
+    val swap = graft.core.StagedCommit.Rebuild.open(fs, new org.apache.hadoop.fs.Path(path)).sweep()
     // tombstoned rows must not resurrect into the rebuilt index; a
     // multi-assigned layout stores assignTop copies per id — rebuild
     // from the DISTINCT-id corpus and re-multi-assign fresh
@@ -819,52 +809,36 @@ object Ann {
       s"stored schema ${corpus.columns.mkString(",")} lacks $idCol/$vecCol")
     val liveCount = corpus.count()
     ivfWrite(ivfBuild(corpus, idCol, vecCol, useNlist, seed, iterations,
-      assignTop = useTop), staging.toString)
+      assignTop = useTop), swap.staging.toString)
     // verify the staged copy before touching the live one (every distinct
     // id lands exactly assignTop times in the multi-assigned layout)
-    val stagedCount = spark.read.parquet(s"$staging/data").count()
+    val stagedCount = spark.read.parquet(s"${swap.staging}/data").count()
     require(stagedCount == liveCount * useTop,
       s"staged rebuild has $stagedCount rows vs live $liveCount × " +
         s"assignTop=$useTop — refusing to swap (staging dir left for " +
         "inspection)")
-    val probeVec = spark.read.parquet(s"$staging/data")
+    val probeVec = spark.read.parquet(s"${swap.staging}/data")
       .select(col(vecCol)).head().getSeq[Any](0).map {
         case f: Float => f
         case d: Double => d.toFloat
       }.toArray
-    require(ivfTopK(ivfRead(spark, staging.toString), idCol, vecCol,
+    require(ivfTopK(ivfRead(spark, swap.staging.toString), idCol, vecCol,
         probeVec, k = 1).count() == 1,
       "staged rebuild failed its probe — refusing to swap")
-    // swap: move live aside, move staged in, only then delete the retired
-    // copy (a crash mid-swap leaves an extra copy, never a missing index)
-    fs.mkdirs(retired)
-    def move(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path) =
-      require(fs.rename(src, dst), s"rebuild swap: rename $src -> $dst failed")
-    move(p("data"), new org.apache.hadoop.fs.Path(retired, "data"))
-    move(p("centroids"), new org.apache.hadoop.fs.Path(retired, "centroids"))
-    move(new org.apache.hadoop.fs.Path(staging, "data"), p("data"))
-    move(new org.apache.hadoop.fs.Path(staging, "centroids"), p("centroids"))
-    // drift records measured the RETIRED centroids — clear before the new
-    // baseline lands so a crash window can only under-report, never
-    // compare stale records against the new baseline
-    fs.delete(p(IvfDriftDir), true)
-    // the rebuild physically dropped the tombstoned rows — the set is
-    // spent (leaving it would re-filter ids that may later be re-added)
-    fs.delete(p(IvfTombstonesDir), true)
-    val staged = readJsonFile(fs, new org.apache.hadoop.fs.Path(staging,
-      IvfParamsSidecar))
-    val out = fs.create(p(IvfParamsSidecar), true)
-    try out.write(
-      (s"""{"dim":${staged.get("dim").asInt},""" +
-        s""""nlist":${staged.get("nlist").asInt},""" +
-        s""""vec_col":"${staged.get("vec_col").asText}",""" +
-        s""""build_mean_cos":${staged.get("build_mean_cos").asDouble},""" +
-        s""""assign_top":${staged.get("assign_top").asInt},""" +
-        s""""generation":${gen + 1}}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(staging, true)
-    fs.delete(retired, true)
+    swap.swapChildren(_ => Seq("data", "centroids")) {
+      // drift records measured the RETIRED centroids — clear before the new
+      // baseline lands so a crash window can only under-report, never
+      // compare stale records against the new baseline
+      fs.delete(p(IvfDriftDir), true)
+      // the rebuild physically dropped the tombstoned rows — the set is
+      // spent (leaving it would re-filter ids that may later be re-added)
+      fs.delete(p(IvfTombstonesDir), true)
+      val sidecar = readJsonFile(fs, new org.apache.hadoop.fs.Path(swap.staging, IvfParamsSidecar))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].put("generation", gen + 1)
+      val out = fs.create(p(IvfParamsSidecar), true)
+      try out.write(new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsBytes(sidecar))
+      finally out.close()
+    }
     ivfRead(spark, path)
   }
 

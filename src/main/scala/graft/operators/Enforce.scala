@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Discovery, TaggedAppend}
+import graft.core.{Discovery, StagedCommit, TaggedAppend}
 
 /** Write-time constraint ENFORCEMENT — the routing complement of
   * [[Expect.audit]] (which only reports): every row either lands in the
@@ -19,11 +19,9 @@ import graft.core.{Discovery, TaggedAppend}
   * is ONE write job `partitionBy`-routed on the verdict — the input is
   * scanned ONCE, with no persist/cache of the corpus and no second pass
   * for the quarantine side (the two-filtered-writes alternative scans
-  * twice or caches 100 TB). Files then move into the two destinations
-  * under the [[graft.core.TaggedAppend]] naming protocol, so a crashed or
-  * replayed enforcement under the same tag converges to exactly one copy
-  * of the batch in each destination (abort-sweep of both, then stage,
-  * then rename — the ingest idempotency contract).
+  * twice or caches 100 TB). Files then move into both destinations as a
+  * [[graft.core.TaggedAppend]] does, so a replay under the same tag
+  * converges to exactly one copy of the batch in each.
   */
 object Enforce {
 
@@ -66,8 +64,7 @@ object Enforce {
     // partial commit from a crashed run must not survive the replay
     TaggedAppend.abort(fs, cleanPath, tag)
     TaggedAppend.abort(fs, quarantinePath, tag)
-    val cleanRoot = fs.makeQualified(new Path(cleanPath))
-    val stage = new Path(cleanRoot, s".graft_route_staging_$tag")
+    val stage = StagedCommit.routeStaging(fs.makeQualified(new Path(cleanPath)), tag)
     fs.delete(stage, true)
     Enforce.tag(df, checks).write.mode("overwrite")
       .partitionBy("gr_ok").parquet(stage.toString)
@@ -77,14 +74,7 @@ object Enforce {
       else {
         val dest = fs.makeQualified(new Path(destPath))
         if (!fs.exists(dest)) fs.mkdirs(dest)
-        val parts = fs.listStatus(sub)
-          .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-          .map(_.getPath).sortBy(_.getName)
-        parts.zipWithIndex.foreach { case (src, i) =>
-          val d = new Path(dest, f"${TaggedAppend.filePrefix(tag)}$i%05d.parquet")
-          require(fs.rename(src, d), s"routed write: rename $src -> $d failed")
-        }
-        parts.length
+        StagedCommit.moveInTagged(fs, sub, dest, TaggedAppend.filePrefix(tag))
       }
     }
     val nClean = commit("ok", cleanPath)

@@ -512,10 +512,9 @@ object Pq {
     * rows + every appended batch — supplying less silently drops rows
     * from the index; the row-count verification only checks against
     * `corpus` itself). Codebooks retrain with the stored (m, k) on the
-    * supplied corpus, every row re-encodes, and the swap follows
-    * [[graft.operators.Ann.ivfRebuild]]'s staged commit: stage → verify
-    * (row count + codebook/sidecar consistency via pqRead) → move live
-    * aside → move staged in → delete retired. Drift records are cleared
+    * supplied corpus, every row re-encodes, and the staged copy is
+    * verified (row count + codebook/sidecar consistency via pqRead) and
+    * swapped in by [[graft.core.StagedCommit.Retrain]]. Drift records are cleared
     * (they measured the OLD codebooks) and the sidecar records
     * `generation` + the new train_mse baseline. Same quiesce contract as
     * compaction: single writer, no concurrent appends/probes during the
@@ -541,38 +540,26 @@ object Pq {
         .map(_.group(1).toInt).getOrElse(1)
     }
     def child(base: String, c: String) = new org.apache.hadoop.fs.Path(base, c)
-    val staging = child(path, ".graft_retrain_staging")
-    val retired = child(path, ".graft_retrain_retired")
-    require(!fs.exists(retired),
-      s"$retired exists — a previous retrain crashed mid-swap; recover " +
-        "manually before retraining again")
-    fs.delete(staging, true)
+    val swap = graft.core.StagedCommit.Retrain.open(fs, new org.apache.hadoop.fs.Path(path)).sweep()
     val model = pqTrain(corpus, idCol, vecCol, m, k, seed, sampleN, iterations)
-    pqWrite(pqEncode(corpus, idCol, vecCol, model), model, staging.toString)
+    pqWrite(pqEncode(corpus, idCol, vecCol, model), model, swap.staging.toString)
     val corpusCount = corpus.count()
-    val stagedCount = spark.read.parquet(s"$staging/data").count()
+    val stagedCount = spark.read.parquet(s"${swap.staging}/data").count()
     require(stagedCount == corpusCount,
       s"staged retrain has $stagedCount rows vs corpus $corpusCount — " +
         "refusing to swap (staging dir left for inspection)")
-    pqRead(spark, staging.toString) // sidecar/codebook consistency probe
-    def move(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path) =
-      require(fs.rename(src, dst), s"retrain swap: rename $src -> $dst failed")
-    fs.mkdirs(retired)
-    move(child(path, "data"), child(retired.toString, "data"))
-    move(child(path, "codebooks"), child(retired.toString, "codebooks"))
-    move(child(staging.toString, "data"), child(path, "data"))
-    move(child(staging.toString, "codebooks"), child(path, "codebooks"))
-    fs.delete(child(path, PqDriftDir), true)
-    val out = fs.create(child(path, PqParamsSidecar), true)
-    val mse = if (java.lang.Double.isFinite(model.trainMse))
-      s""","train_mse":${model.trainMse}""" else ""
-    try out.write(
-      (s"""{"m":${model.m},"k":${model.k},"dsub":${model.dsub}$mse""" +
-        s""","generation":${gen + 1}}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(staging, true)
-    fs.delete(retired, true)
+    pqRead(spark, swap.staging.toString) // sidecar/codebook consistency probe
+    swap.swapChildren(_ => Seq("data", "codebooks")) {
+      fs.delete(child(path, PqDriftDir), true)
+      val out = fs.create(child(path, PqParamsSidecar), true)
+      val mse = if (java.lang.Double.isFinite(model.trainMse))
+        s""","train_mse":${model.trainMse}""" else ""
+      try out.write(
+        (s"""{"m":${model.m},"k":${model.k},"dsub":${model.dsub}$mse""" +
+          s""","generation":${gen + 1}}""")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
     pqRead(spark, path)
   }
 }

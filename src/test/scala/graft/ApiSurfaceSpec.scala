@@ -275,4 +275,45 @@ class ApiSurfaceSpec extends SparkSpec {
     // data unaffected
     assert(Graft.readPartitionedTable(spark, out).count() == 2)
   }
+
+  test("vacuum sweeps every writer's staging dir; a swap's retired copy is never swept") {
+    import spark.implicits._
+    val out = tmpDir("vacuum_staging")
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    Graft.writePartitionedTable(
+      Seq((1, "a"), (2, "b")).toDF("k", "p"), out, Seq("p"))
+    def touch(rel: String, root: String = out): Unit = {
+      val p = new org.apache.hadoop.fs.Path(root, rel)
+      fs.mkdirs(p.getParent)
+      val o = fs.create(p, true); o.write(1); o.close()
+    }
+    // a merge that failed its staged write, a relayout that died before
+    // its swap, and the other whole-set swaps' and writeObject's staging
+    touch(".graft_merge_1a2b3c4d/p=a/part-0.parquet")
+    touch(".graft_relayout_staging/k=1/part-0.parquet")
+    touch(".graft_rebuild_staging/data/part-0.parquet")
+    touch(".graft_retrain_staging/data/part-0.parquet")
+    touch(".graft_tmp_5e6f7a8b/part-0.csv")
+    // a relayout that crashed mid-swap: its retired dir may be the only
+    // complete copy
+    touch(".graft_relayout_retired/p=a/part-0.parquet")
+    val swept = Graft.vacuum(spark, out, olderThanMs = 0)
+    assert(swept.stagingDirs == 5 && swept.compactDirs == 0 &&
+      swept.filesRemoved == 5, swept.toString)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(out,
+      ".graft_relayout_retired/p=a/part-0.parquet")))
+    assert(Graft.readPartitionedTable(spark, out).count() == 2)
+    // the aggregate swap keeps its staging and retired dirs beside the
+    // sidecar; a compaction residue inside the retired copy stays too
+    val side = tmpDir("vacuum_agg")
+    touch("sums/part-0.parquet", side)
+    touch("sums.graft_agg_staging/part-0.parquet", side)
+    touch("sums.graft_agg_retired/.graft_compact_x/part-0.parquet", side)
+    val agg = Graft.vacuum(spark, side, olderThanMs = 0)
+    assert(agg.stagingDirs == 1 && agg.compactDirs == 0 && agg.filesRemoved == 1,
+      agg.toString)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(side,
+      "sums.graft_agg_retired/.graft_compact_x/part-0.parquet")))
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Random
+
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.Frontier
@@ -46,5 +48,26 @@ class FeedSpec extends SparkSpec {
     assert(entries(xml) == Seq(("http://h/feed", "http://h/z", "U")))
     assert(entries("<feed><title>empty</title></feed>").isEmpty)
     assert(entries("").isEmpty)
+  }
+
+  test("feed/anchor/cache-control extraction is total over markup junk") {
+    val rnd = new Random(20260821L)
+    val frags = Seq("<entry>", "</entry>", "<item>", "<Item >", "<link",
+      " href=\"", "'", "\"", ">", "<updated>", "</pubDate>", "<a ", "rel=",
+      "nofollow", "&amp;", "&#x", "max-age=", "no-store", "<url>", "<loc>",
+      "</loc>", "<lastmod>", "x")
+    val rows = (1 to 200).map { i =>
+      (i.toLong, (0 until rnd.nextInt(20))
+        .map(_ => frags(rnd.nextInt(frags.length))).mkString)
+    }
+    val df = rows.toDF("id", "s")
+    // every kernel must evaluate over every junk row without throwing
+    val n = df.select(
+      size(TextFunctions.feedEntryBlocks(col("s"))),
+      size(TextFunctions.htmlAnchors(col("s"))),
+      size(TextFunctions.sitemapEntries(col("s"))),
+      size(TextFunctions.htmlFollowableLinks(col("s"))),
+      TextFunctions.cacheControl(col("s"))).count()
+    assert(n == 200L)
   }
 }

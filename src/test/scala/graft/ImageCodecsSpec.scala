@@ -1,8 +1,11 @@
 package graft
 
+import scala.util.Random
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.ImageCodecs
+import graft.operators.Multimodal
 
 /** GIF (LZW) and WebP-VP8L codec round trips, LZW width-growth sync,
   * Huffman form coverage, interlace, and malformed-input totality. */
@@ -449,6 +452,45 @@ class ImageCodecsSpec extends AnyFunSuite {
     }
     intercept[IllegalArgumentException] {
       ImageCodecs.gifEncode(w, h, px)
+    }
+  }
+
+  test("jpegDecodeInterleaved is total; success means a full pixel buffer") {
+    val rnd = new Random(20260819L)
+    for (_ <- 1 to 300) {
+      val junk = new Array[Byte](rnd.nextInt(300))
+      rnd.nextBytes(junk)
+      if (junk.length >= 2) { junk(0) = 0xFF.toByte; junk(1) = 0xD8.toByte }
+      Multimodal.jpegDecodeInterleaved(junk) // None or decode, never throw
+    }
+    val valid = Multimodal.syntheticJpegDcBytes(9L, 13, 11, color = true)
+    for (_ <- 1 to 200) {
+      val b = valid.clone()
+      b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte
+      Multimodal.jpegDecodeInterleaved(b).foreach { case (w, h, c, px) =>
+        assert(px.length == w * h * c && w > 0 && h > 0)
+      }
+    }
+  }
+
+  test("dhashFromPixels: bounds refused, brightness-invariance holds") {
+    val rnd = new Random(20260820L)
+    for (_ <- 1 to 100) {
+      val w = 1 + rnd.nextInt(20); val h = 1 + rnd.nextInt(20)
+      val c = 1 + 2 * rnd.nextInt(2) // 1 or 3
+      val px = Array.fill(w * h * c)(rnd.nextInt(256))
+      val (hi, lo) = Multimodal.dhashFromPixels(w, h, c, px)
+      // constant brightness shift (clamped-free range) preserves the hash
+      if (px.forall(v => v < 200)) {
+        val shifted = px.map(_ + 55)
+        assert(Multimodal.dhashFromPixels(w, h, c, shifted) == ((hi, lo)))
+      }
+    }
+    intercept[IllegalArgumentException] {
+      Multimodal.dhashFromPixels(3, 3, 3, new Array[Int](5)) // short buffer
+    }
+    intercept[IllegalArgumentException] {
+      Multimodal.dhashFromPixels(0, 3, 3, new Array[Int](0))
     }
   }
 }

@@ -177,6 +177,28 @@ class IvfAssignSpec extends SparkSpec {
     } finally cached.unpersist()
   }
 
+  test("ivfBuild plus ivfWrite reads the input from parquet once") {
+    val dir = tmpDir("ivf_write_once")
+    val out = tmpDir("ivf_write_once_idx")
+    val n = 600
+    (0 until n).map(i => (i.toLong, randVec(i, 8))).toDF("id", "v")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val (idx, qes) = executionsDuring {
+      val idx = Ann.ivfBuild(spark.read.parquet(dir), "id", "v", nlist = 4, iterations = 2)
+      Ann.ivfWrite(idx, out)
+      idx
+    }
+    // the sidecar's build-time mean cosine rides the data write: no rescan
+    assert(parquetRowsRead(qes) == n)
+    val sidecar = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(out, Ann.IvfParamsSidecar))
+    val expected = spark.read.parquet(s"$out/data")
+      .agg(avg(NearestCentroids(col("v"), idx.centroids, 1).getItem(0).getField("cos")))
+      .head().getDouble(0)
+    assert(math.abs(sidecar.get("build_mean_cos").asDouble - expected) < 1e-12,
+      s"sidecar ${sidecar.get("build_mean_cos")} vs recomputed $expected")
+  }
+
   test("annCorpus keeps embeddings.label's type; a plan reading label runs") {
     val dir = tmpDir("ann_corpus")
     Seq((0L, Seq(1f, 0f), 3), (1L, Seq(0f, 1f), 4)).toDF("vec_id", "embedding", "label")
