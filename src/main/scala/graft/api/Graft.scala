@@ -824,7 +824,9 @@ object Graft {
 
   /** Write a DataFrame as a SINGLE object at `url` (reference write_object,
     * api.py:110-163): no multi-file dirs, no appends. Implemented as a
-    * coalesce(1) write to a temp dir + rename of the lone part file. */
+    * coalesce(1) write to a temp dir + rename of the lone part file, moved
+    * in before an existing object goes ([[StagedCommit.replaceFile]]); a
+    * failed rename refuses and leaves the old object readable. */
   def writeObject(
       df: DataFrame,
       url: String,
@@ -871,15 +873,15 @@ object Graft {
       }
       // fsConf rides the write options too: the executor-side committer
       // folds them into its per-relation Hadoop conf
-      df.coalesce(1).write.mode("overwrite")
-        .options(defaults ++ options ++ fsConf).format(fmt)
-        .save(tmp.toString)
-      val part = fs.listStatus(tmp).map(_.getPath)
-        .find(p => p.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part file produced in $tmp"))
-      if (fs.exists(target)) fs.delete(target, false)
-      fs.rename(part, target)
-      fs.delete(tmp, true)
+      try {
+        df.coalesce(1).write.mode("overwrite")
+          .options(defaults ++ options ++ fsConf).format(fmt)
+          .save(tmp.toString)
+        val part = fs.listStatus(tmp).map(_.getPath)
+          .find(p => p.getName.startsWith("part-"))
+          .getOrElse(throw new IllegalStateException(s"no part file produced in $tmp"))
+        StagedCommit.replaceFile(fs, part, target)
+      } finally fs.delete(tmp, true)
     }
   }
 

@@ -21,6 +21,7 @@ object StagedCommit {
   private val CompactPrefix = ".graft_compact_"
   private val MergePrefix = ".graft_merge_"
   private val ObjectPrefix = ".graft_tmp_"
+  private val ObjectRetiredPrefix = ".graft_retired_"
 
   private def freshId(): String = UUID.randomUUID().toString.take(8)
 
@@ -47,6 +48,24 @@ object StagedCommit {
     }
     old.foreach(fs.delete(_, false))
     staged.length
+  }
+
+  /** Replace the single file `target` with `staged`: the old file moves
+    * aside to a hidden retired name, the new one moves in, then the
+    * retired copy goes. A failed move-in moves the old file back before
+    * refusing; a crash between the moves leaves the old file under its
+    * retired name, which refuses the next replace until it is recovered. */
+  def replaceFile(fs: FileSystem, staged: Path, target: Path): Unit = {
+    val retired = new Path(target.getParent, ObjectRetiredPrefix + target.getName)
+    require(!fs.exists(retired),
+      s"$retired exists — a previous replace of $target crashed mid-swap; " +
+        "recover manually (inspect which copy is complete) before retrying")
+    val replacing = fs.exists(target)
+    if (replacing) require(fs.rename(target, retired), s"rename failed: $target -> $retired")
+    val moved = fs.rename(staged, target)
+    if (!moved && replacing) fs.rename(retired, target)
+    require(moved, s"rename failed: $staged -> $target")
+    if (replacing) fs.delete(retired, false)
   }
 
   /** Rename the `part-` files staged under `staged` (and its `key=value`
@@ -139,5 +158,6 @@ object StagedCommit {
     else if (name == "_temporary") Some(Residue.SparkTemporary)
     else None
 
-  def isRetired(name: String): Boolean = SwapKinds.exists(k => name.endsWith(k.retiredName))
+  def isRetired(name: String): Boolean =
+    name.startsWith(ObjectRetiredPrefix) || SwapKinds.exists(k => name.endsWith(k.retiredName))
 }

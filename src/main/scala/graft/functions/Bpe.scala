@@ -58,7 +58,7 @@ object Bpe {
   }
 
   /** Merge every left-to-right occurrence of `pair` in one pass. */
-  private def mergeAll(symbols: Vector[String], pair: (String, String)): Vector[String] = {
+  private[graft] def mergeAll(symbols: Vector[String], pair: (String, String)): Vector[String] = {
     val out = Vector.newBuilder[String]
     var i = 0
     while (i < symbols.length) {
@@ -118,21 +118,6 @@ object Bpe {
       earlier += r
       ok
     }
-  }
-
-  /** Reference sequential encode — the oracle's algorithm (rank order,
-    * each merge applied to fixpoint). Exposed so specs can pin its
-    * equivalence with [[BpeModel.encodeWord]] on real vocabularies. */
-  def encodeSequential(model: BpeModel, word: String): Vector[String] = {
-    var symbols = word.map(_.toString).toVector
-    model.merges.foreach { pair =>
-      var prev = Vector.empty[String]
-      while (prev != symbols) {
-        prev = symbols
-        symbols = mergeAll(symbols, pair)
-      }
-    }
-    symbols
   }
 
   /** Train from a corpus DataFrame: collects a bounded sample of documents

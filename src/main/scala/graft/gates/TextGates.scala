@@ -4838,22 +4838,18 @@ object TextGates extends GateFamily {
       TextFunctions.langId(col("text")).as("lang_pred"),
       metrics("n_words").as("n_words"),
       metrics("stopword_ratio").as("stopword_ratio"))
-    // `filtered` is consumed twice inside `kept` (exact dedup + text
-    // join-back) — persist so the langid/metrics kernels run once (the
-    // t64 pattern; released with `clean` below)
+    // `filtered` is read twice inside `clean`'s plan (dedup, text
+    // join-back): persisted so the corpus is scanned once (5 more jobs;
+    // without it a pipeline_ops pass makes 94 file-system calls, not 86)
     val filtered = staged.filter(col("lang_pred") === "en" &&
         col("n_words") >= 20 && col("stopword_ratio") > 0.03)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val kept = Dedup.exact(filtered, "doc_id", "text").select("doc_id")
       .join(filtered.select("doc_id", "text"), "doc_id")
     val evalSet = docs.filter(col("doc_id") % 100 === 0).select("text")
-    // `clean` feeds THREE consumers (the DSIR target slice, the DSIR raw
-    // side, the token join on the selected docs) — uncached, each one
-    // re-runs the full curation + decontamination chain (langid +
-    // quality metrics + exact dedup + the 3-gram overlap join). Persist
-    // it once per computation and release after the caller's first
-    // action (r20 optimization round, guide §5.2; cache cleared between
-    // bench passes, so every pass still computes from parquet).
+    // `clean` is read four times (DSIR target, both DSIR raw passes, the
+    // token join), each re-running curation and decontamination uncached:
+    // persisted (sf0.1: 3.8 s with the cache's extra jobs, 4.6 s without)
     val clean = Decontaminate.decontaminate(kept, "doc_id", "text",
         evalSet, "text", n = 3, threshold = 0.5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -13,7 +13,18 @@ import org.apache.spark.storage.StorageLevel
   * calling it repeatedly accumulates no cached frames, while the result
   * stays a plain lazy DataFrame. If a second action races the release it may
   * recompute (or briefly reuse) the cache — both are correct; only the
-  * first action is guaranteed the cached plan. */
+  * first action is guaranteed the cached plan.
+  *
+  * The persist rule: persist a frame only when more than one Spark job
+  * reads it (a driver-side collect and the plan after it, the rounds on
+  * either side of a [[Generations.cut]]). Inside ONE plan, adaptive
+  * execution shares a repeated subplan through exchange reuse, while each
+  * read of a persisted frame is a separate cache stage that submits its
+  * own job and blocks the reuse of any exchange above it. A frame that
+  * different consumers of one plan read is persisted only where a
+  * measurement shows the recompute costs more than those jobs (in time,
+  * or in another scan of the source), and the persist says so in a
+  * comment. */
 private[graft] object CacheRelease {
 
   /** Unrelated completed actions tolerated before a listener gives up
@@ -93,7 +104,8 @@ private[graft] final class Generations(inputs: Seq[DataFrame]) {
     * the last use of them, the inputs): release them all after its first
     * completed action. */
   def releaseAfterFirstAction(result: DataFrame): DataFrame =
-    CacheRelease.afterFirstAction(result, inputs ++ held)
+    if (inputs.isEmpty && held.isEmpty) result
+    else CacheRelease.afterFirstAction(result, inputs ++ held)
 
   /** Release the held generation and the inputs now. */
   def release(): Unit = (inputs ++ held).foreach(_.unpersist(false))

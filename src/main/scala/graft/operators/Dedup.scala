@@ -88,7 +88,7 @@ object Dedup {
 
   // ------------------------------------------------------------- minhash
 
-  private val HashDomain = (1L << 31) - 1 // Mersenne prime 2^31-1
+  private[graft] val HashDomain = (1L << 31) - 1 // Mersenne prime 2^31-1
 
   /** k affine hash functions h_i(x) = (a_i*x + b_i) mod p over a base
     * xxhash64 reduced to a 31-bit domain: with a,b,x < 2^31 the product
@@ -101,7 +101,7 @@ object Dedup {
     * the generated (a,b) pairs for roughly half the draws, so signatures and
     * band keys differ from pre-fix releases. Persisted signatures/pair lists
     * from those releases are not comparable and must be regenerated. */
-  private def hashFamily(numHashes: Int, seed: Long): Seq[(Long, Long)] = {
+  private[graft] def hashFamily(numHashes: Int, seed: Long): Seq[(Long, Long)] = {
     val rnd = new Random(seed)
     Seq.fill(numHashes)(((rnd.nextLong() & Long.MaxValue) % (HashDomain - 1) + 1,
       (rnd.nextLong() & Long.MaxValue) % HashDomain))
@@ -116,30 +116,6 @@ object Dedup {
   def minhashSignatureFromHashes(hashes: Column, numHashes: Int = 64,
       seed: Long = 42L): Column =
     graft.functions.MinhashSignatureExpr(hashes, numHashes, seed)
-
-  /** The composable higher-order-function formulation of the signature —
-    * kept as the independent reference implementation the codegen'd
-    * expression is property-tested against (bit-equal by construction:
-    * same seeded family, same (a·x+b) mod p arithmetic). ~64× more array
-    * traversals than the fused expression; don't use on hot paths. */
-  private[graft] def minhashSignatureHof(hashes: Column, numHashes: Int = 64,
-      seed: Long = 42L): Column = {
-    val sig = hashFamily(numHashes, seed).map { case (a, b) =>
-      array_min(transform(hashes, x => pmod(x * a + b, lit(HashDomain))))
-    }
-    array(sig: _*)
-  }
-
-  /** Column: shingle hashes of a text column in the 31-bit domain via the
-    * LEGACY string formulation (xxhash64 of space-joined shingles).
-    * NOT comparable with [[shingleSets]]/[[minhashSignature]] output since
-    * those moved to the fused word-hash kernel
-    * ([[graft.functions.ShingleHashSetExpr]]) — kept only for callers that
-    * need hashes of the exact string shingles (e.g. to join against
-    * [[graft.functions.TextFunctions.shingles]] text output). */
-  def shingleHashes31(text: Column, shingleSize: Int): Column =
-    transform(TextFunctions.shingleHashes(text, shingleSize),
-      x => pmod(x, lit(HashDomain)))
 
   /** (id, shingle_set) — words staged as a materialized column (one
     * tokenizer pass per row), then ONE fused kernel call builds the

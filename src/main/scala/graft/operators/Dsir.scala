@@ -15,15 +15,19 @@ import org.apache.spark.sql.functions._
   * 100 TB shape — the whole pipeline is two bounded aggregations and
   * one scoring pass:
   *  1. gram extraction is the codegen'd multiset kernel
-  *     ([[graft.functions.WordGramsExpr]]) + the t31 md5-prefix bucket
+  *     ([[graft.functions.WordGramsExpr]], every gram size concatenated
+  *     into one array and exploded once) + the t31 md5-prefix bucket
   *     hash, map-side;
   *  2. the raw and target bucket DISTRIBUTIONS aggregate to
   *     `numBuckets` rows each (map-side partial combine; the result is
-  *     broadcast-sized BY CONSTRUCTION, whatever the corpus size), and
-  *     the totals are sums of the bucket rows, never a re-scan;
+  *     broadcast-sized BY CONSTRUCTION, whatever the corpus size); the
+  *     two meet in one full join of ≤ 2·`numBuckets` rows, whose
+  *     unpartitioned window sums the totals, so each distribution is
+  *     aggregated and shuffled once;
   *  3. per-doc scoring is one broadcast join of gram instances against
   *     the `numBuckets`-row log-ratio table plus a partial-aggregated
-  *     sum per doc — the corpus shuffles only (id, partial-sum) rows;
+  *     sum per doc — the corpus shuffles only (id, partial-sum) rows.
+  *     The raw side is read twice (once per aggregation), never more;
   *  4. selection is a distributed TakeOrdered, never a global sort.
   *
   * Determinism: per-bucket log-ratios round to `scale` decimals BEFORE
@@ -50,14 +54,14 @@ object Dsir {
 
   /** One row per gram INSTANCE (multiset, the bag-model contract):
     * `keep` columns + `bucket`. Grams are all sliding `n`-windows for
-    * each n in `ns` (paper default: unigrams + bigrams), hashed by the
-    * t31 convention `md5-prefix-32-bit mod numBuckets`. */
+    * each n in `ns` (paper default: unigrams + bigrams), concatenated
+    * into ONE array per doc so the side is read by one explode, and
+    * hashed by the t31 convention `md5-prefix-32-bit mod numBuckets`.
+    * `outer` keeps a doc with zero grams as one row with a null bucket. */
   private def gramBuckets(df: DataFrame, textCol: String, numBuckets: Int,
-      ns: Seq[Int], keep: Seq[Column],
-      hashMode: String = "md5"): DataFrame = {
-    val perN = ns.map(n => df.select(
-      keep :+ explode(graft.functions.WordGramsExpr(col(textCol), n))
-        .as("__g"): _*))
+      ns: Seq[Int], keep: Seq[Column], hashMode: String,
+      outer: Boolean): DataFrame = {
+    val all = concat(ns.map(n => graft.functions.WordGramsExpr(col(textCol), n)): _*)
     val bucket = hashMode match {
       case "md5" =>
         pmod(conv(substring(md5(col("__g")), 1, 8), 16, 10).cast("long"),
@@ -66,15 +70,19 @@ object Dsir {
       case other => throw new IllegalArgumentException(
         s"hashMode must be md5 or xxhash64, got $other")
     }
-    perN.reduce(_ unionByName _)
-      .select(keep :+ bucket.as("bucket"): _*)
+    // the guard keeps a zero-gram row's bucket null: xxhash64 of null is
+    // its seed
+    df.select(keep :+ (if (outer) explode_outer(all) else explode(all))
+        .as("__g"): _*)
+      .select(keep :+ when(col("__g").isNotNull, bucket).as("bucket"): _*)
   }
 
   /** Importance weight per raw doc: Σ over its gram instances of the
     * smoothed per-bucket log-likelihood ratio
     * `ln((tgt_n+1)/(tgt_total+B)) − ln((raw_n+1)/(raw_total+B))`
     * (Laplace smoothing over B = `numBuckets`). Returns one row per
-    * raw doc `(idCol, weight)`; docs yielding zero grams weigh 0.
+    * distinct raw `idCol` value `(idCol, weight)`; docs yielding zero
+    * grams weigh 0, and so does the null id.
     *
     * `hashMode` selects the gram→bucket hash: `"md5"` (default) is the
     * t31 cross-engine convention the d23 gate's DuckDB oracle replays
@@ -91,10 +99,8 @@ object Dsir {
       scale: Int = 6, hashMode: String = "md5"): DataFrame = {
     require(numBuckets >= 2, s"numBuckets must be >= 2, got $numBuckets")
     require(ns.nonEmpty && ns.forall(_ >= 1), s"bad gram sizes: $ns")
-    val rawGrams =
-      gramBuckets(raw, textCol, numBuckets, ns, Seq(col(idCol)), hashMode)
-    val tgtGrams =
-      gramBuckets(target, targetTextCol, numBuckets, ns, Nil, hashMode)
+    def grams(df: DataFrame, text: String, keep: Seq[Column], outer: Boolean) =
+      gramBuckets(df, text, numBuckets, ns, keep, hashMode, outer)
     // NOTE (r20 optimization round): pre-aggregating gram instances to
     // (doc, bucket, cnt) so one extraction pass feeds both consumers via
     // exchange reuse was tried and REVERTED — grams are mostly distinct
@@ -103,39 +109,38 @@ object Dsir {
     // extraction pass (d23 tN 12.1 s → 19.2 s). The instance stream
     // stays map-side: one extraction pass for the distribution, one for
     // the broadcast-join scoring, zero instance-sized shuffles.
-    val rawN = rawGrams.groupBy("bucket")
+    val rawN = grams(raw, textCol, Nil, outer = false).groupBy("bucket")
       .agg(count(lit(1)).cast("double").as("raw_n"))
-    val tgtN = tgtGrams.groupBy("bucket")
+    val tgtN = grams(target, targetTextCol, Nil, outer = false).groupBy("bucket")
       .agg(count(lit(1)).cast("double").as("tgt_n"))
-    // one-row totals frames (broadcast): totals are the SUM of the
-    // per-bucket counts, so derive them from the B-row aggregates
-    // instead of re-scanning the gram streams — two full gram-extraction
-    // + hash passes removed (r20 optimization round, guide §1.2/§2.4;
-    // exact: counts are integers < 2^53, their double sum is the same
-    // value count() would produce)
-    val rawTotal =
-      rawN.agg(coalesce(sum("raw_n"), lit(0.0)).as("raw_total"))
-    val tgtTotal =
-      tgtN.agg(coalesce(sum("tgt_n"), lit(0.0)).as("tgt_total"))
+    // the totals are sums of the bucket rows, taken by one unpartitioned
+    // window over the ≤ 2·B-row full join of the two distributions, so
+    // each distribution is aggregated (and shuffled) once (exact: counts
+    // are integers < 2^53, their double sum is the value count() gives)
+    val everyBucket = Window.partitionBy()
     val b = lit(numBuckets.toDouble)
-    // every bucket that appears in ANY raw doc has raw_n >= 1 (the
-    // counts come from the same gram rows being scored), so a left
-    // join from rawN covers the scoring domain exactly
-    val ratios = rawN.join(tgtN, Seq("bucket"), "left")
-      .crossJoin(broadcast(rawTotal))
-      .crossJoin(broadcast(tgtTotal))
+    val ratios = rawN.join(tgtN, Seq("bucket"), "full")
+      .select(col("bucket"), col("raw_n"),
+        coalesce(col("tgt_n"), lit(0.0)).as("tgt_n"),
+        sum("raw_n").over(everyBucket).as("raw_total"),
+        coalesce(sum("tgt_n").over(everyBucket), lit(0.0)).as("tgt_total"))
+      // every bucket that appears in ANY raw doc has raw_n >= 1 (the
+      // counts come from the same gram rows being scored), so the raw
+      // buckets cover the scoring domain exactly
+      .where(col("raw_n").isNotNull)
       .select(col("bucket"),
         round(
-          log((coalesce(col("tgt_n"), lit(0.0)) + 1.0) /
-            (col("tgt_total") + b)) -
+          log((col("tgt_n") + 1.0) / (col("tgt_total") + b)) -
           log((col("raw_n") + 1.0) / (col("raw_total") + b)),
           scale).as("log_ratio"))
-    val scored = rawGrams.join(broadcast(ratios), "bucket")
+    // a zero-gram doc's one null-bucket row finds no ratio: its sum is
+    // null and its weight 0
+    grams(raw, textCol, Seq(col(idCol)), outer = true)
+      .join(broadcast(ratios), Seq("bucket"), "left")
       .groupBy(col(idCol))
       .agg(round(sum("log_ratio"), scale).as("weight"))
-    raw.select(col(idCol)).distinct()
-      .join(scored, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("weight"), lit(0.0)).as("weight"))
+      .select(col(idCol), when(col(idCol).isNull, lit(0.0))
+        .otherwise(coalesce(col("weight"), lit(0.0))).as("weight"))
   }
 
   /** The resampling step in its deterministic top-k form: the `k`

@@ -630,21 +630,26 @@ object Frontier {
       .agg(min(when(col("__st").isin(301, 308), 1).otherwise(0))
         .as("__pmin"))
       .select(col("__src"), col("__loc"), (col("__pmin") === 1).as("__perm"))
-    val map = perTarget
+    val mapPlan = perTarget
       .join(perTarget.groupBy("__src").agg(count(lit(1)).as("__n")), "__src")
       .select(
         when(col("__n") > 1, raise_error(concat(
           lit("resolveRedirects: conflicting redirect rows for "),
           col("__src")))).otherwise(col("__src")).as("__src"),
         col("__perm"), col("__loc"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // a walk that cuts reads the map from more than one Spark job, so the
+    // map is persisted; inside one fused plan the rounds' identical map
+    // subplans share one exchange (a persisted map costs a job per read)
+    val cuts = maxHops > Graph.FuseIterationLimit
+    val map =
+      if (cuts) mapPlan.persist(StorageLevel.MEMORY_AND_DISK) else mapPlan
     // walk state: hop 1 already taken by construction
     var state = map.select(
       col("__src").as("url"), col("__loc").as("cur"), lit(1L).as("hops"),
       col("__perm").as("perm"),
       array(col("__src")).as("visited"),
       lit(null).cast("string").as("outcome"))
-    val gens = new Generations(Seq(map))
+    val gens = new Generations(if (cuts) Seq(map) else Nil)
     for (i <- 1 to maxHops) {
       val open = col("outcome").isNull
       val resolvedC = open && col("__src").isNull

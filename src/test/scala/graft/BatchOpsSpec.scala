@@ -1483,6 +1483,27 @@ class DsirSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(w(2L) == 0.0)
   }
+
+  test("zero-gram docs and the null id weigh 0 and leave other weights alone") {
+    val raw = Seq[(java.lang.Long, String)]((1L, "some words here"), (2L, ""),
+      (3L, null), (null, "more words"), (null, "")).toDF("id", "text")
+    val target = Seq("some words").toDF("text")
+    // two buckets: every bucket has a ratio, so a zero-gram doc hashed
+    // into one (xxhash64 of null is its seed, not null) would score
+    for (mode <- Seq("md5", "xxhash64")) {
+      def weights(df: org.apache.spark.sql.DataFrame) =
+        graft.operators.Dsir.importanceWeights(df, "id", "text", target, "text",
+            numBuckets = 2, hashMode = mode)
+          .collect().map(r => Option(r.get(0)) -> r.getDouble(1)).toMap
+      val w = weights(raw)
+      assert(w.size == 4, s"$mode: one row per distinct id, null included: $w")
+      assert(w(Some(2L)) == 0.0 && w(Some(3L)) == 0.0 && w(None) == 0.0, s"$mode: $w")
+      // zero-gram docs add nothing to the raw distribution; the null-id
+      // doc's grams do
+      val gramDocs = weights(raw.filter(col("text") =!= ""))
+      assert(w(Some(1L)) == gramDocs(Some(1L)) && w(Some(1L)) != 0.0, s"$mode: $w")
+    }
+  }
 }
 
 /** d23 hash pluggability: the xxhash64 production mode must make the

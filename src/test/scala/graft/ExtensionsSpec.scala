@@ -347,7 +347,7 @@ class AnnSpec extends SparkSpec {
       val fused = df.select(col("vec_id"),
         Ann.hyperplaneSketch(col("embedding"), dim, numPlanes, seed).as("s"))
       val ref = df.select(col("vec_id"),
-        Ann.hyperplaneSketchHof(col("embedding"), dim, numPlanes, seed).as("s"))
+        References.hyperplaneSketchHof(col("embedding"), dim, numPlanes, seed).as("s"))
       assert(canon(fused) == canon(ref), s"seed=$seed planes=$numPlanes")
     }
   }
@@ -361,7 +361,7 @@ class AnnSpec extends SparkSpec {
     val df = rows.toDF("id", "hashes")
     val both = df.select(
       Dedup.minhashSignatureFromHashes(col("hashes"), 64).as("fast"),
-      Dedup.minhashSignatureHof(col("hashes"), 64).as("hof"))
+      References.minhashSignatureHof(col("hashes"), 64).as("hof"))
     // array<long> equality is element-wise; the empty-array row yields
     // all-null signatures on both sides, which <=> treats as equal
     val mismatches = both.filter(not(col("fast") <=> col("hof"))).count()
@@ -374,7 +374,7 @@ class AnnSpec extends SparkSpec {
       .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toLongArray().toSeq
     val viaDf = Seq(Tuple1(Seq(5L, 123456789L))).toDF("h")
-      .select(Dedup.minhashSignatureHof(col("h"), 16).as("s"))
+      .select(References.minhashSignatureHof(col("h"), 16).as("s"))
       .head().getSeq[Long](0)
     assert(viaEval == viaDf, "interpreted eval must match HOF")
   }
@@ -386,7 +386,7 @@ class AnnSpec extends SparkSpec {
     val q = org.apache.spark.sql.functions.lit(randVec(999, dim).map(_.toDouble))
     val both = df.select(
       Ann.cosine(col("vec"), q).as("fast"),
-      Ann.cosineHof(col("vec"), q).as("hof"))
+      References.cosineHof(col("vec"), q).as("hof"))
     val mismatches = both.filter(col("fast") =!= col("hof")).count()
     assert(mismatches == 0, "codegen and HOF cosine must agree exactly")
     // SQL registration path
@@ -1189,7 +1189,7 @@ class TextSpec extends SparkSpec {
       .distinct
     assert(vocab.nonEmpty)
     vocab.foreach { w =>
-      assert(Bpe.encodeSequential(model, w) == model.encodeWord(w),
+      assert(References.encodeSequential(model, w) == model.encodeWord(w),
         s"sequential vs priority encode diverge on '$w'")
     }
     // the safety predicate itself: a later merge re-creating an earlier

@@ -1,6 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 
 /** Physical-plan assertions: these tests pin the 100 TB-relevant properties
   * of the operators — what shuffles, what gets pruned map-side, what stays
@@ -17,6 +23,25 @@ class PlanSpec extends SparkSpec {
   }
   private def count(plan: String, token: String): Int =
     token.r.findAllIn(plan).length
+
+  /** The operators of a collected frame's final adaptive plan, query
+    * stages entered; a cached frame's own plan is not (its printed plan
+    * holds an "== Initial Plan ==" that cuts [[finalPlan]] short). */
+  private def finalNodes(df: DataFrame): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p }
+
+  /** No nested-loop join, and one shuffle keyed by `bucket` per DSIR side
+    * (a reused exchange is not a ShuffleExchangeExec, so it is not counted). */
+  private def assertDsirBuckets(df: DataFrame): Unit = {
+    val nodes = finalNodes(df)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), nodes.head)
+    val bucketShuffles = nodes.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case h: HashPartitioning =>
+      h.expressions.collect { case a: Attribute => a.name }
+    }.count(_ == Seq("bucket"))
+    assert(bucketShuffles == 2, nodes.head)
+  }
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -161,13 +186,15 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d23 DSIR: bucket scoring joins by broadcast hash, no cartesian") {
-    // the two one-row totals frames legitimately attach via broadcast
-    // nested-loop (the Retrieval/Theta one-row stats convention); what
-    // must never appear is a cartesian, and the data-scale gram->ratio
-    // join must be a broadcast HASH join on bucket
-    val plan = finalPlan(SparkEntry.queries("d23_dsir_select")(spark, dir))
+    // the totals come from a window over the full join of the two bucket
+    // tables, so nothing attaches by nested loop and each side's bucket
+    // counts shuffle once; the data-scale gram->ratio join must be a
+    // broadcast HASH join on bucket
+    val df = SparkEntry.queries("d23_dsir_select")(spark, dir)
+    val plan = finalPlan(df)
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
+    assertDsirBuckets(df)
   }
 
   test("t68 fetch plan: budget cap is a map-side WindowGroupLimit; " +
@@ -219,12 +246,26 @@ class PlanSpec extends SparkSpec {
 
   test("t75 composed training run: no cartesian; the DSIR ratio join " +
       "stays broadcast-hash through the four-stage composition") {
-    val plan = finalPlan(SparkEntry.queries("t75_training_run")(spark, dir))
+    val df = SparkEntry.queries("t75_training_run")(spark, dir)
+    val plan = finalPlan(df)
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
     // composing curation -> decontam -> DSIR -> pack must not demote
-    // the data-scale gram->ratio join (the d23 plan property); the
-    // one-row totals frames legitimately attach via nested loop
+    // the data-scale gram->ratio join, add a nested loop or shuffle a
+    // side's bucket counts twice (the d23 plan properties)
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
+    assertDsirBuckets(df)
+  }
+
+  test("t75 and t107b stay inside their job budgets: subplans shared in one " +
+      "plan reuse exchanges instead of reading persisted copies") {
+    // each read of a persisted frame is a cache stage with its own job.
+    // Measured here: t75 28 (its two persisted frames' six reads) and
+    // t107b 13; persisting t107b's redirect map adds 10
+    for ((q, budget) <- Seq("t75_training_run" -> 30, "t107b_redirect_migration" -> 14)) {
+      val (_, jobs) = jobsDuring(SparkEntry.queries(q)(spark, dir)
+        .write.format("noop").mode("overwrite").save())
+      assert(jobs <= budget, s"$q ran $jobs jobs, over its budget of $budget")
+    }
   }
 
   test("d26 boilerplate: the frequent-line anti-join broadcasts (the " +

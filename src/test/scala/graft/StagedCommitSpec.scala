@@ -57,4 +57,38 @@ class StagedCommitSpec extends SparkSpec {
       assert(Files.isDirectory(retiredPath), s"$retired was removed")
     }
   }
+
+  test("writeObject refuses a failed rename and keeps the old object readable") {
+    val dir = tmpDir("wo_norename")
+    val target = s"$dir/out.csv"
+    Graft.writeObject(Seq((1, "old")).toDF("k", "s"), target)
+    val before = Files.readString(Paths.get(target))
+    // the same file through a scheme whose move-in renames fail
+    val e = intercept[IllegalArgumentException](
+      Graft.writeObject(Seq((2, "new")).toDF("k", "s"), s"norename://$target",
+        fsConf = Map("fs.norename.impl" -> classOf[NoMoveInFileSystem].getName,
+          "fs.norename.impl.disable.cache" -> "true")))
+    assert(e.getMessage.contains("rename failed"), e.getMessage)
+    assert(Files.readString(Paths.get(target)) == before)
+    assert(spark.read.option("header", "true").csv(target).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("1", "old")))
+    // no retired copy left to refuse the next write, no staging left over
+    assert(Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.endsWith(".crc")).toSeq == Seq("out.csv"))
+    Graft.writeObject(Seq((3, "next")).toDF("k", "s"), target)
+    assert(spark.read.option("header", "true").csv(target).collect()
+      .map(_.getString(1)).toSeq == Seq("next"))
+  }
+}
+
+/** The local file system under the `norename` scheme, whose rename of a
+  * file out of a `.graft_tmp_` staging dir (an object's move-in) returns
+  * false; every other rename, Spark's task commit among them, works. */
+class NoMoveInFileSystem extends org.apache.hadoop.fs.LocalFileSystem(
+    new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getUri: java.net.URI = java.net.URI.create("norename:///")
+    }) {
+  override def getScheme: String = "norename"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    !src.getParent.getName.startsWith(".graft_tmp_") && super.rename(src, dst)
 }
