@@ -58,16 +58,6 @@ object TextFunctions {
         sequence(lit(0), size(wordsCol) - n),
         i => concat_ws(" ", slice(wordsCol, i + 1, lit(n)))))
 
-  /** 64-bit hashes of each shingle (xxhash64 — stable across runs).
-    * See the lambda-capture note on [[shingles]]: prefer staging `words`
-    * into a column first (shingleHashesFromWords) on hot paths. */
-  def shingleHashes(text: Column, n: Int): Column =
-    transform(shingles(words(text), n), s => xxhash64(s))
-
-  /** Same, from a materialized words column (attribute-cheap in lambdas). */
-  def shingleHashesFromWords(wordsCol: Column, n: Int): Column =
-    transform(shingles(wordsCol, n), s => xxhash64(s))
-
   /** Whitespace token count. */
   def tokenCountWhitespace(text: Column): Column = size(words(text)).cast("long")
 

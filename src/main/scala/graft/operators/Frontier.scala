@@ -591,12 +591,16 @@ object Frontier {
     * revert, so the source keeps its name and only the target is
     * fetched), `outcome ∈ {resolved, loop, exceeded}`.
     *
-    * 100 TB shape: the walk is `maxHops` rounds of one equi-join of the
-    * (shrinking) unresolved state against the redirect map — both
-    * redirect-wave-sized, NEVER corpus-sized — composed into one plan and
-    * cut every [[Graph.FuseIterationLimit]] rounds as [[Graph.pageRank]]
-    * is, so the default walk is one Spark job and no plan is more than 8
-    * rounds deep. Loop detection rides a
+    * 100 TB shape: the map is ONE source-keyed aggregation over the
+    * redirect rows, so the redirect input is read once. The walk is
+    * `maxHops` rounds of one equi-join of the (shrinking) unresolved
+    * state against that map — both redirect-wave-sized, NEVER
+    * corpus-sized — composed into one plan and cut every
+    * [[Graph.FuseIterationLimit]] rounds as [[Graph.pageRank]] is, so the
+    * default walk is one query (adaptive execution still runs it as
+    * several Spark jobs, one per query stage; the rounds' map reads share
+    * the aggregation's exchange) and no plan is more than 8 rounds deep.
+    * Loop detection rides a
     * per-row visited array bounded by maxHops+1 entries; no window, no
     * driver state, no collect. Real chains are ≤ 3–5 hops (RFC 9110
     * suggests clients cap around 5), so the default bound is 5. */
@@ -621,22 +625,25 @@ object Frontier {
           .otherwise(graft.functions.UrlResolveExpr(
             col(urlCol).cast("string"), col(locationCol).cast("string")))
           .as("__loc"))
-    // one source observed with MIXED statuses for ONE resolved target
-    // collapses to the politer reading — permanent only if EVERY
+    // ONE source-keyed aggregation reads the redirect rows once and builds
+    // the map: the source's target, its permanence and the two-targets
+    // refusal. One source observed with MIXED statuses for ONE resolved
+    // target collapses to the politer reading — permanent only if EVERY
     // observation was 301/308 (identity is never migrated on ambiguous
     // evidence; the crawl-delay conflict rule). Two distinct RESOLVED
-    // targets from one source remain a loud refusal.
-    val perTarget = rows.groupBy("__src", "__loc")
-      .agg(min(when(col("__st").isin(301, 308), 1).otherwise(0))
-        .as("__pmin"))
-      .select(col("__src"), col("__loc"), (col("__pmin") === 1).as("__perm"))
-    val mapPlan = perTarget
-      .join(perTarget.groupBy("__src").agg(count(lit(1)).as("__n")), "__src")
+    // targets from one source (min ≠ max) remain a loud refusal; the
+    // guard sits in the walk's join key and in `url`, so every action
+    // evaluates it. A null url names no source and is dropped, as an
+    // inner join on it would.
+    val mapPlan = rows.filter(col("__src").isNotNull)
+      .groupBy("__src")
+      .agg(min(col("__loc")).as("__lo"), max(col("__loc")).as("__hi"),
+        min(when(col("__st").isin(301, 308), 1).otherwise(0)).as("__pmin"))
       .select(
-        when(col("__n") > 1, raise_error(concat(
+        when(!(col("__lo") <=> col("__hi")), raise_error(concat(
           lit("resolveRedirects: conflicting redirect rows for "),
           col("__src")))).otherwise(col("__src")).as("__src"),
-        col("__perm"), col("__loc"))
+        (col("__pmin") === 1).as("__perm"), col("__lo").as("__loc"))
     // a walk that cuts reads the map from more than one Spark job, so the
     // map is persisted; inside one fused plan the rounds' identical map
     // subplans share one exchange (a persisted map costs a job per read)
@@ -740,15 +747,12 @@ object Frontier {
     * rows with a null url still pass through).
     *
     * Memory bound of the conflict refusal: the url-keyed aggregation
-    * collects a url's DISTINCT permanent `(final_url, hops)` targets into
-    * one `collect_set` buffer, and the refusal reads that set's size. So
-    * a url with k distinct targets buffers all k in one task's
-    * aggregation buffer before the refusal fires. Replay duplicates
-    * collapse first and do not count toward k, and a consistent moves
-    * table has k = 1 for every url. An adversarially divergent input (one
-    * url with millions of distinct targets) can exhaust that task's
-    * memory instead of refusing cleanly; check such input upstream
-    * (`groupBy(url)` with `countDistinct`) before compacting it.
+    * keeps two `(final_url, hops)` structs per url, the least and the
+    * greatest permanent target, and refuses when they differ. A url's
+    * buffer is bounded by its two extreme targets however many distinct
+    * targets its rows name, so an adversarially divergent input (one url
+    * with millions of targets) refuses cleanly instead of growing one
+    * task's buffer.
     *
     * 100 TB shape: pointer doubling — ceil(log2(maxChain)) rounds of
     * one equi-join of the permanent-moves map against ITSELF
@@ -769,26 +773,25 @@ object Frontier {
       s"maxChain must be in [2, 1024], got $maxChain")
     val isPerm = col("outcome") === "resolved" && col("permanent")
     // ONE url-keyed aggregation builds the deduped map AND the
-    // divergent-target refusal (r21 optimization round, guide §2.4): the
-    // former distinct() → groupBy-count → self-join spelling cost three
-    // exchanges and a persist of the pre-guard frame; collect_set over
-    // (final_url, hops) collapses replay duplicates exactly like the
-    // distinct (struct equality, nulls equal) and a set wider than one
-    // element IS the conflicting-permanent-targets condition the join
-    // formulation raised on. The raise reads the set size, so Catalyst
-    // cannot fold it below the aggregation. A null url is dropped first:
-    // the url-keyed groupBy would keep it as a group of its own, where the
-    // join formulation's inner equi-join dropped it.
+    // divergent-target refusal: the min and max of (final_url, hops)
+    // agree exactly when every permanent row of the url names one target
+    // (replay duplicates collapse; `<=>` compares null fields as equal),
+    // so `!(min <=> max)` IS the conflicting-permanent-targets condition,
+    // read from a two-struct buffer. The raise reads both aggregates, so
+    // Catalyst cannot fold it below the aggregation. A null url is
+    // dropped first: the url-keyed groupBy would keep it as a group of
+    // its own.
+    val target = struct(col("final_url"), col("hops"))
     val gens = new Generations(Nil)
     var state = gens.cut(moves.filter(isPerm && col("url").isNotNull)
       .groupBy("url")
-      .agg(collect_set(struct(col("final_url"), col("hops"))).as("__fs"))
+      .agg(min(target).as("__lo"), max(target).as("__hi"))
       .select(
-        when(size(col("__fs")) > 1, raise_error(concat(
+        when(!(col("__lo") <=> col("__hi")), raise_error(concat(
           lit("compactRedirectMoves: conflicting permanent targets for "),
           col("url")))).otherwise(col("url")).as("url"),
-        col("__fs").getItem(0).getField("final_url").as("final_url"),
-        col("__fs").getItem(0).getField("hops").as("hops")))
+        col("__lo").getField("final_url").as("final_url"),
+        col("__lo").getField("hops").as("hops")))
     val rounds = 32 - Integer.numberOfLeadingZeros(maxChain - 1) // ceil(log2)
     // NOTE (r20 optimization round): the fused single-plan treatment that
     // sped up pageRank/trustRank/resolveRedirects was tried here and

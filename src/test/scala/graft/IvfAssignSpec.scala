@@ -1,10 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, Row}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -136,22 +132,6 @@ class IvfAssignSpec extends SparkSpec {
     }
     val (small, large) = (planChars(4), planChars(1024))
     assert(large < small + 16, s"plan chars: nlist=4 $small, nlist=1024 $large")
-  }
-
-  /** Rows parquet scans produced across `qes`. A cached scan is one plan
-    * node shared by every execution that reads the cache, so each scan is
-    * counted once, by its metric's id. */
-  private def parquetRowsRead(qes: Seq[QueryExecution]): Long = {
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case s: FileSourceScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case r: ReusedExchangeExec => scans(r.child)
-      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
-      case o => (o.children ++ o.subqueries).flatMap(scans)
-    }
-    qes.flatMap(qe => scans(qe.executedPlan)).map(_.metrics("numOutputRows"))
-      .distinctBy(_.id).map(_.value).sum
   }
 
   test("ivfBuild plus its first consumer reads the input from parquet once") {

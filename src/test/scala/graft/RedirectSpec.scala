@@ -81,6 +81,51 @@ class RedirectSpec extends SparkSpec {
     assert(agreed.getBoolean(3), "all-permanent observations stay permanent")
   }
 
+  test("the redirect map is built from ONE read of the redirect input") {
+    val dir = tmpDir("redirects_once")
+    // 3-hop chains of mixed permanence plus replayed observations
+    val rows = (0 until 60).flatMap { i =>
+      val st = if (i % 4 == 0) 302 else 301
+      Seq((s"c$i-0", st, s"c$i-1"), (s"c$i-1", 308, s"c$i-2"),
+        (s"c$i-2", 301, s"c$i-3"), (s"c$i-0", 301, s"c$i-1"))
+    }
+    rmap(rows: _*).coalesce(1).write.mode("overwrite").parquet(dir)
+    val (got, qes) = executionsDuring(Frontier.resolveRedirects(
+      spark.read.parquet(dir), "url", "status", "location").collect())
+    assert(got.length == 180)
+    assert(parquetRowsRead(qes) == rows.length,
+      "the walk's rounds must share one aggregation over one scan")
+    val c0 = got.find(_.getString(0) == "c0-0").get
+    assert(c0.getString(1) == "c0-3" && c0.getLong(2) == 3L && !c0.getBoolean(3))
+    val c1 = got.find(_.getString(0) == "c1-0").get
+    assert(c1.getString(1) == "c1-3" && c1.getBoolean(3))
+  }
+
+  test("the conflicting-target refusal fires under every action") {
+    val r = Frontier.resolveRedirects(
+      rmap(("a", 301, "b"), ("a", 301, "c"), ("x", 302, "y")),
+      "url", "status", "location")
+    val actions = Seq[(String, () => Any)](
+      "count()" -> (() => r.count()),
+      "select(hops).collect()" -> (() => r.select("hops").collect()),
+      "select(outcome).collect()" -> (() => r.select("outcome").collect()),
+      "collect()" -> (() => r.collect()))
+    for ((name, run) <- actions) {
+      val e = intercept[Exception](run())
+      assert(e.getMessage.contains("conflicting redirect rows for a"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("a redirect row with a null url is dropped") {
+    val got = Frontier.resolveRedirects(
+      Seq(("a", 301, "b"), (null, 301, "c"), (null, 302, "d"))
+        .toDF("url", "status", "location"),
+      "url", "status", "location").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(4))).toSeq
+    assert(got == Seq(("a", "b", "resolved")), got.toString)
+  }
+
   test("relative Locations resolve against the source before the walk") {
     val r = Frontier.resolveRedirects(rmap(
         // /abs-path, ../up, ?query and //net-path forms, chained: the

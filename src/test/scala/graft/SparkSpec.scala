@@ -100,6 +100,26 @@ abstract class SparkSpec extends AnyFunSuite {
     (out, qes.size)
   }
 
+  /** Rows parquet scans produced across `qes`. A cached scan is one plan
+    * node shared by every execution that reads the cache, so each scan is
+    * counted once, by its metric's id. */
+  def parquetRowsRead(qes: Seq[org.apache.spark.sql.execution.QueryExecution]): Long = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case s: FileSourceScanExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case r: ReusedExchangeExec => scans(r.child)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case o => (o.children ++ o.subqueries).flatMap(scans)
+    }
+    qes.flatMap(qe => scans(qe.executedPlan)).map(_.metrics("numOutputRows"))
+      .distinctBy(_.id).map(_.value).sum
+  }
+
   /** Order-insensitive comparison: sorted rows of string-rendered values. */
   def canon(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
     val cols = df.columns.sorted.toSeq
