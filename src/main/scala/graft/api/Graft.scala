@@ -839,29 +839,23 @@ object Graft {
     // pandas to_json (api.py:150-152), whose shapes are a records ARRAY or a
     // column->index->value OBJECT — not json-lines. Like the reference, this
     // is the small-single-object writer, so the frame is collected and
-    // serialized driver-side (the default json path below stays json-lines,
-    // Spark's native encoding; SURVEY §8.4).
+    // serialized driver-side through JsonFile (NaN → null as pandas writes
+    // it, dates and timestamps as their strings); the default json path
+    // below stays json-lines, Spark's native encoding (SURVEY §8.4).
     if (fmt == "json" && options.contains("orient")) {
       val names = df.schema.fieldNames
       val rows = df.collect()
-      val text = options("orient") match {
-        case "records" =>
-          rows.map(r => names.indices.map(i =>
-            s""""${names(i)}":${jsonValue(r.get(i))}""").mkString("{", ",", "}"))
-            .mkString("[", ",", "]")
+      val value = options("orient") match {
+        case "records" => rows.toSeq
         case "columns" =>
-          names.indices.map { i =>
-            val col = rows.zipWithIndex.map { case (r, idx) =>
-              s""""$idx":${jsonValue(r.get(i))}"""
-            }.mkString("{", ",", "}")
-            s""""${names(i)}":$col"""
-          }.mkString("{", ",", "}")
+          scala.collection.immutable.VectorMap.from(names.indices.map(i =>
+            names(i) -> scala.collection.immutable.VectorMap.from(
+              rows.indices.map(idx => idx.toString -> rows(idx).get(i)))))
         case other =>
           throw new IllegalArgumentException(
             s"unsupported json orient '$other' (records|columns)")
       }
-      writeRaw(spark, url, text.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        fsConf)
+      writeRaw(spark, url, JsonFile.bytes(value), fsConf)
       return
     }
     withFs(spark, url, fsConf) { fs =>
@@ -883,41 +877,6 @@ object Graft {
         StagedCommit.replaceFile(fs, part, target)
       } finally fs.delete(tmp, true)
     }
-  }
-
-  /** Minimal JSON scalar/array/struct encoder for the orient write path
-    * (flat reference schemas; dates/timestamps surface as strings, matching
-    * pandas' default string encoding closely enough for round-trips). */
-  private def jsonValue(v: Any): String = v match {
-    case null => "null"
-    case s: String => jsonString(s)
-    case b: java.lang.Boolean => b.toString
-    // NaN/Infinity are not valid JSON tokens — pandas to_json writes null
-    case d: java.lang.Double if d.isNaN || d.isInfinite => "null"
-    case f: java.lang.Float if f.isNaN || f.isInfinite => "null"
-    case n: java.lang.Number => n.toString
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => s"${jsonString(String.valueOf(k))}:${jsonValue(x)}" }
-        .mkString("{", ",", "}")
-    case seq: scala.collection.Seq[_] => seq.map(jsonValue).mkString("[", ",", "]")
-    case r: org.apache.spark.sql.Row =>
-      r.schema.fieldNames.indices.map(i =>
-        s"${jsonString(r.schema.fieldNames(i))}:${jsonValue(r.get(i))}")
-        .mkString("{", ",", "}")
-    case other => jsonString(other.toString)
-  }
-  private def jsonString(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
   }
 
   /** Run `f` against the filesystem for `url`: the cached session instance

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.JsonFile
 import graft.functions.NearestCentroids
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -452,17 +453,6 @@ object Ann {
   private def ivfFs(spark: org.apache.spark.sql.SparkSession, path: String) =
     graft.core.Discovery.fileSystemFor(path, spark.sessionState.newHadoopConf())
 
-  private def readJsonFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): com.fasterxml.jackson.databind.JsonNode = {
-    val in = fs.open(p)
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-      buf.toByteArray
-    } finally in.close()
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-  }
-
   private def readIvfSidecarNode(spark: org.apache.spark.sql.SparkSession,
       path: String): com.fasterxml.jackson.databind.JsonNode = {
     val fs = ivfFs(spark, path)
@@ -470,7 +460,7 @@ object Ann {
     require(fs.exists(sidecar),
       s"no $IvfParamsSidecar at $path — not a graft IVF index " +
         "(persist with ivfWrite so dim/nlist survive)")
-    val node = readJsonFile(fs, sidecar)
+    val node = JsonFile.read(fs, sidecar)
     Seq("dim", "nlist").foreach(f => require(node.hasNonNull(f),
       s"$IvfParamsSidecar at $path lacks field '$f'"))
     node
@@ -500,15 +490,10 @@ object Ann {
     index.centroids.toDF("cid", "centroid")
       .write.mode("overwrite").parquet(s"$path/centroids")
     val dim = index.centroids.headOption.map(_._2.length).getOrElse(0)
-    val buildMeanCos = meanCos.get("m")
-    val fs = ivfFs(spark, path)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, IvfParamsSidecar), true)
-    try out.write(
-      (s"""{"dim":$dim,"nlist":${index.centroids.size},""" +
-        s""""vec_col":"${index.vecCol}","build_mean_cos":$buildMeanCos,""" +
-        s""""assign_top":${index.assignTop}}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    JsonFile.write(ivfFs(spark, path),
+      new org.apache.hadoop.fs.Path(path, IvfParamsSidecar),
+      "dim" -> dim, "nlist" -> index.centroids.size, "vec_col" -> index.vecCol,
+      "build_mean_cos" -> meanCos.get("m"), "assign_top" -> index.assignTop)
   }
 
   /** Load a persisted IVF index. `gr_cluster` comes back as a partition
@@ -518,8 +503,7 @@ object Ann {
   def ivfRead(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
     val node = readIvfSidecarNode(spark, path)
     val (dim, nlist) = (node.get("dim").asInt, node.get("nlist").asInt)
-    val vecCol =
-      if (node.hasNonNull("vec_col")) node.get("vec_col").asText else "embedding"
+    val vecCol = node.path("vec_col").asText("embedding")
     val centroids = spark.read.parquet(s"$path/centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).toSeq
@@ -529,9 +513,7 @@ object Ann {
     val clustered = applyTombstones(spark, path,
       spark.read.parquet(s"$path/data")
         .withColumn("gr_cluster", col("gr_cluster").cast("int")))
-    val assignTop =
-      if (node.hasNonNull("assign_top")) node.get("assign_top").asInt else 1
-    IvfIndex(centroids, clustered, vecCol, assignTop)
+    IvfIndex(centroids, clustered, vecCol, node.path("assign_top").asInt(1))
   }
 
   private val IvfTombstonesDir = "tombstones"
@@ -676,13 +658,9 @@ object Ann {
         avg(assignedCos(centroids, vecCol)).as("mean_cos"),
         count(lit(1)).as("rows")).head()
       val rows = stats.getLong(1)
-      val meanCos = if (stats.isNullAt(0)) "null" else stats.getDouble(0).toString
-      val fs = ivfFs(spark, path)
-      val rec = fs.create(new org.apache.hadoop.fs.Path(
-        s"$path/$IvfDriftDir", s"$tag.json"), true)
-      try rec.write(s"""{"tag":"$tag","rows":$rows,"mean_cos":$meanCos}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally rec.close()
+      JsonFile.write(ivfFs(spark, path),
+        new org.apache.hadoop.fs.Path(s"$path/$IvfDriftDir", s"$tag.json"),
+        "tag" -> tag, "rows" -> rows, "mean_cos" -> stats.get(0))
       rows
     } finally assigned.unpersist(blocking = false)
   }
@@ -713,8 +691,10 @@ object Ann {
     import spark.implicits._
     val node = readIvfSidecarNode(spark, path)
     require(node.hasNonNull("build_mean_cos"),
-      s"$IvfParamsSidecar at $path predates drift telemetry — re-persist " +
-        "with ivfWrite to record the build-time baseline")
+      s"$IvfParamsSidecar at $path records no finite build-time baseline " +
+        "(it predates drift telemetry, or the build's mean cosine was not " +
+        "finite, as a zero vector makes it) — re-persist with ivfWrite to " +
+        "record one")
     val base = node.get("build_mean_cos").asDouble
     val fs = ivfFs(spark, path)
     val dir = new org.apache.hadoop.fs.Path(path, IvfDriftDir)
@@ -722,7 +702,7 @@ object Ann {
       if (!fs.exists(dir)) Seq.empty
       else fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".json"))
         .map { st =>
-          val n = readJsonFile(fs, st.getPath)
+          val n = JsonFile.read(fs, st.getPath)
           (n.get("tag").asText, n.get("rows").asLong,
             if (n.hasNonNull("mean_cos")) Some(n.get("mean_cos").asDouble) else None)
         }.sortBy(_._1)
@@ -782,13 +762,10 @@ object Ann {
       seed: Long = 42L,
       iterations: Int = 2): IvfIndex = {
     val node = readIvfSidecarNode(spark, path)
-    val vecCol =
-      if (node.hasNonNull("vec_col")) node.get("vec_col").asText else "embedding"
-    val gen =
-      if (node.hasNonNull("generation")) node.get("generation").asInt else 1
+    val vecCol = node.path("vec_col").asText("embedding")
+    val gen = node.path("generation").asInt(1)
     val useNlist = if (nlist > 0) nlist else node.get("nlist").asInt
-    val useTop =
-      if (node.hasNonNull("assign_top")) node.get("assign_top").asInt else 1
+    val useTop = node.path("assign_top").asInt(1)
     val fs = ivfFs(spark, path)
     def p(child: String) = new org.apache.hadoop.fs.Path(path, child)
     val swap = graft.core.StagedCommit.Rebuild.open(fs, new org.apache.hadoop.fs.Path(path)).sweep()
@@ -826,11 +803,10 @@ object Ann {
       // the rebuild physically dropped the tombstoned rows — the set is
       // spent (leaving it would re-filter ids that may later be re-added)
       fs.delete(p(IvfTombstonesDir), true)
-      val sidecar = readJsonFile(fs, new org.apache.hadoop.fs.Path(swap.staging, IvfParamsSidecar))
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].put("generation", gen + 1)
-      val out = fs.create(p(IvfParamsSidecar), true)
-      try out.write(new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsBytes(sidecar))
-      finally out.close()
+      val staged = JsonFile.read(fs,
+        new org.apache.hadoop.fs.Path(swap.staging, IvfParamsSidecar))
+      JsonFile.write(fs, p(IvfParamsSidecar),
+        JsonFile.fields(staged) :+ ("generation" -> (gen + 1)): _*)
     }
     ivfRead(spark, path)
   }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
 
+import graft.core.JsonFile
 import graft.functions.TextFunctions
 
 /** Deduplication operators for 100 TB-scale corpora. Design notes:
@@ -218,33 +219,25 @@ object Dedup {
     *
     * LAZY: nothing executes until the caller acts on the result. The shingle
     * intermediate is consumed three times (signature/bucket branch + both
-    * sides of the verification attach); `persistShingles` picks the reuse
-    * strategy:
-    *  - false (default): each consumer recomputes text→shingle→hash from
-    *    the source scan. Three scans sound wasteful, but the scan is a
-    *    pruned columnar read and the shingle pipeline is cheap codegen,
-    *    while caching a corpus-sized array column pays a columnar
-    *    cache encode + storage-memory pressure + eviction churn at scale —
-    *    measured 1.3s encode vs 3×0.2s recompute at sf0.1, and at 100 TB
-    *    the cache write/read IO matches the re-scan IO it saves;
-    *  - true: persist MEMORY_AND_DISK, released after the first completed
-    *    action (see [[CacheRelease.afterFirstAction]]) — prefer when the
-    *    source scan is the expensive part (slow object store, heavy
-    *    upstream transforms), and REQUIRED when `df`'s lineage is
-    *    nondeterministic (rand()-derived columns, nondeterministic UDFs,
-    *    changing source, …): with recompute,
-    *    the three consumers re-execute the input independently and an
-    *    unstable input would bucket signatures against one snapshot but
-    *    verify shingles against another — persist pins a single snapshot for
-    *    all three. Plans carrying a nondeterministic EXPRESSION are detected
-    *    and auto-persisted (with a log line) even when
-    *    `persistShingles=false`; a mutating external source can't be seen
-    *    from the plan and remains the caller's responsibility.
-    *    NOTE: the persist is released after the FIRST completed action on
-    *    the result, so the pinned-snapshot guarantee covers only that first
-    *    action — a second action recomputes the nondeterministic lineage
-    *    unpinned. Callers needing multiple actions over a nondeterministic
-    *    input should persist/collect the result once themselves.
+    * sides of the verification attach), and each consumer recomputes
+    * text→shingle→hash from the source scan. Three scans sound wasteful,
+    * but the scan is a pruned columnar read and the shingle pipeline is
+    * cheap codegen, while caching a corpus-sized array column pays a
+    * columnar cache encode + storage-memory pressure + eviction churn at
+    * scale — measured 1.3s encode vs 3×0.2s recompute at sf0.1, and at
+    * 100 TB the cache write/read IO matches the re-scan IO it saves.
+    *
+    * The one exception is a plan carrying a nondeterministic EXPRESSION
+    * (rand()-derived columns, nondeterministic UDFs): recomputed, the
+    * three consumers would bucket signatures against one snapshot but
+    * verify shingles against another, so such a plan is detected and its
+    * shingles persisted MEMORY_AND_DISK (with a log line), released after
+    * the first completed action ([[CacheRelease.afterFirstAction]]). A
+    * mutating external source can't be seen from the plan and remains the
+    * caller's responsibility. The pinned snapshot covers only that first
+    * action — a second action recomputes the nondeterministic lineage
+    * unpinned; callers needing several actions over such an input should
+    * persist/collect the result once themselves.
     * Buckets above `maxBucketSize` are dropped-and-logged ([[capBuckets]]). */
   def minhashPairs(
       df: DataFrame,
@@ -255,8 +248,7 @@ object Dedup {
       rowsPerBand: Int = 4,
       threshold: Double = 0.7,
       seed: Long = 42L,
-      maxBucketSize: Int = DefaultMaxBucketSize,
-      persistShingles: Boolean = false): DataFrame = {
+      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     // hashes materialized once per consumer; signature derives from the
     // hash column
     val withHashes0 = shingleSets(df, idCol, textCol, shingleSize)
@@ -265,14 +257,13 @@ object Dedup {
     // _increasing_id, nondeterministic UDF) would hand each of the three
     // consumers a different snapshot, so force the persist path for those
     val inputDeterministic = planIsDeterministic(df)
-    if (!persistShingles && !inputDeterministic)
+    if (!inputDeterministic)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         "graft_lsh_minhash: input plan has nondeterministic expressions; " +
           "persisting shingles to pin one snapshot across consumers")
     val withHashes =
-      if (persistShingles || !inputDeterministic)
-        withHashes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else withHashes0
+      if (inputDeterministic) withHashes0
+      else withHashes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val withSig = withHashes.select(col("id"),
       minhashSignatureFromHashes(col("shingle_set"), numHashes, seed).as("sig"))
 
@@ -301,7 +292,7 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
 
     CacheRelease.afterFirstAction(verified,
-      if (persistShingles || !inputDeterministic) Seq(withHashes) else Nil,
+      if (inputDeterministic) Nil else Seq(withHashes),
       capWarning("graft_lsh_minhash", maxBucketSize))
   }
 
@@ -674,7 +665,7 @@ object Dedup {
   }
 
   /** Persist-ready minhash index of a corpus: (id, shingle_set, sig).
-    * Write it once with [[minhashIndexWrite]] and every later ingest
+    * Write it once with [[minhashIndexBuildAndWrite]] and every later ingest
     * matches against it with [[minhashPairsAgainst]] — the corpus text is
     * never re-read or re-shingled. Rebuild only when the hash parameters
     * change; append new batches' index rows after ingest to keep it
@@ -696,7 +687,7 @@ object Dedup {
     * recoverable from a stored signature's length, but `shingleSize` and
     * `seed` are NOT recoverable from the data — matching with mismatched
     * values surfaces only as silently low recall, the worst failure mode
-    * there is. [[minhashIndexWrite]] persists all three in a
+    * there is. [[minhashIndexBuildAndWrite]] persists all three in a
     * `_graft_minhash_params.json` sidecar inside the index directory
     * (underscore prefix: parquet scans ignore it) and
     * [[minhashIndexRead]] restores them, so matching through the
@@ -760,13 +751,7 @@ object Dedup {
     val sidecar = new org.apache.hadoop.fs.Path(path, MinhashParamsSidecar)
     if (!fs.exists(sidecar)) None
     else {
-      val in = fs.open(sidecar)
-      val bytes = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        buf.toByteArray
-      } finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+      val node = JsonFile.read(fs, sidecar)
       Seq("shingleSize", "numHashes", "seed").foreach(f =>
         require(node.hasNonNull(f), s"$MinhashParamsSidecar at $path lacks field '$f'"))
       Some(MinhashParams(
@@ -776,7 +761,7 @@ object Dedup {
   }
 
   private def writeIndexWithSidecar(index: DataFrame, path: String,
-      params: MinhashParams, mode: String, probeNumHashes: Boolean): Unit = {
+      params: MinhashParams, mode: String): Unit = {
     val required = Seq("id", "shingle_set", "sig")
     require(required.forall(index.columns.contains),
       s"index must carry ${required.mkString(", ")} (from minhashIndex); " +
@@ -791,21 +776,9 @@ object Dedup {
       readSidecar(fs, path).foreach(
         _.requireMatches(params.shingleSize, params.numHashes, params.seed))
     index.write.mode(mode).parquet(path)
-    if (probeNumHashes) {
-      val written = spark.read.parquet(path)
-        .filter(col("sig").isNotNull).select(size(col("sig"))).head(1)
-      written.headOption.foreach { r =>
-        require(r.getInt(0) == params.numHashes,
-          s"index signatures carry ${r.getInt(0)} hashes but the sidecar would " +
-            s"claim numHashes=${params.numHashes} — pass the parameters the " +
-            "index was built with")
-      }
-    }
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, MinhashParamsSidecar), true)
-    try out.write(
-      s"""{"shingleSize":${params.shingleSize},"numHashes":${params.numHashes},"seed":${params.seed}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    JsonFile.write(fs, new org.apache.hadoop.fs.Path(path, MinhashParamsSidecar),
+      "shingleSize" -> params.shingleSize, "numHashes" -> params.numHashes,
+      "seed" -> params.seed)
   }
 
   /** Build a corpus's minhash index AND persist it (parquet + parameter
@@ -828,29 +801,9 @@ object Dedup {
     val params = MinhashParams(shingleSize, numHashes, seed)
     writeIndexWithSidecar(
       minhashIndex(df, idCol, textCol, shingleSize, numHashes, seed),
-      path, params, mode, probeNumHashes = false)
+      path, params, mode)
     MinhashIndex(df.sparkSession.read.parquet(path), params)
   }
-
-  /** Persist a pre-built [[minhashIndex]] DataFrame as parquet plus the
-    * parameter sidecar. DEPRECATED because shingleSize/seed here are
-    * caller-asserted: only `numHashes` can be cross-checked against the
-    * data (one-row probe; null-sig rows from null-text docs are skipped),
-    * so a caller mis-remembering the build's shingleSize or seed writes a
-    * sidecar that blesses silently-low-recall matching — exactly the mode
-    * the sidecar exists to kill. [[minhashIndexBuildAndWrite]] threads the
-    * parameters from the build and cannot mismatch. */
-  @deprecated("use minhashIndexBuildAndWrite, which threads shingleSize/" +
-    "numHashes/seed from the build instead of trusting the caller", "0.9")
-  def minhashIndexWrite(
-      index: DataFrame,
-      path: String,
-      shingleSize: Int = 3,
-      numHashes: Int = 64,
-      seed: Long = 42L,
-      mode: String = "overwrite"): Unit =
-    writeIndexWithSidecar(index, path,
-      MinhashParams(shingleSize, numHashes, seed), mode, probeNumHashes = true)
 
   /** Restore a persisted minhash index and its parameters. Fails loudly
     * when the sidecar is missing (an index persisted some other way has
@@ -934,7 +887,7 @@ object Dedup {
     * null-sig rows from null-text docs are skipped), but shingleSize and
     * seed cannot be recovered from the data, so mismatches there surface
     * as silently low recall. Prefer the persisted-index path —
-    * [[minhashIndexWrite]] / [[minhashIndexRead]] then
+    * [[minhashIndexBuildAndWrite]] / [[minhashIndexRead]] then
     * [[MinhashIndex.pairsAgainst]] — which carries all three parameters
     * in a sidecar and needs no probe. */
   def minhashPairsAgainst(
@@ -1085,24 +1038,18 @@ object Dedup {
     * keeps exact strings so the oracle stays bit-true.
     *
     * The per-doc span frame feeds BOTH the `n_spans` projection and the
-    * span-key aggregate, so with `persistSpans=true` (default) it is
-    * persisted MEMORY_AND_DISK inside the operator and released after
-    * the first completed action ([[CacheRelease.afterFirstAction]]): the
-    * corpus is scanned and tokenized exactly once, and both branches see one
-    * pinned snapshot (a nondeterministic input lineage cannot diverge
-    * between them). `persistSpans=false` trades storage-memory pressure
-    * for a second scan+tokenize pass — only sensible when executor
-    * storage is the scarcer resource — and is overridden (with a log
-    * line) when the input plan carries a nondeterministic expression,
-    * because divergent snapshots would silently miscount. */
+    * span-key aggregate, so it is persisted MEMORY_AND_DISK inside the
+    * operator and released after the first completed action
+    * ([[CacheRelease.afterFirstAction]]): the corpus is scanned and
+    * tokenized exactly once, and both branches see one pinned snapshot (a
+    * nondeterministic input lineage cannot diverge between them). */
   def spanStats(
       df: DataFrame,
       idCol: String,
       textCol: String,
       n: Int = 5,
       minDocs: Int = 2,
-      hashSpans: Boolean = false,
-      persistSpans: Boolean = true): DataFrame = {
+      hashSpans: Boolean = false): DataFrame = {
     require(n >= 1, "span length n must be >= 1")
     require(minDocs >= 2, "minDocs must be >= 2 (a span always appears in its own doc)")
     // fused codegen'd kernel, NOT the composable words+transform+array_join
@@ -1113,15 +1060,7 @@ object Dedup {
       .select(col(idCol),
         graft.functions.WordSpansExpr(col(textCol), n).as("__spans"))
       .withColumn("n_spans", size(col("__spans")).cast("long"))
-    val doPersist = persistSpans || {
-      val deterministic = planIsDeterministic(df)
-      if (!deterministic)
-        log.warn("graft_span_stats: input plan has nondeterministic " +
-          "expressions; persisting the span frame to pin one snapshot " +
-          "despite persistSpans=false")
-      !deterministic
-    }
-    if (doPersist) perDoc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    perDoc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keyed = perDoc
       .select(col(idCol), explode(col("__spans")).as("span"))
       .withColumn("__k", if (hashSpans) xxhash64(col("span")) else col("span"))
@@ -1160,8 +1099,7 @@ object Dedup {
         (col("n_spans") - coalesce(col("__n_uniq"), lit(0L))).as("n_shared"))
       .withColumn("share_ratio",
         col("n_shared").cast("double") / col("n_spans"))
-    if (doPersist) CacheRelease.afterFirstAction(result, Seq(perDoc))
-    else result
+    CacheRelease.afterFirstAction(result, Seq(perDoc))
   }
 
   /** Corpus-level boilerplate removal — the REWRITE counterpart of

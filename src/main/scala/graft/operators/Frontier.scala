@@ -524,21 +524,24 @@ object Frontier {
     val st = col(statusCol).cast("int")
     outcomes
       .join(prior, col(urlCol) === col("__purl"), "left")
-      .select(
-        when(st.isin(200, 304), col(urlCol)).otherwise(raise_error(concat(
+      // the refusals are a row filter, not projected columns, so an action
+      // that prunes the output (count(), a one-column select) keeps them;
+      // reading `__p` keeps the filter above the join
+      .filter(when(!coalesce(st.isin(200, 304), lit(false)), raise_error(concat(
           lit("recordOutcomes: status must be 200 or 304, got "),
-          st.cast("string"), lit(" for "), col(urlCol)))).as("url"),
+          st.cast("string"), lit(" for "), col(urlCol))))
+        .when(st === 304 && col("__p").isNull, raise_error(concat(
+          lit("recordOutcomes: 304 for a URL with no prior history: "),
+          col(urlCol))))
+        .when(st === 200 && col(hashCol).isNull, raise_error(concat(
+          lit("recordOutcomes: 200 with null content hash for "),
+          col(urlCol))))
+        .otherwise(lit(true)))
+      .select(
+        col(urlCol).as("url"),
         col(tsCol).cast("long").as("ts"),
-        when(st === 304,
-          when(col("__p").isNull, raise_error(concat(
-            lit("recordOutcomes: 304 for a URL with no prior history: "),
-            col(urlCol))))
-            .otherwise(col("__p").getField("h")))
-          .otherwise(
-            when(col(hashCol).isNull, raise_error(concat(
-              lit("recordOutcomes: 200 with null content hash for "),
-              col(urlCol))))
-              .otherwise(col(hashCol).cast("string"))).as("h"),
+        when(st === 304, col("__p").getField("h"))
+          .otherwise(col(hashCol).cast("string")).as("h"),
         when(st === 304,
           coalesce(col(etagCol).cast("string"), col("__p").getField("etag")))
           .otherwise(col(etagCol).cast("string")).as("etag"),

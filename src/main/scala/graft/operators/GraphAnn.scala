@@ -216,13 +216,10 @@ object GraphAnn {
       rows: Long, idXor: Long): Unit = {
     val fs = graft.core.Discovery.fileSystemFor(path,
       spark.sessionState.newHadoopConf())
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, NswParamsSidecar), true)
-    try out.write(
-      (s"""{"id_col":"$idCol","m":$m,"ef_construction":$efConstruction,""" +
-        s""""rows":$rows,"id_xor":$idXor}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.core.JsonFile.write(fs,
+      new org.apache.hadoop.fs.Path(path, NswParamsSidecar),
+      "id_col" -> idCol, "m" -> m, "ef_construction" -> efConstruction,
+      "rows" -> rows, "id_xor" -> idXor)
   }
 
   private def readSidecar(spark: org.apache.spark.sql.SparkSession,
@@ -232,9 +229,7 @@ object GraphAnn {
     val p = new org.apache.hadoop.fs.Path(path, NswParamsSidecar)
     require(fs.exists(p), s"no $NswParamsSidecar sidecar at $path — not a " +
       "graph index (build with nswBuild and persist with nswWrite)")
-    val in = fs.open(p)
-    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-    finally in.close()
+    graft.core.JsonFile.read(fs, p)
   }
 
   private def requireFresh(node: com.fasterxml.jackson.databind.JsonNode,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.JsonFile
 import graft.functions.{PqAdcBatchExpr, PqAdcExpr, PqEncodeExpr, PqImpl}
 
 /** Product quantization for embedding-scale ANN — the memory/shuffle
@@ -349,41 +350,38 @@ object Pq {
       cb.zipWithIndex.map { case (v, c) => (s, c, v.toSeq) }
     }.toSeq.toDF("sub", "cell", "vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, PqParamsSidecar), true)
-    // train_mse only when the model carries one (hand-built models don't);
-    // NaN is not valid JSON and drift reporting refuses without a baseline
-    val mse = if (java.lang.Double.isFinite(model.trainMse))
-      s""","train_mse":${model.trainMse}""" else ""
-    try out.write(
-      s"""{"m":${model.m},"k":${model.k},"dsub":${model.dsub}$mse}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    // a hand-built model carries no train_mse (NaN): it lands as null, and
+    // drift reporting refuses without a baseline
+    JsonFile.write(pqFs(spark, path),
+      new org.apache.hadoop.fs.Path(path, PqParamsSidecar),
+      "m" -> model.m, "k" -> model.k, "dsub" -> model.dsub,
+      "train_mse" -> model.trainMse)
   }
 
-  private def readSidecar(spark: SparkSession, path: String): (Int, Int, Int, Double) = {
+  private def pqFs(spark: SparkSession, path: String) =
+    graft.core.Discovery.fileSystemFor(path, spark.sessionState.newHadoopConf())
+
+  /** The sidecar's `(m, k, dsub, train_mse, generation)`; a missing or null
+    * `train_mse` reads as NaN, a missing `generation` as 1. */
+  private def readSidecar(spark: SparkSession,
+      path: String): (Int, Int, Int, Double, Int) = {
     val p = new org.apache.hadoop.fs.Path(path, PqParamsSidecar)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = pqFs(spark, path)
     require(fs.exists(p),
       s"no $PqParamsSidecar at $path — not a graft PQ index")
-    val in = fs.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def field(f: String): Int =
-      s""""$f"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"$PqParamsSidecar at $path lacks field '$f'"))
-    val mse = """"train_mse"\s*:\s*([-0-9.eE+]+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toDouble).getOrElse(Double.NaN)
-    (field("m"), field("k"), field("dsub"), mse)
+    val node = JsonFile.read(fs, p)
+    def field(f: String): Int = {
+      require(node.hasNonNull(f), s"$PqParamsSidecar at $path lacks field '$f'")
+      node.get(f).asInt
+    }
+    (field("m"), field("k"), field("dsub"),
+      node.path("train_mse").asDouble(Double.NaN), node.path("generation").asInt(1))
   }
 
   /** Load a persisted PQ index: `(model, codes)`. The codebook table is
     * tiny (m × k rows) and cross-checked against the sidecar. */
   def pqRead(spark: SparkSession, path: String): (PqModel, DataFrame) = {
-    val (m, k, dsub, trainMse) = readSidecar(spark, path)
+    val (m, k, dsub, trainMse, _) = readSidecar(spark, path)
     val rows = spark.read.parquet(s"$path/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     require(rows.length == m * k,
@@ -445,16 +443,11 @@ object Pq {
       if (sampled.length >= 64) sampled
       else vecsOf(newVecs.orderBy(col(idCol)).select(col(vecCol)).limit(sampleN))
     val mse =
-      if (sample.isEmpty) "null"
-      else (sample.map(reconSqErr(_, model.cells)).sum / sample.length).toString
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rec = fs.create(new org.apache.hadoop.fs.Path(
-      s"$path/$PqDriftDir", s"$tag.json"), true)
-    try rec.write(
-      s"""{"tag":"$tag","sample_n":${sample.length},"mse":$mse}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally rec.close()
+      if (sample.isEmpty) null
+      else sample.map(reconSqErr(_, model.cells)).sum / sample.length
+    JsonFile.write(pqFs(spark, path),
+      new org.apache.hadoop.fs.Path(s"$path/$PqDriftDir", s"$tag.json"),
+      "tag" -> tag, "sample_n" -> sample.length, "mse" -> mse)
   }
 
   /** Per-append drift records (one tiny json per tag; underscore prefix
@@ -472,27 +465,21 @@ object Pq {
   def pqDriftReport(spark: SparkSession, path: String,
       mseRatioLimit: Double = 2.0): DataFrame = {
     import spark.implicits._
-    val (_, _, _, trainMse) = readSidecar(spark, path)
+    val (_, _, _, trainMse, _) = readSidecar(spark, path)
     require(java.lang.Double.isFinite(trainMse),
       s"$PqParamsSidecar at $path records no train_mse (hand-built model " +
         "or pre-telemetry index) — re-persist a pqTrain'd model to " +
         "baseline drift")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = pqFs(spark, path)
     val dir = new org.apache.hadoop.fs.Path(path, PqDriftDir)
     val recs =
       if (!fs.exists(dir)) Seq.empty
       else fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".json"))
         .map { st =>
-          val in = fs.open(st.getPath)
-          val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          def num(f: String): Option[Double] =
-            (s""""$f"\\s*:\\s*([-0-9.eE+]+)""").r.findFirstMatchIn(json)
-              .map(_.group(1).toDouble)
-          val tag = """"tag"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json)
-            .map(_.group(1)).getOrElse(st.getPath.getName.stripSuffix(".json"))
-          (tag, num("sample_n").map(_.toLong).getOrElse(0L), num("mse"))
+          val n = JsonFile.read(fs, st.getPath)
+          (n.path("tag").asText(st.getPath.getName.stripSuffix(".json")),
+            n.path("sample_n").asLong(0L),
+            Option.when(n.hasNonNull("mse"))(n.get("mse").asDouble))
         }.sortBy(_._1)
     // a zero train_mse (codebooks that perfectly cover a degenerate
     // training sample) would divide-by-zero under ANSI: any nonzero batch
@@ -528,17 +515,8 @@ object Pq {
       seed: Long = 42L,
       sampleN: Int = 512,
       iterations: Int = 8): (PqModel, DataFrame) = {
-    val (m, k, _, _) = readSidecar(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = {
-      val p = new org.apache.hadoop.fs.Path(path, PqParamsSidecar)
-      val in = fs.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      """"generation"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-        .map(_.group(1).toInt).getOrElse(1)
-    }
+    val (m, k, _, _, gen) = readSidecar(spark, path)
+    val fs = pqFs(spark, path)
     def child(base: String, c: String) = new org.apache.hadoop.fs.Path(base, c)
     val swap = graft.core.StagedCommit.Retrain.open(fs, new org.apache.hadoop.fs.Path(path)).sweep()
     val model = pqTrain(corpus, idCol, vecCol, m, k, seed, sampleN, iterations)
@@ -551,14 +529,9 @@ object Pq {
     pqRead(spark, swap.staging.toString) // sidecar/codebook consistency probe
     swap.swapChildren(_ => Seq("data", "codebooks")) {
       fs.delete(child(path, PqDriftDir), true)
-      val out = fs.create(child(path, PqParamsSidecar), true)
-      val mse = if (java.lang.Double.isFinite(model.trainMse))
-        s""","train_mse":${model.trainMse}""" else ""
-      try out.write(
-        (s"""{"m":${model.m},"k":${model.k},"dsub":${model.dsub}$mse""" +
-          s""","generation":${gen + 1}}""")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      val staged = JsonFile.read(fs, child(swap.staging.toString, PqParamsSidecar))
+      JsonFile.write(fs, child(path, PqParamsSidecar),
+        JsonFile.fields(staged) :+ ("generation" -> (gen + 1)): _*)
     }
     pqRead(spark, path)
   }

@@ -646,13 +646,7 @@ object Retrieval {
     val p = new org.apache.hadoop.fs.Path(path, InvIdxSidecar)
     require(fs.exists(p), s"no $InvIdxSidecar under $path — not an " +
       "inverted index written by invertedIndexBuildAndWrite")
-    val in = fs.open(p)
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-      buf.toByteArray
-    } finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+    val node = graft.core.JsonFile.read(fs, p)
     require(node.hasNonNull("numBuckets"),
       s"$InvIdxSidecar at $path lacks 'numBuckets'")
     val row = spark.read.parquet(s"$path/$InvIdxStatsDir")
@@ -707,10 +701,8 @@ object Retrieval {
       .write.partitionBy("gr_bucket").mode("overwrite").parquet(path)
     val conf = spark.sessionState.newHadoopConf()
     val fs = graft.core.Discovery.fileSystemFor(path, conf)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, InvIdxSidecar), true)
-    try out.write(s"""{"numBuckets":$numBuckets}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    graft.core.JsonFile.write(fs,
+      new org.apache.hadoop.fs.Path(path, InvIdxSidecar), "numBuckets" -> numBuckets)
     invIdxStatsAppend(df, idCol, textCol, path, tag = "base")
   }
 

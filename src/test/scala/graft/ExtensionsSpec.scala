@@ -174,8 +174,8 @@ class DedupSpec extends SparkSpec {
     assert(!Dedup.planIsDeterministic(
       base.toDF("id", "text").withColumn("noise", rand())))
     // end-to-end on a nondeterministic plan: correct pairs out, cache drains
-    // after the first action (the auto-persist takes the same one-shot
-    // release path as persistShingles=true)
+    // after the first action (the auto-persist is released by the
+    // one-shot listener, CacheRelease.afterFirstAction)
     val noisy = base.toDF("id", "text").withColumn("noise", rand())
     val pairs = Dedup.minhashPairs(noisy, "id", "text", threshold = 0.5)
     val got = pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSet

@@ -535,4 +535,29 @@ class FrontierSpec extends SparkSpec {
         "url", "ts", "h", "etag", "lm", "status").collect()
     }
   }
+
+  test("recordOutcomes refusals fire under count(), a one-column select and collect()") {
+    val h = histDf(Seq(("u", 0L, "a", "e1", 50L)))
+    def outcome(url: String, hash: String, status: Int) =
+      Seq((url, 20L, hash, null.asInstanceOf[String],
+        null.asInstanceOf[java.lang.Long], status))
+        .toDF("url", "ts", "h", "etag", "lm", "status")
+    val cases = Seq(
+      outcome("u", "z", 500) -> "status must be 200 or 304, got 500 for u",
+      outcome("never-seen", null, 304) ->
+        "304 for a URL with no prior history: never-seen",
+      outcome("u", null, 200) -> "200 with null content hash for u")
+    for ((out, msg) <- cases) {
+      val r = Frontier.recordOutcomes(h, out, "url", "ts", "h", "etag",
+        "lm", "status")
+      val actions = Seq[(String, () => Any)](
+        "count()" -> (() => r.count()),
+        "select(ts).collect()" -> (() => r.select("ts").collect()),
+        "collect()" -> (() => r.collect()))
+      for ((name, run) <- actions) {
+        val e = intercept[Exception](run())
+        assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+      }
+    }
+  }
 }

@@ -2083,15 +2083,6 @@ class MinhashIndexSidecarSpec extends SparkSpec {
       e.getMessage.contains("minhashIndexBuildAndWrite"), e.getMessage)
   }
 
-  test("raw write path cross-checks numHashes against a stored signature") {
-    val dir = tmpDir("mh_sidecar_probe")
-    val idx = Dedup.minhashIndex(corpus, "id", "text", numHashes = 32)
-    val e = intercept[IllegalArgumentException] {
-      Dedup.minhashIndexWrite(idx, dir, numHashes = 64): @annotation.nowarn
-    }
-    assert(e.getMessage.contains("32") && e.getMessage.contains("64"), e.getMessage)
-  }
-
   test("append with different parameters is refused before any write") {
     val dir = tmpDir("mh_sidecar_append")
     Dedup.minhashIndexBuildAndWrite(corpus, "id", "text", dir,
